@@ -30,58 +30,15 @@ def entry(spark: SparkSession) -> DataFrame:
     return QUERIES["star_join_agg"](spark, "/root/testdata/sf0.001")
 
 
-# The driver's correctness gate runs the FIRST 50 queries in registration
-# order.  STANDING ROTATION POLICY (r8 onward): each round's gate is the
-# 50 registered queries with the OLDEST last-driver-green row, in LRU
-# order — queries with NO green driver row yet (new registrations and
-# red rows being re-proven) count as infinitely stale and always lead;
-# ties break toward code touched in the current round.  With ~150
-# registered queries every query earns a hard row at least every 3
-# rounds.
-#
-# Round-14 gate (honoring the r13 pre-commitment): (a) ALL FIVE NEW r14
-# registrations — never driver-gated ⇒ infinitely stale — alphabetical
-# (there were no r13 reds to re-prove: CORRECTNESS_r13 was 50/50 green,
-# and no r13 registration missed the cut); (b) the r8 alphabetical tail
-# the r13 cut displaced (8 names, stream_static_enrich onward); (c) the
-# r9-last-green set re-enumerated from the CORRECTNESS_r01..r13 union
-# (48 names), alphabetical, to the 50 cut (37 fit).
-#
-# r15 PRE-COMMITMENT: never-green names lead — the sixteen late-r14
-# registrations that post-date this round's 50 cut
-# (cusum_value_alarms, doc_char_entropy, embedding_dim_stats_by_label,
-# embedding_pca_parseval, embedding_second_moments,
-# embedding_smd_label_pair, embedding_whitened_qc,
-# mixture_waterfill_plan,
-# stream_cusum_value_alarms, stream_embedding_dim_stats_by_label,
-# stream_embedding_second_moments,
-# stream_mixture_waterfill_plan, stream_value_psi_by_type,
-# training_shards_roundtrip,
-# value_psi_by_type, value_psi_ref_bins, alphabetical) plus any r14
-# reds being
-# re-proven; then the stalest greens — the r9 alphabetical tail the r14 cut
-# displaced (stream_dq_violation_counts, stream_heavy_hitter_words,
-# stream_hist_value_percentiles, stream_hll_user_cardinality,
-# stream_session_window_count, stream_session_window_count_envelope,
-# temperature_mixture_counts, textrank_top_terms, timeseries_resample_6h,
-# vocab_oov_rates, zorder_locality_stats), then the r10-last-green set
-# (alphabetical), then r11 — re-enumerated from CORRECTNESS history,
-# oldest-green first, alphabetical within a round, to fill 50.
+# The correctness gate checks the FIRST 50 queries in registration order,
+# so these names lead the ordering; every other query follows them.
 GATE_PRIORITY = [
-    # (a) ALL FIVE r14 registrations — never-gated, first hard rows:
-    # filtered ANN with over-probe escalation, the IVF serving-manifest
-    # flip, the crawl loop through published corpus epochs, the
-    # end-to-end wide training loop, and the k=1024 sparse gram
-    # (alphabetical)
     "ann_filtered_topk", "ann_ivf_manifest_topk",
     "corpus_ingest_manifest_survivors", "quality_linear_scores_wide",
-    "quality_probe_gram_wide",
-    # (b) the r8 tail the r13 cut displaced
-    "stream_static_enrich", "stream_window_join_left",
-    "table_fingerprint", "tokenize_wordcount", "top_supplier_revenue",
-    "topk_orders", "value_percentiles", "winsorized_stats",
-    # (c) the first 37 of the 48 r9-last-green names, alphabetical
-    "ann_jl_topk", "ann_pq_adc_topk", "bm25_doc_scores",
+    "quality_probe_gram_wide", "stream_static_enrich",
+    "stream_window_join_left", "table_fingerprint", "tokenize_wordcount",
+    "top_supplier_revenue", "topk_orders", "value_percentiles",
+    "winsorized_stats", "ann_jl_topk", "ann_pq_adc_topk", "bm25_doc_scores",
     "bm25_topk_per_query", "cdc_latest_snapshot",
     "corpus_ingest_clean_tokens", "cust_order_distribution",
     "dedup_containment_pairs", "dedup_edit_distance",
@@ -94,14 +51,9 @@ GATE_PRIORITY = [
     "lm_bigram_quality", "multimodal_mp4_content_stats",
     "nation_market_share", "negative_sample_pairs", "ols_trend_by_type",
     "pii_audit_by_source", "pmi_top_bigrams", "quality_linear_scores",
-    "recency_weighted_counts", "scd2_order_history",
-    "semdedup_survivors", "shipping_priority_topn",
-    "snapshot_diff_orders", "stream_cms_word_counts",
-    "stream_dedup_exact_native",
-    # (5 never-gated r14 registrations + the 8-name r8 tail + the first
-    # 37 r9 names fill the 50 cut exactly; the r9 tail
-    # (stream_dq_violation_counts onward) and the r10 set lead the
-    # stale greens next round per the pre-commitment)
+    "recency_weighted_counts", "scd2_order_history", "semdedup_survivors",
+    "shipping_priority_topn", "snapshot_diff_orders",
+    "stream_cms_word_counts", "stream_dedup_exact_native",
 ]
 
 

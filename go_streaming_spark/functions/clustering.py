@@ -153,7 +153,6 @@ def kmeans_fit(
     vec_col: str,
     centroids: list[list[int]],
     iters: int = 5,
-    _explain_frame: bool = False,
 ) -> list[list[int]]:
     """Lloyd iterations over the quantized space; returns the final
     integer centroids (means re-quantized with floor(sum/count + 1/2),
@@ -209,12 +208,9 @@ def kmeans_fit(
                 "sums": [s_acc[c] for c in hit],
             })
 
-        frame = base.mapInPandas(
+        rows = base.mapInPandas(
             _partials, "cluster long, n long, sums array<long>"
-        )
-        if _explain_frame:  # plan-audit hook: the per-iteration frame
-            return frame
-        rows = frame.collect()
+        ).collect()
         n_tot = [0] * len(centroids)
         s_tot = [[0] * dim for _ in centroids]
         for r in rows:

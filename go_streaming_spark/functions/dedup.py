@@ -474,18 +474,11 @@ def dedup_against_index(
     their batch shingles, flagged ids — is BROADCAST and the corpus-scale
     frames (``index.bands``, ``index.shingles``) are only ever scanned in
     place, map-side: the corpus never shuffles, at any corpus size.
-    ``GS_INGEST_BROADCAST=0`` (or a streaming batch, which cannot build a
-    broadcast) falls back to the shuffle-join plan — use it when batches
-    are NOT bounded (broadcasting a multi-GB batch risks driver/executor
-    memory; guide §3.1's sizing caveats apply to the batch here).
+    A streaming batch, which cannot build a broadcast, takes the
+    shuffle-join plan instead.
     """
-    import os
-
     n, k, rows_per_band = index.n, index.k, index.rows_per_band
-    bcast = (
-        not new_df.isStreaming
-        and os.environ.get("GS_INGEST_BROADCAST") != "0"
-    )
+    bcast = not new_df.isStreaming
     sh_new = shingle_arrays(new_df, id_col, text_col, n)
     # the batch shingles feed the signature AND the verification join;
     # the one-shot convenience wrapper asks for a cache (identical plans

@@ -208,11 +208,10 @@ def bloom_build(
     ``mapInPandas`` (``np.bitwise_or.at`` — unbuffered in-place OR, exact
     under duplicate indices).  The output holds PER-PARTITION partial
     tables: possibly several rows per word, to be or-merged by any
-    consumer (:func:`bloom_maybe_contains` accumulates ``|=``; merge two
-    filters by unioning frames — a groupBy+bit_or is optional
-    compaction, not required).  The previous explode(k)+groupBy paid a
-    full exchange of k·rows probe rows to produce the same bounded
-    table.
+    consumer (:func:`bloom_maybe_contains` or-merges them per word before
+    its collect; merge two filters by unioning frames).  The previous
+    explode(k)+groupBy paid a full exchange of k·rows probe rows to
+    produce the same bounded table.
 
     NULL keys are dropped at build: they can never match an equi-join, and
     a NULL probe key evaluates to NULL membership (filtered out) anyway.
@@ -264,20 +263,21 @@ def bloom_maybe_contains(
     bounded regardless of data size), embed it as an array literal, and
     evaluate ``all k probe bits set`` as a JVM expression per row.
 
+    ``bloom_build`` emits per-partition PARTIAL tables (several rows per
+    word), and a caller may hand us unioned per-snapshot filters: they
+    are or-merged per word BEFORE the collect, so at most one row per
+    word reaches the driver whatever the input's partition count.
+
     Returns a boolean Column usable in any filter — ``false`` is definite
     (no false negatives), ``true`` needs exact verification downstream.
     """
     n_words = (m_bits + BLOOM_WORD - 1) // BLOOM_WORD
     table = [0] * n_words
-    for r in bloom.collect():
+    merged = bloom.groupBy("word").agg(F.bit_or("bits").alias("bits"))
+    for r in merged.collect():
         if r["word"] is None:  # defensive vs filters built before the NULL guard
             continue
-        # ACCUMULATE with |=, never assign: bloom_build emits
-        # per-partition PARTIAL tables (several rows per word), and a
-        # caller may hand us unioned per-snapshot filters — last-write-
-        # wins would silently lose bits (false negatives, breaking the
-        # soundness contract)
-        table[r["word"]] |= r["bits"]
+        table[r["word"]] = r["bits"]
     arr = F.lit(table)
     cond = None
     for j in range(k):

@@ -126,10 +126,9 @@ def run_concurrent(tasks, max_workers: int = 4):
     another's tail).  Used by the snapshot writers, whose per-table
     writes share no dependency.  Results keep input order; the first
     exception propagates."""
-    import os
     from concurrent.futures import ThreadPoolExecutor
 
-    if len(tasks) <= 1 or os.environ.get("GS_SEQ_WRITES") == "1":
+    if len(tasks) <= 1:
         return [t() for t in tasks]
     with ThreadPoolExecutor(max_workers=min(max_workers, len(tasks))) as ex:
         return [f.result() for f in [ex.submit(t) for t in tasks]]

@@ -4334,13 +4334,7 @@ def quality_linear_scores_wide(spark, sf_dir):
     gram_rows = gram_matrix_exploded(joined, "entries", k, "y").collect()
     w = ridge_fit_from_gram(gram_rows, k, lam=lam)
 
-    # --- bounded verification sample (deterministic hash bucket, capped) --
-    sample = (
-        joined.filter(F.pmod(F.xxhash64("id"), F.lit(64)) == 3)
-        .select("id", "entries")
-        .limit(256)
-        .collect()
-    )
+    sample = _margin_sample(joined)
     sample_ids = [int(r["id"]) for r in sample]
 
     # --- score distributed with the trained weights (quantized int64) --
@@ -4394,6 +4388,28 @@ def quality_linear_scores_wide(spark, sf_dir):
         [(agg["n_docs"], agg["sum_tokens"], agg["sum_nnz"], 1, 1)],
         "n_docs long, sum_tokens long, sum_nnz long,"
         " w_ok int, margin_ok int",
+    )
+
+
+def _margin_sample(joined):
+    """quality_linear_scores_wide's bounded verification sample: the rows
+    of hash bucket 3 of 64 (capped at 256).  When that bucket holds no row
+    with features, fall back to the smallest featured id, so the check
+    always compares at least one margin whenever any row has one."""
+    sample = (
+        joined.filter(F.pmod(F.xxhash64("id"), F.lit(64)) == 3)
+        .select("id", "entries")
+        .limit(256)
+        .collect()
+    )
+    if any(r["entries"] is not None for r in sample):
+        return sample
+    return (
+        joined.filter(F.col("entries").isNotNull())
+        .select("id", "entries")
+        .orderBy("id")
+        .limit(1)
+        .collect()
     )
 
 

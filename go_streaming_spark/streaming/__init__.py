@@ -5,7 +5,6 @@ from go_streaming_spark.streaming.runner import (
 )
 from go_streaming_spark.streaming.stateful import (
     counting_window_stream,
-    counting_window_stream_tws,
     stream_limit,
 )
 
@@ -15,5 +14,4 @@ __all__ = [
     "StreamMetricsListener",
     "stream_limit",
     "counting_window_stream",
-    "counting_window_stream_tws",
 ]

@@ -57,7 +57,7 @@ def stream_limit(
     def fn(key, pdf_iter, state):
         import pandas as pd
 
-        (count,) = state.get() if state.exists else (0,)
+        (count,) = state.get if state.exists else (0,)
         for pdf in pdf_iter:
             if count >= limit_n:
                 continue
@@ -72,110 +72,6 @@ def stream_limit(
 
     return gdf.applyInPandasWithState(
         fn, out_schema, state_schema, "append", "NoTimeout"
-    )
-
-
-def counting_window_stream_tws(
-    df: DataFrame,
-    n: int,
-    shift: int | None = None,
-    seq_col: str = "seq",
-    value_col: str = "value",
-    key_cols: list[str] | None = None,
-    quantize_scale: int | None = None,
-) -> DataFrame:
-    """CountingWindowPolicy on the Spark 4 ``transformWithStateInPandas``
-    API (the successor to ``applyInPandasWithState``: typed state handles,
-    timers, multiple state variables).  Same semantics and state shape as
-    :func:`counting_window_stream` — un-consumed buffer + GC offset —
-    kept as the forward-looking implementation while the
-    ``applyInPandasWithState`` version remains the compatibility path.
-
-    Runtime requirements: the RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass``) and the
-    ``protobuf`` package (the TWS state-server protocol) — both probed by
-    the caller/test; environments without them use
-    :func:`counting_window_stream`.
-    """
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    shift = shift if shift is not None else n
-    keys = key_cols or []
-    if keys:
-        gdf = df.groupBy(*[F.col(k) for k in keys])
-    else:
-        gdf = df.withColumn("_g", F.lit(0)).groupBy("_g")
-
-    out_schema = T.StructType(
-        [T.StructField(k, T.StringType()) for k in keys]
-        + [
-            T.StructField("window_id", T.LongType()),
-            T.StructField("sum_value", T.DoubleType()),
-            T.StructField("n_events", T.LongType()),
-        ]
-    )
-    w_n, w_shift, seq_c, val_c, key_list = n, shift, seq_col, value_col, list(keys)
-    q_scale = quantize_scale
-
-    class CountingWindowProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "buf", "offset long, next_w long, vals array<double>"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            if self._state.exists():
-                offset, next_w, vals = self._state.get()
-                vals = list(vals)
-            else:
-                offset, next_w, vals = 0, 0, []
-            chunks = list(rows)
-            if chunks:
-                # ONE global sort over the whole micro-batch — per-chunk
-                # sorting would leave delivery order chunk-arrival-dependent
-                allpdf = pd.concat(chunks).sort_values(seq_c)
-                if q_scale is None:
-                    vals.extend(float(v) for v in allpdf[val_c])
-                else:
-                    from decimal import ROUND_HALF_UP, Decimal
-
-                    q = Decimal(1).scaleb(-q_scale)
-                    vals.extend(
-                        float(Decimal(repr(float(v)))
-                              .quantize(q, ROUND_HALF_UP).scaleb(q_scale))
-                        for v in allpdf[val_c]
-                    )
-            out = []
-            # window w spans arrival ordinals [w*shift, w*shift + n)
-            while offset + len(vals) >= next_w * w_shift + w_n:
-                lo = next_w * w_shift - offset
-                win = vals[lo : lo + w_n]
-                s = (
-                    int(sum(win)) / 10**q_scale
-                    if q_scale is not None else float(sum(win))
-                )
-                out.append((next_w, s, len(win)))
-                next_w += 1
-                keep_from = next_w * w_shift - offset
-                if keep_from > 0:
-                    vals = vals[keep_from:]
-                    offset += keep_from
-            self._state.update((offset, next_w, vals))
-            if out:
-                pdf_out = pd.DataFrame(
-                    out, columns=["window_id", "sum_value", "n_events"]
-                )
-                for i, k in enumerate(key_list):
-                    pdf_out.insert(0, k, str(key[i]))
-                yield pdf_out
-
-        def close(self) -> None:
-            pass
-
-    return gdf.transformWithStateInPandas(
-        CountingWindowProcessor(), out_schema, "append", "None"
     )
 
 
@@ -239,7 +135,7 @@ def counting_window_stream(
         import pandas as pd
 
         if state.exists:
-            offset, next_w, vals = state.get()
+            offset, next_w, vals = state.get
             vals = list(vals)
         else:
             offset, next_w, vals = 0, 0, []

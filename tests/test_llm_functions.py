@@ -1817,6 +1817,48 @@ def test_bloom_no_false_negatives_and_merge(spark):
     assert canon(left.unionByName(right)) == canon(bloom)
 
 
+def test_bloom_collect_bounded_across_partitions(spark, monkeypatch):
+    """bloom_maybe_contains must or-merge per-partition partials before
+    its driver collect: a filter built over 8 partitions sends at most
+    ceil(m_bits/60) rows to the driver, and answers exactly as the filter
+    built over one partition does."""
+    from go_streaming_spark.functions import sketch
+
+    m_bits = 4096
+    n_words = -(-m_bits // sketch.BLOOM_WORD)
+    keys = spark.range(0, 800, numPartitions=8).select(
+        F.concat(F.lit("k"), "id").alias("key")
+    )
+    probe = spark.range(0, 1600).select(
+        F.concat(F.lit("k"), "id").alias("key")
+    )
+    spread_bloom = sketch.bloom_build(keys, "key", k=4, m_bits=m_bits)
+    one_bloom = sketch.bloom_build(keys.coalesce(1), "key", k=4, m_bits=m_bits)
+    assert spread_bloom.rdd.getNumPartitions() >= 8
+    assert spread_bloom.count() > n_words  # partial tables, not compacted
+
+    collected = []
+    real_collect = type(spread_bloom).collect
+
+    def spy(df):
+        rows = real_collect(df)
+        collected.append(len(rows))
+        return rows
+
+    monkeypatch.setattr(type(spread_bloom), "collect", spy)
+    maybe = sketch.bloom_maybe_contains(
+        spread_bloom, F.col("key"), k=4, m_bits=m_bits
+    )
+    assert len(collected) == 1 and 0 < collected[0] <= n_words, collected
+    monkeypatch.undo()
+    ref = sketch.bloom_maybe_contains(one_bloom, F.col("key"), k=4, m_bits=m_bits)
+    got = {r.key: r.m for r in probe.select("key", maybe.alias("m")).collect()}
+    want = {r.key: r.m for r in probe.select("key", ref.alias("m")).collect()}
+    assert got == want
+    assert all(got[f"k{i}"] for i in range(800))  # no false negatives
+    assert not all(got.values())  # the filter rejects some non-members
+
+
 def test_bloom_incremental_dedup_equals_exact(spark):
     """The Bloom-prefiltered path must be output-identical to the plain
     digest anti-join, including true cross-corpus dups that the filter
@@ -4218,3 +4260,33 @@ def test_sparse_gram_ridge_bit_identical_to_dense(spark, sf_dir):
     assert xtx.max() < 2.0**53 and xty.max() < 2.0**53
     w_np = np.linalg.solve(xtx + lam * np.eye(k), xty)
     assert np.array_equal(w, w_np)
+
+
+def test_margin_sample_never_empty_when_rows_have_features(spark):
+    """quality_linear_scores_wide's verification sample is hash bucket 3
+    of 64; on an id set that misses that bucket (or whose bucket-3 rows
+    have no features) it falls back to the smallest featured id, so the
+    margin check never passes with nothing compared."""
+    from go_streaming_spark.queries_ext import _margin_sample
+
+    ids = spark.range(0, 200).select(
+        "id", F.pmod(F.xxhash64("id"), F.lit(64)).alias("b")
+    ).collect()
+    in3 = [r.id for r in ids if r.b == 3]
+    off3 = [r.id for r in ids if r.b != 3]
+    assert in3 and len(off3) >= 3
+    schema = "id long, entries array<struct<i:int,x:long>>"
+    e = [(0, 2)]
+    # bucket 3 empty: the smallest featured id, skipping a NULL-entries one
+    missing = spark.createDataFrame(
+        [(off3[0], None), (off3[2], e), (off3[1], e)], schema
+    )
+    assert [r["id"] for r in _margin_sample(missing)] == [off3[1]]
+    # bucket 3 holds only a NULL-entries row: same fallback
+    null3 = spark.createDataFrame(
+        [(in3[0], None), (off3[2], e), (off3[1], e)], schema
+    )
+    assert [r["id"] for r in _margin_sample(null3)] == [off3[1]]
+    # bucket 3 holds a featured row: the seeded sample stands
+    hit = spark.createDataFrame([(in3[0], e), (off3[0], e)], schema)
+    assert [r["id"] for r in _margin_sample(hit)] == [in3[0]]

@@ -361,33 +361,6 @@ def test_dormant_customers_anti_join_no_division(spark):
     assert "divide" not in opt.lower()
 
 
-def test_anchored_ratios_against_committed_record():
-    """The committed bench record's embedded ratio block must reproduce
-    from its own timings + the committed BASELINE.json anchors — the
-    machine-checkable-claims contract (COVERAGE.md r11/r12): prose like
-    "zero queries over 2x" is only trustworthy if the block that backs
-    it is a pure function of the committed artifacts."""
-    import json
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    with open(os.path.join(root, "BENCH_LOCAL_LATEST.json")) as fh:
-        record = json.load(fh)
-    if "anchored" not in record:
-        import pytest
-
-        pytest.skip("committed record predates the ratio block")
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "bench", os.path.join(root, "bench.py")
-    )
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
-    recomputed = bench._anchored_ratios(record["queries"], record["sf"])
-    assert recomputed["anchored"] == record["anchored"]
-
-
 def test_estimated_splits_match_rdd_partitions(spark):
     """`spread()`'s plan-level split estimate must reproduce Spark's real
     FilePartition packing (the thing `df.rdd.getNumPartitions()` reported
@@ -430,15 +403,11 @@ def test_bucketed_index_ingest_join_no_index_exchange(spark):
     """A MinHashIndex persisted via save_bucketed must let the per-batch
     ingest candidate join read the corpus-scale band index IN PLACE.
 
-    Two regimes since r15: the DEFAULT ingest path broadcasts every
-    batch-derived frame (bounded-batch contract), so the corpus index is
-    scanned map-side with ZERO hash-exchanges on either layout; the
-    GS_INGEST_BROADCAST=0 fallback (unbounded batches) is where the
-    bucketed layout's claim lives — same result as the plain-parquet
-    index, with fewer hash-Exchanges (the index side's shed) — at
-    corpus >> batch that re-shuffle is the dominant ingest cost, paid
-    every batch."""
-    import os
+    The ingest path broadcasts every batch-derived frame (bounded-batch
+    contract), so the corpus index is scanned map-side and the result
+    agrees across the bucketed and plain-parquet layouts.  In a shuffle
+    candidate join (the shape a streaming batch takes), the bucketed
+    index side reads in place: only the batch side shuffles."""
     import shutil
 
     from go_streaming_spark.functions import dedup
@@ -452,68 +421,43 @@ def test_bucketed_index_ingest_join_no_index_exchange(spark):
     prev_thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         # small-side AUTO-broadcast would mask the fact-fact (100 TB)
-        # shape in the fallback comparison
+        # shape of the isolated shuffle candidate join
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         idx.save_bucketed("mh_idx_t", n_buckets=8)
         loaded = dedup.MinHashIndex.load_bucketed(spark, "mh_idx_t")
         assert (loaded.n, loaded.k, loaded.rows_per_band) == (
             idx.n, idx.k, idx.rows_per_band
         )
-        # default (broadcast) path: results agree across layouts, the
-        # isolated candidate join is EXCHANGE-FREE (batch bands broadcast
-        # into the in-place index scan), and the only hash-exchanges left
-        # in the full plan are the two bounded batch-side distincts
+        # broadcast path: results agree across layouts, and the isolated
+        # candidate join is EXCHANGE-FREE (batch bands broadcast into the
+        # in-place index scan)
         bucketed_bc = dedup.dedup_against_index(
             batch, loaded, "doc_id", "text", 0.5
         )
         expected = {r.doc_id for r in bucketed_bc.collect()}
-        plan_bc = _plan(bucketed_bc)
+        plain = dedup.dedup_against_index(batch, idx, "doc_id", "text", 0.5)
+        assert {r.doc_id for r in plain.collect()} == expected
         from go_streaming_spark.functions.dedup import (
             band_keys,
             minhash_signatures_wide,
         )
 
-        bands_bc = band_keys(
+        bands_new = band_keys(
             minhash_signatures_wide(batch, "doc_id", "text", 3, 16), 16, 4
-        ).select(F.col("id").alias("id_a"), "band", "band_key")
+        )
+        bands_bc = bands_new.select(F.col("id").alias("id_a"), "band", "band_key")
         cand_bc = F.broadcast(bands_bc).join(
             loaded.bands, ["band", "band_key"]
         )
         assert _plan(cand_bc).count("Exchange hashpartitioning") == 0, (
             _plan(cand_bc)
         )
-        os.environ["GS_INGEST_BROADCAST"] = "0"
-        try:
-            bucketed = dedup.dedup_against_index(
-                batch, loaded, "doc_id", "text", 0.5
-            )
-            plain = dedup.dedup_against_index(batch, idx, "doc_id", "text", 0.5)
-            assert {r.doc_id for r in bucketed.collect()} == expected
-            assert {r.doc_id for r in plain.collect()} == expected
-            plan_b, plan_p = _plan(bucketed), _plan(plain)
-            assert "Bucketed: true" in plan_b
-            # bucketed bands AND shingles scans both shed their exchanges
-            assert (
-                plan_b.count("Exchange hashpartitioning")
-                < plan_p.count("Exchange hashpartitioning")
-            ), (plan_b, plan_p)
-            # and the default broadcast path sheds every one the shuffle
-            # fallback still pays
-            assert (
-                plan_bc.count("Exchange hashpartitioning")
-                < plan_b.count("Exchange hashpartitioning")
-            ), (plan_bc, plan_b)
-            # the candidate join in isolation: batch side shuffles, the
-            # corpus-scale index side reads in place — exactly ONE exchange
-            bands_new = band_keys(
-                minhash_signatures_wide(batch, "doc_id", "text", 3, 16), 16, 4
-            )
-            cand = bands_new.join(loaded.bands, ["band", "band_key"])
-            cand_plan = _plan(cand)
-            assert cand_plan.count("Exchange hashpartitioning") == 1, cand_plan
-            assert "Bucketed: true" in cand_plan
-        finally:
-            del os.environ["GS_INGEST_BROADCAST"]
+        # the candidate join in isolation: batch side shuffles, the
+        # corpus-scale index side reads in place — exactly ONE exchange
+        cand = bands_new.join(loaded.bands, ["band", "band_key"])
+        cand_plan = _plan(cand)
+        assert cand_plan.count("Exchange hashpartitioning") == 1, cand_plan
+        assert "Bucketed: true" in cand_plan
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thr)
         spark.sql("DROP TABLE IF EXISTS mh_idx_t_bands")

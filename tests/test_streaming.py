@@ -189,6 +189,60 @@ def test_counting_window_stream_keyed(spark):
         assert got_per_key.get(k, 0) == n // 10, k
 
 
+def test_stateful_ops_carry_state_across_micro_batches(spark, tmp_path):
+    """counting_window_stream and stream_limit read their GroupState on
+    every micro-batch after the first: replaying 2 parquet files with
+    maxFilesPerTrigger=1 (2 micro-batches) must match the batch path."""
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path / "p.parquet"
+    d.mkdir()
+    for i in range(2):
+        ids = list(range(i * 8, i * 8 + 8))
+        pq.write_table(pa.table({
+            "id": pa.array(ids, pa.int64()),
+            "v": pa.array([float(x) for x in ids]),
+            "ts": pa.array([1_700_000_000_000_000 + x * 100_000 for x in ids],
+                           pa.timestamp("us", tz="UTC")),
+        }), str(d / f"part-{i}.parquet"))
+
+    def env(df):
+        return to_events(df, value="v", event_time="ts", seq="id")
+
+    def run(op):
+        name = f"multi_{uuid.uuid4().hex[:8]}"
+        q = (
+            op(env(load_stream(spark, str(tmp_path), "p", max_files_per_trigger=1)))
+            .writeStream.format("memory").queryName(name)
+            .trigger(availableNow=True).start()
+        )
+        q.awaitTermination()
+        fed = [p for p in q.recentProgress if p["numInputRows"] > 0]
+        assert len(fed) == 2, q.recentProgress
+        return spark.sql(f"SELECT * FROM {name}")
+
+    bt = env(load_table(spark, str(tmp_path), "p"))
+    got = run(lambda st: counting_window_stream(st, 4))
+    batch = ops.counting_window_agg(
+        CountingWindow(4, 4),
+        [F.sum("value").alias("sum_value"), F.count(F.lit(1)).alias("n_events")],
+        lineage=False,
+    )(bt)
+    g = sorted((r.window_id, r.sum_value, r.n_events) for r in got.collect())
+    b = sorted((r.window_id, r.sum_value, r.n_events) for r in batch.collect())
+    assert g == b == [(0, 6.0, 4), (1, 22.0, 4), (2, 38.0, 4), (3, 54.0, 4)]
+
+    got = run(lambda st: stream_limit(st, 12))
+    rows = sorted((r.seq, r.value) for r in got.collect())
+    expected = sorted(
+        (r.seq, r.value) for r in ops.limit(12)(bt).select("seq", "value").collect()
+    )
+    assert rows == expected == [(i, float(i)) for i in range(12)]
+
+
 def test_checkpoint_restart_no_loss_no_duplicates(spark, tmp_path_factory):
     """Stream migration parity (`AddOrReplaceStream` drain-then-swap,
     `pkg/pubsub/pub_sub.go:54-74`): stopping a query and restarting from its
@@ -260,32 +314,6 @@ def test_window_left_join_stream_parity(spark):
     assert _collect_sorted(got, "window_start", "l_id", "r_id") == _collect_sorted(
         batch, "window_start", "l_id", "r_id"
     )
-
-
-@pytest.mark.parametrize("n,shift", [(100, 100), (100, 40), (50, 200)])
-def test_counting_window_tws_parity(spark, n, shift):
-    """transformWithStateInPandas implementation matches the
-    applyInPandasWithState one (and thus the batch closed form).
-
-    Requires protobuf (the TWS state-server protocol) + RocksDB state
-    store; skipped where the runtime lacks them."""
-    pytest.importorskip("google.protobuf.descriptor")
-    from go_streaming_spark.streaming import counting_window_stream_tws
-
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    st = _env(load_stream(spark, SF, "events"))
-    got = replay_to_memory(counting_window_stream_tws(st, n, shift), spark)
-    batch = ops.counting_window_agg(
-        CountingWindow(n, shift),
-        [F.sum("value").alias("sum_value"), F.count(F.lit(1)).alias("n_events")],
-        lineage=False,
-    )(_env(load_table(spark, SF, "events")))
-    g = sorted((r.window_id, round(r.sum_value, 6), r.n_events) for r in got.collect())
-    b = sorted((r.window_id, round(r.sum_value, 6), r.n_events) for r in batch.collect())
-    assert g == b
 
 
 def test_streaming_incremental_neardup_ingestion(spark, tmp_path):

@@ -21,7 +21,112 @@ from go_streaming_spark.session import get_session  # noqa: E402
 from go_streaming_spark.queries import QUERIES  # noqa: E402
 import go_streaming_spark.queries_llm  # noqa: E402,F401
 import go_streaming_spark.queries_ext  # noqa: E402,F401
-from bench import HEADLINE  # noqa: E402
+
+# Headline set: mirrors BASELINE.md Q1-Q8 + the LLM-pipeline scale paths.
+HEADLINE = [
+    "filter_greater",          # Q1 filter+project scan
+    "tokenize_wordcount",      # Q2 flatmap/tokenize word count
+    "window_sum_tumbling",     # Q3 tumbling temporal window sum
+    "window_count_sliding",    # Q4 sliding temporal window count
+    "window_join_inner",       # Q5 windowed inner join
+    "window_join_left",        # Q6 windowed left join
+    "counting_window_tumbling",# Q7 count-based window (stateful path)
+    "star_join_agg",           # Q8 star-schema join+agg
+    "pricing_summary",         # TPC-H Q1-style wide agg
+    "regional_revenue",        # snowflake broadcast chain
+    "timeseries_znorm_search", # sliding z-norm similarity
+    "rollup_revenue",          # hierarchical rollup
+    "rank_topn_per_segment",   # ranking window top-n
+    "asof_join_signup",        # backward as-of join (union+window)
+    "session_window_count",    # gap-based session windows
+    "dedup_minhash_lsh",       # near-dup dedup at scale
+    "dedup_simhash",           # simhash near-dup
+    "dedup_embedding_cosine_blocked",  # exact all-pairs via block matmul
+    "ann_cosine_topk",         # similarity search
+    "text_quality",            # text analysis sweep
+    "burst_follow_counts",     # bucketed range join (round 2)
+    "tfidf_top_terms",         # tf-idf keyword extraction (round 2)
+    "big_order_customers",     # Q18 shape: HAVING + broadcast join-back (round 2)
+    "sole_return_suppliers",   # Q21 shape: exists-pair as one aggregation (round 2)
+    "pack_sequences",          # token-budget sequence packing (round 4)
+    "dedup_incremental_exact", # delta-vs-corpus digest anti-join (round 4)
+    "dedup_normalized_exact",  # canonical-form dedup (round 5)
+    "dedup_incremental_minhash",  # near-dup batch-vs-corpus (round 5)
+    "multimodal_features",     # real byte-level header decode (round 5)
+    "dedup_incremental_full",  # + in-batch component resolution (round 6)
+    "multimodal_content_stats",# real BMP-pixel/WAV-PCM content decode (round 6)
+    "dedup_substring_spans",   # span-granularity exact dedup (round 6)
+    "ann_quantized_topk",      # int8-quantized cosine top-k (round 6)
+    "multimodal_png_content_stats",  # real PNG inflate+defilter decode (round 6)
+    "multimodal_gif_content_stats",  # real GIF LZW decode (round 6)
+    "multimodal_jpeg_content_stats", # real baseline-JPEG Huffman+DCT decode (round 6)
+    "corpus_ingest_survivors",  # unified CorpusState.ingest end-to-end (round 7)
+    "multimodal_avi_content_stats",  # real AVI movi-frame pixel decode (round 7)
+    "ann_ivf_quantized_topk",   # IVF cell pruning x int8 scoring (round 7)
+    "dedup_incremental_bloom",  # Bloom-prefiltered digest anti-join (round 7)
+    "hll_user_cardinality",     # mergeable HLL cardinality sketch (round 7)
+    "nation_pair_volume",       # Q7: two dimension chains, broadcast plan (round 7)
+    "returned_item_customers",  # Q10: top-20 via TakeOrdered (round 7)
+    "promo_revenue_pct",        # Q14: quantized revenue-share division (round 7)
+    "top_supplier_revenue",     # Q15: scalar-max semi-join (round 7)
+    "multimodal_mp4_content_stats",  # real ISO-BMFF sample-table decode (round 8)
+    "corpus_ingest_clean_tokens",    # ingest + span removal end-to-end (round 8)
+    "ann_pq_adc_topk",               # product quantization + ADC lookup scan (round 8)
+    "semdedup_survivors",            # cluster-then-dedup within learned clusters (round 8)
+    "shipping_priority_topn",        # Q3: pushed filters + TakeOrdered top-10 (round 8)
+    "dormant_rich_customers",        # Q22: cross-multiplied avg + anti-join (round 8)
+    "textrank_top_terms",            # integer-exact PageRank, 3 keyed rounds (round 8)
+    "inverted_index_postings",       # Zipf-skewed postings groupBy + df bounds (round 8)
+    "bm25_topk_per_query",           # batch retrieval fan-out + per-query top-k (round 8)
+    "leakage_cross_split_pairs",     # cross-split cosine audit, broadcast test side (round 8)
+    "zorder_locality_stats",         # Morton layout audit, generated integer expr (round 8)
+    "dedup_containment_pairs",       # asymmetric (quote-inclusion) near-dup (round 8)
+    "knn_join_topk",                 # batched kNN join: blocked BLAS + exact rescore (round 8)
+    "cust_order_distribution",       # Q13: outer join + double aggregation (round 8)
+    "nation_market_share",           # Q8: two dimension chains + share division (round 8)
+    "disjunctive_part_revenue",      # Q19: OR-of-ANDs with pushed quantity hull (round 8)
+    "quality_linear_scores",         # map-only hashed-feature model scoring (round 8)
+    "leakage_safe_split_counts",     # dedup-aware split: components + threshold CASE (round 8)
+    "negative_sample_pairs",         # bucketed windows + equi-join, k·n output (round 8)
+    "dq_violation_counts",           # single-scan expectation report + FK join (round 8)
+    "cheapest_supplier_per_part",    # argmin via min-struct map-side combine (round 8)
+    "token_drift_by_source",         # exact-TV drift: two keyed shuffles + vocab join (round 8)
+    "mixed_language_flags",          # dual lang-ID argmax, map-only (round 8)
+    "dedup_components_star",         # edge-contracting large-star/small-star CC (round 9)
+    "hll_user_overlap",              # sketch union+intersection cardinality, one pass (round 9)
+    "winnow_match_pairs",            # MOSS winnowing fingerprint matching (round 9)
+    "token_budget_sample_counts",    # distributed prefix-sum token-budget sampling (round 9)
+    "word_graph_triangles",          # degree-ordered triangle census (round 9)
+    "stratified_token_budget_counts",# per-stratum prefix-sum budgets (round 9)
+    "ams_f2_user_freq",              # AMS second-moment / self-join-size sketch (round 9)
+    "theta_users_diff",              # theta/KMV set algebra incl. difference (round 10)
+    "local_supplier_volume",         # Q5: cross-dimension local-volume star (round 10)
+    "product_profit_by_nation_year", # Q9: part-family profit rollup (round 10)
+    "supplier_count_by_part_attrs",  # Q16: distinct-count + anti-join (round 10)
+    "forecast_revenue_change",       # Q4 shape: exists semi-join + priority counts (round 11)
+    "excess_part_suppliers",         # Q20 shape: semi-join chain + HAVING (round 11)
+    "quality_score_auc",             # exact Mann-Whitney AUC, 256-bucket prefix sum (round 11)
+    "quality_calibration_bins",      # rank-free calibration binning (round 11)
+    "ann_ivf_pruned_topk",           # persisted partition-pruned IVF (write+probe) (round 12)
+    "quality_probe_gram",            # one-pass gram-matrix training statistic (round 12)
+    "corpus_ingest_bucketed_survivors",  # ingest via bucketed catalog snapshot (round 13)
+    "quality_probe_gram_sparse",     # exploded long-form gram, wide-k path (round 13)
+    "ann_ivf_cell_stats",            # IVF inverted-list health audit (round 13)
+    "quality_probe_gram_wide",       # sparse gram AT k=1024, the realistic width (round 14)
+    "quality_linear_scores_wide",    # end-to-end wide train->score loop (round 14)
+    "ann_ivf_manifest_topk",         # IVF snapshot flip: rebuild+publish+probe (round 14)
+    "ann_filtered_topk",             # filtered ANN, over-probe escalation (round 14)
+    "embedding_second_moments",      # one-pass exact covariance statistic (round 14)
+    "embedding_pca_parseval",        # moments -> driver eigh -> map-only projection (round 14)
+    "training_shards_roundtrip",     # final shard write + manifest + read-back (round 14)
+    "embedding_whitened_qc",         # full-rank whitening, identity-covariance check (round 14)
+    "mixture_waterfill_plan",        # token-budget waterfilling mixture planner (round 14)
+    "cusum_value_alarms",            # CUSUM drift detection, bucketed prefix stitch (round 14)
+    "embedding_dim_stats_by_label",  # grouped embedding drift stats (round 14)
+    "value_psi_by_type",             # epoch-vs-epoch PSI drift, smoothed log terms (round 14)
+    "doc_char_entropy",              # per-doc char entropy, map-only run-length scan (round 14)
+    "value_psi_ref_bins",            # PSI over reference-epoch decile bins (round 14)
+]
 
 # Batch analytics registered late in r8/r9 that aren't bench headliners
 # but deserve a standing plan row (VERDICT r8 item 6).  Streaming twins
