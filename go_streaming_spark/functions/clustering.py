@@ -32,13 +32,6 @@ from go_streaming_spark.functions.similarity import quantize_embeddings
 from go_streaming_spark.functions.util import spread
 
 
-def _cent_lit(centroids: list[list[int]]) -> str:
-    rows = ",".join(
-        "array(" + ",".join(f"{v}L" for v in c) + ")" for c in centroids
-    )
-    return f"array({rows})"
-
-
 def _nearest_centroid_udf(centroids: list[list[int]]):
     """Arrow-vectorized nearest-centroid assignment over int64 quantized
     vectors — exact int64 squared-L2 per centroid (summation-order-free,

@@ -635,22 +635,10 @@ def incremental_minhash_dedup_full(
     from go_streaming_spark.functions.graph import dedup_components
 
     if new_df.isStreaming:
-        # stage 2's convergence loop runs driver actions anyway (wrap in
-        # foreachBatch); keep the self-contained shape for streaming frames
-        survivors = incremental_minhash_dedup(
-            new_df, corpus_df, id_col, text_col, n, k, rows_per_band,
-            threshold, max_bucket_size, index=index,
-        ).localCheckpoint()
-        pairs = minhash_lsh_pairs(
-            survivors, id_col, text_col, n, k, rows_per_band, threshold,
-            max_bucket_size,
+        raise ValueError(
+            "incremental_minhash_dedup_full is batch-only (stage 2 runs"
+            " driver actions): call it per micro-batch inside foreachBatch"
         )
-        comps = dedup_components(pairs)
-        drop = comps.filter(F.col("doc_id") != F.col("cluster_id")).select(
-            F.col("doc_id").alias(id_col)
-        )
-        return survivors.join(drop, id_col, "left_anti")
-
     s1, sh_new, bands_new = incremental_minhash_dedup(
         new_df, corpus_df, id_col, text_col, n, k, rows_per_band,
         threshold, max_bucket_size, index=index, _return_parts=True,
@@ -1138,22 +1126,6 @@ def minhash_signatures_wide(
         for j in range(k)
     ]
     return hashed.selectExpr("id", *mins)
-
-
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, k: int = 16
-) -> DataFrame:
-    """(id, j, minhash) — long-format view of :func:`minhash_signatures_wide`."""
-    wide = minhash_signatures_wide(df, id_col, text_col, n, k)
-    pairs = F.array(
-        *[
-            F.struct(F.lit(j).alias("j"), F.col(f"mh{j}").alias("minhash"))
-            for j in range(k)
-        ]
-    )
-    return wide.select("id", F.explode(pairs).alias("p")).select(
-        "id", "p.j", "p.minhash"
-    )
 
 
 def band_keys(

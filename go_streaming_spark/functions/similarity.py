@@ -35,10 +35,6 @@ def norm_expr(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
-def cosine_expr(a: Column, b: Column) -> Column:
-    return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
-
-
 def dot_expr_unrolled(a: Column, b: Column, dim: int) -> Column:
     """Dot product unrolled to ``dim`` explicit multiply-adds.
 

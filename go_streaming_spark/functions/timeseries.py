@@ -14,7 +14,7 @@ window function; no state beyond the frame.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -88,10 +88,6 @@ def znormalize(values: list[float]) -> list[float]:
     var = sum(x * x for x in values) / n - mu * mu
     sd = max(var, 0.0) ** 0.5 or 1e-12
     return [(x - mu) / sd for x in values]
-
-
-def _fold_sum(arr: Column) -> Column:
-    return F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x)
 
 
 def znorm_sliding_distance(

@@ -8,14 +8,14 @@ content = left map merged with right map, **right wins** on collision
 (`:144-147`, via ``maps.Copy`` order); LeftJoin passes unmatched left rows
 through with only their own columns (`:166-218`).
 
-Spark-first: assign window ids to both sides (pure arithmetic — see
-``windows.assign_temporal_windows``) and equi-join on ``(window_start, key)``.
+Spark-first: assign both sides their native ``window`` struct (see
+``windows.assign_temporal_windows``) and equi-join on ``(window, key)``.
 Catalyst picks broadcast/sort-merge/shuffle-hash; cross products on duplicate
 keys fall out of the equi-join naturally.  At scale this is the classic
 window-bucketed join: both sides shuffle *once* on (window, key) — set
 ``broadcast_right=True`` when the right side is a small dimension-like stream.
-Streaming mode uses the same column expressions with watermarks on both sides
-(see streaming/runner.py).
+On streams the same plan runs as a stream-stream join whose state is evicted
+by the window's zero-lateness watermark.
 """
 
 from __future__ import annotations
@@ -46,20 +46,14 @@ def window_join(
     Spark join types pass through for free.
     """
     keys = [key] if isinstance(key, str) else list(key)
-    streaming = left.isStreaming and right.isStreaming
-    lw = _prep_side(left, policy, time_col, keys, "l", streaming)
-    rw = _prep_side(right, policy, time_col, keys, "r", streaming)
+    lw = _prep_side(left, policy, time_col, keys, "l")
+    rw = _prep_side(right, policy, time_col, keys, "r")
     if broadcast_right:
         rw = F.broadcast(rw)
 
-    # Streaming joins must equate the native window struct (event-time
-    # metadata drives state eviction); batch equates the plain column.
-    wcond = (
-        lw["l_window"] == rw["r_window"]
-        if streaming
-        else lw["l_window_start"] == rw["r_window_start"]
-    )
-    on = [wcond] + [lw[f"l_key_{k}"] == rw[f"r_key_{k}"] for k in keys]
+    on = [lw["l_window"] == rw["r_window"]] + [
+        lw[f"l_key_{k}"] == rw[f"r_key_{k}"] for k in keys
+    ]
     how_spark = {"left": "left_outer", "inner": "inner"}.get(how, how)
     joined = lw.join(rw, on, how_spark)
 
@@ -85,23 +79,8 @@ def _prep_side(
     time_col: str,
     keys: list[str],
     prefix: str,
-    streaming: bool = False,
 ) -> DataFrame:
-    if streaming:
-        from go_streaming_spark.operators.windows import streaming_window_col
-
-        w = streaming_window_col(df, policy, time_col)
-        w = (
-            w.withColumn("window_start", F.col("window.start"))
-            .withColumn(
-                "window_end",
-                F.timestamp_micros(
-                    F.unix_micros(F.col("window.start")) + policy.length_us
-                ),
-            )
-        )
-    else:
-        w = assign_temporal_windows(df, policy, time_col)
+    w = assign_temporal_windows(df, policy, time_col)
     vt = w.schema["value"].dataType
     key_cols = []
     for k in keys:
@@ -111,8 +90,15 @@ def _prep_side(
             else F.col(f"value.{k}")
         )
         key_cols.append(kc.alias(f"{prefix}_key_{k}"))
+    # The window struct stays each side's only event-time column: a stream
+    # join with two (the watermarked time column next to the window) fails
+    # analysis once both reach the output.
     return w.select(
-        *key_cols, *[F.col(c).alias(f"{prefix}_{c}") for c in w.columns]
+        *key_cols,
+        *[
+            F.col(c).alias(f"{prefix}_{c}", metadata=None if c == "window" else {})
+            for c in w.columns
+        ],
     )
 
 
@@ -255,8 +241,9 @@ def interval_join(
     if width <= 0:
         raise ValueError(f"empty interval: lower={lower}, upper={upper}")
 
-    # floor-division bucket ids (negative times included — see
-    # windows.assign_temporal_windows for the pmod identity)
+    # floor-division bucket ids: `div` truncates toward zero and Spark's %
+    # returns negative remainders, so subtract pmod first to floor negative
+    # times too
     def bucket(c: str) -> Column:
         return F.expr(f"((({c}) - pmod({c}, {width})) div {width})")
 

@@ -10,13 +10,14 @@ Reference policies (`pkg/events/selection_policy.go`):
   window; events before the initial start are dropped; zero allowed lateness
   (`selection_policy.go:178-215,583-596`).
 
-Spark-first realization: window membership is pure int64 arithmetic on
-``unix_micros(event_time)`` / on the dense ``seq`` column — JVM codegen'd,
-shuffle only for the final groupBy on the window id, and trivially mirrored
-by the DuckDB oracle.  Overlapping windows explode each row into its
-``length/shift`` member windows (bounded fan-out) — the same strategy
-Spark's native ``F.window`` uses internally, but with plain columns that
-join/group/compare cleanly.
+Spark-first realization: temporal membership is Spark's native
+``F.window`` behind a zero-lateness watermark, on batch and streaming frames
+alike — the state store needs the window's event-time metadata for
+eviction, and a batch frame ignores the watermark, so one assignment serves
+both.  Overlapping windows explode each row into its ``length/shift`` member
+windows (bounded fan-out).  Counting membership is pure int64 arithmetic on
+the dense ``seq`` column — shuffle only for the final groupBy on the window
+id, and trivially mirrored by the DuckDB oracle.
 
 Known divergence (documented in SURVEY.md §7): the reference emits *empty*
 windows (`selection_policy_test.go:146-201`); a groupBy cannot produce groups
@@ -135,54 +136,56 @@ def policy_from_config(cfg: dict) -> "TemporalWindow | CountingWindow":
 def assign_temporal_windows(
     df: DataFrame, policy: TemporalWindow, time_col: str = "event_start"
 ) -> DataFrame:
-    """Add ``window_start`` / ``window_end`` TIMESTAMP columns; for
-    overlapping policies rows are exploded into every member window.
+    """Add the native ``window`` struct plus ``window_start`` /
+    ``window_end`` TIMESTAMP columns; overlapping policies explode each row
+    into every member window.  One path for batch and streams.
 
-    Membership: with ``off = unix_micros(t) - origin``, window ``w`` holds
-    rows where ``w*shift <= off < w*shift + length`` — half-open, boundary
-    event to the next window, matching `selection_policy.go:583-596`.
+    Membership: with ``off = t - origin``, window ``w`` holds rows where
+    ``w*shift <= off < w*shift + length`` — half-open, boundary event to the
+    next window, and no window starts before the origin
+    (`selection_policy.go:583-596`).  The zero-lateness watermark lets the
+    state store evict by window (watermark-driven state GC replaces the
+    reference's consumed-prefix GC, `pkg/events/buffer.go:461-475`); Spark
+    ignores it on batch frames.  Sampling policies (shift > length) use
+    ``F.window(shift)`` plus a membership filter, since Spark requires
+    slide <= duration; ``window_end`` is always start + length.
     """
     length, shift = policy.length_us, policy.shift_us
-    origin = (
-        F.unix_micros(F.lit(policy.origin).cast("timestamp"))
-        if policy.origin
-        else F.lit(0).cast("long")
-    )
-    df = df.withColumn("_off", F.unix_micros(F.col(time_col)) - origin)
+    t = F.col(time_col)
+    out = df.withWatermark(time_col, "0 seconds")
+    origin_us = 0
     if policy.origin:
-        df = df.filter(F.col("_off") >= 0)  # pre-start events dropped (:587-589)
-
-    # Exact int64 *floor* division — `div` truncates toward zero, which
-    # differs from floor for negative offsets (pre-epoch event times with no
-    # origin), and Spark's % returns negative remainders; pmod + the shifted
-    # numerator give true floor semantics everywhere.  Float division at
-    # microsecond magnitudes risks rounding across a boundary.
-    def _fdiv(x: str, s: int) -> str:
-        return f"((({x}) - pmod({x}, {s})) div {s})"
-
-    if not policy.overlapping:
-        # tumbling (shift == length) or sampling (shift > length): <=1 window
-        df = df.withColumn("_wid", F.expr(_fdiv("_off", shift)))
-        if shift > length:
-            df = df.filter(F.pmod(F.col("_off"), F.lit(shift)) < length)
+        origin_us = _origin_micros(policy.origin)
+        out = out.filter(F.unix_micros(t) >= origin_us)  # pre-start dropped (:587-589)
+    start_off = f"{origin_us % shift} microseconds"
+    if shift > length:
+        off = F.unix_micros(t) - F.lit(origin_us)
+        out = out.filter(F.pmod(off, F.lit(shift)) < length)
+        win = F.window(t, f"{shift} microseconds", startTime=start_off)
     else:
-        # sliding: w_min = floor((off - length)/shift) + 1; window ids may be
-        # negative for pre-epoch events, so clamp at 0 only when an origin is
-        # set (pre-origin rows were already dropped; window 0 starts there).
-        w_min = F.expr(f"{_fdiv(f'_off - {length}', shift)} + 1")
-        if policy.origin:
-            w_min = F.greatest(F.lit(0).cast("long"), w_min)
-        df = df.withColumn(
-            "_wid",
-            F.explode(F.sequence(w_min, F.expr(_fdiv("_off", shift)))),
-        )
-
-    ws_us = origin + F.col("_wid") * F.lit(shift)
-    return (
-        df.withColumn("window_start", F.timestamp_micros(ws_us))
-        .withColumn("window_end", F.timestamp_micros(ws_us + F.lit(length)))
-        .drop("_wid", "_off")
+        win = F.window(t, f"{length} microseconds", f"{shift} microseconds", start_off)
+    out = out.withColumn("window", win)
+    ws = F.col("window.start")
+    if policy.origin and policy.overlapping:
+        # window 0 starts at the origin: drop the earlier windows a
+        # post-origin row also falls in
+        out = out.filter(F.unix_micros(ws) >= origin_us)
+    return out.withColumn("window_start", ws).withColumn(
+        "window_end", F.timestamp_micros(F.unix_micros(ws) + length)
     )
+
+
+def _origin_micros(origin: str) -> int:
+    """Exact epoch microseconds of an ISO timestamp (UTC unless zoned);
+    integer timedelta arithmetic — a float ``timestamp() * 1e6`` can land
+    one microsecond short."""
+    import datetime as dt
+
+    d = dt.datetime.fromisoformat(origin)
+    if d.tzinfo is None:
+        d = d.replace(tzinfo=dt.timezone.utc)
+    epoch = dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)
+    return (d - epoch) // dt.timedelta(microseconds=1)
 
 
 def assign_counting_windows(
@@ -202,59 +205,13 @@ def assign_counting_windows(
         df = df.filter(F.col("_seq") % F.lit(shift) < n)
         return df.withColumn("window_id", F.expr(f"_seq div {shift}")).drop("_seq")
     # overlapping: w_min = floor((seq - n)/shift) + 1 = floor((seq - n +
-    # shift)/shift); the shifted-numerator form keeps `div` == floor on the
-    # clamped domain (see temporal note above).
+    # shift)/shift); `div` truncates toward zero, which differs from floor
+    # only on negative numerators, and those clamp to window 0.
     w_min = F.greatest(
         F.lit(0).cast("long"), F.expr(f"(_seq - {n} + {shift}) div {shift}")
     )
     w_max = F.expr(f"_seq div {shift}")
     return df.withColumn("window_id", F.explode(F.sequence(w_min, w_max))).drop("_seq")
-
-
-def streaming_window_col(
-    df: DataFrame, policy: TemporalWindow, time_col: str = "event_start"
-) -> DataFrame:
-    """Streaming-mode window assignment: zero-lateness watermark + native
-    ``F.window`` (the state store needs Spark's own event-time window
-    metadata for eviction — watermark-driven state GC replaces the
-    reference's consumed-prefix GC, `pkg/events/buffer.go:461-475`).
-
-    Adds a ``window`` struct column.  Sampling policies (shift > length)
-    use window(shift) + a membership filter, since Spark requires
-    slide ≤ duration; the window_end is then start+shift, fixed up by
-    :func:`windowed_agg` after aggregation.
-
-    Batch mode uses :func:`assign_temporal_windows` (plain-column
-    arithmetic) — same assignments, verified equivalent in tests.
-    """
-    length, shift = policy.length_us, policy.shift_us
-    out = df.withWatermark(time_col, "0 seconds")
-    origin_us = 0
-    if policy.origin:
-        origin_us = _origin_micros(policy.origin)
-        out = out.filter(F.unix_micros(F.col(time_col)) >= origin_us)
-    start_off = f"{origin_us % shift} microseconds"
-    if shift > length:
-        off = F.unix_micros(F.col(time_col)) - F.lit(origin_us)
-        out = out.filter(F.pmod(off, F.lit(shift)) < length)
-        win = F.window(F.col(time_col), f"{shift} microseconds", startTime=start_off)
-    else:
-        win = F.window(
-            F.col(time_col),
-            f"{length} microseconds",
-            f"{shift} microseconds",
-            start_off,
-        )
-    return out.withColumn("window", win)
-
-
-def _origin_micros(origin: str) -> int:
-    import datetime as dt
-
-    d = dt.datetime.fromisoformat(origin)
-    if d.tzinfo is None:
-        d = d.replace(tzinfo=dt.timezone.utc)
-    return int(d.timestamp() * 1_000_000)
 
 
 _EMPTY_WINDOW_WARNED = False
@@ -317,29 +274,19 @@ def windowed_agg(
         )
 
     def fn(df: DataFrame) -> DataFrame:
-        extra = lineage_agg(merge_meta) if lineage else []
-        if df.isStreaming:
-            if emit_empty:
-                raise ValueError(
-                    "emit_empty=True needs a bounded grid — replay the"
-                    " stream to a sink table and apply"
-                    " with_empty_windows there"
-                )
-            if emit_empty is None:
-                # same silent reference divergence as the batch path:
-                # streaming groupBy emits sparse windows too
-                _warn_empty_window_divergence()
-            out = streaming_window_col(df, policy, time_col)
-            agged = out.groupBy("window", *keys).agg(*aggs, *extra)
-            ws = F.col("window.start")
-            we = F.timestamp_micros(F.unix_micros(ws) + policy.length_us)
-            other = [c for c in agged.columns if c != "window"]
-            return agged.select(
-                ws.alias("window_start"), we.alias("window_end"), *other
+        if emit_empty and df.isStreaming:
+            raise ValueError(
+                "emit_empty=True needs a bounded grid — replay the"
+                " stream to a sink table and apply"
+                " with_empty_windows there"
             )
+        extra = lineage_agg(merge_meta) if lineage else []
         out = assign_temporal_windows(df, policy, time_col)
-        group = ["window_start", "window_end", *keys]
-        agged = out.groupBy(*group).agg(*aggs, *extra)
+        agged = out.groupBy("window", *keys).agg(*aggs, *extra)
+        ws = F.col("window.start")
+        we = F.timestamp_micros(F.unix_micros(ws) + policy.length_us)
+        other = [c for c in agged.columns if c != "window"]
+        agged = agged.select(ws.alias("window_start"), we.alias("window_end"), *other)
         if emit_empty:
             return with_empty_windows(agged, policy, empty_fill)
         if emit_empty is None:

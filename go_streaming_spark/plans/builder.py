@@ -37,17 +37,14 @@ class OutputUndefinedError(ValueError):
 class QueryBuilder:
     engine: "object"
     _frontier: list[DataFrame] = field(default_factory=list)
-    _streaming: bool = False
 
     # From / AddInput (`query_builder.go:64-84`)
     def from_source(self, topic: str, streaming: bool = False) -> "QueryBuilder":
         self._frontier.append(self.engine.stream(topic, streaming=streaming))
-        self._streaming = self._streaming or streaming
         return self
 
     def from_df(self, df: DataFrame) -> "QueryBuilder":
         self._frontier.append(df)
-        self._streaming = self._streaming or df.isStreaming
         return self
 
     # ConnectTo (`query_builder.go:158-194`): applies to the whole frontier.
@@ -63,7 +60,6 @@ class QueryBuilder:
     # Merge (`query_builder.go:87-122`): union another builder's frontier.
     def merge(self, other: "QueryBuilder") -> "QueryBuilder":
         self._frontier.extend(other._frontier)
-        self._streaming = self._streaming or other._streaming
         return self
 
     def build(self, name: str | None = None) -> "ContinuousQuery":
@@ -73,7 +69,7 @@ class QueryBuilder:
             raise AmbiguousOutputError(
                 f"{len(self._frontier)} frontier streams; combine() or merge them"
             )
-        q = ContinuousQuery(self._frontier[0], name=name, streaming=self._streaming)
+        q = ContinuousQuery(self._frontier[0], name=name)
         if name:
             self.engine.register_query(name, q)
         return q
@@ -85,7 +81,6 @@ class ContinuousQuery:
 
     df: DataFrame
     name: str | None = None
-    streaming: bool = False
     _sq: "object" = None  # pyspark StreamingQuery when running
     _flush: Callable[[], None] | None = None  # global-order reorder drain
     # observability: high-water mark of the global-order merge buffer
@@ -94,6 +89,10 @@ class ContinuousQuery:
     # max_out_of_order: bounded ∝ disorder + one batch, NOT stream
     # length, whenever the incremental watermark drains
     buffer_peak_rows: int = 0
+
+    @property
+    def streaming(self) -> bool:
+        return self.df.isStreaming
 
     def collect(self):
         return self.df.collect()

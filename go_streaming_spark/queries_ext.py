@@ -472,7 +472,7 @@ def knn_label_vote(spark, sf_dir):
 @query("stream_window_sum_tumbling", ORACLES["window_sum_tumbling"])
 def stream_window_sum_tumbling(spark, sf_dir):
     # native streaming window aggregation (watermark + window struct,
-    # operators/windows.py:streaming_window_col), replayed to completion;
+    # operators/windows.py:assign_temporal_windows), replayed to completion;
     # complete mode emits every window including the trailing open one,
     # matching the batch grouping
     from go_streaming_spark import operators as ops

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 # Configs required for correctness. All are dynamically settable.
@@ -40,10 +41,12 @@ def configure_session(spark: SparkSession) -> SparkSession:
     for key, value in {**_REQUIRED_CONFS, **_TUNING_CONFS}.items():
         try:
             spark.conf.set(key, value)
-        except Exception:
+        except AnalysisException as exc:
             # A conf may be static in some deployments; correctness-required
-            # ones above are all dynamic in Spark 3.4+/4.x.
-            pass
+            # ones above are all dynamic in Spark 3.4+/4.x.  Anything else
+            # (a bad value, a dead session) is a real error.
+            if exc.getCondition() != "CANNOT_MODIFY_STATIC_CONFIG":
+                raise
     return spark
 
 

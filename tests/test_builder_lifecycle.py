@@ -245,6 +245,25 @@ def test_engine_isolation(spark):
     assert e1.topics() == ["t"] and e2.topics() == []
 
 
+def test_configure_session_skips_static_confs(spark, monkeypatch):
+    # a deployment may pin a conf as static: configure_session goes on
+    from go_streaming_spark import session
+
+    monkeypatch.setitem(session._TUNING_CONFS, "spark.sql.warehouse.dir", "/nonexistent")
+    assert session.configure_session(spark) is spark
+
+
+def test_configure_session_raises_other_conf_errors(spark, monkeypatch):
+    # an invalid value is a real error, not a static conf to skip
+    from pyspark.errors import IllegalArgumentException
+
+    from go_streaming_spark import session
+
+    monkeypatch.setitem(session._TUNING_CONFS, "spark.sql.adaptive.enabled", "notabool")
+    with pytest.raises(IllegalArgumentException, match="spark.sql.adaptive.enabled"):
+        session.configure_session(spark)
+
+
 def test_engine_sql_entry_point(spark):
     eng = Engine(spark, sf_dir="/root/testdata/sf0.001")
     n = eng.sql("SELECT count(*) AS n FROM events WHERE value > 100").head()["n"]

@@ -3,6 +3,7 @@ multimodal mapInPandas plumbing, IVF probe."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from go_streaming_spark.functions import dedup, multimodal, similarity
@@ -742,6 +743,15 @@ def test_incremental_minhash_full_resolves_in_batch(spark):
     )
     # 1 dropped vs corpus; {3,4} collapse to min id 3; 5 novel
     assert {r.doc_id for r in out.collect()} == {3, 5}
+
+
+def test_incremental_minhash_full_rejects_streaming_input(spark, tmp_path):
+    """Stage 2 runs driver actions, so a streaming frame is refused with a
+    pointer to foreachBatch instead of failing inside Spark."""
+    corpus = spark.createDataFrame([(100, "a b c d e")], "doc_id long, text string")
+    stream = spark.readStream.schema("doc_id long, text string").parquet(str(tmp_path))
+    with pytest.raises(ValueError, match="foreachBatch"):
+        dedup.incremental_minhash_dedup_full(stream, corpus, "doc_id", "text")
 
 
 def test_successive_batches_against_updated_index(spark):

@@ -189,43 +189,54 @@ def test_counting_window_stream_keyed(spark):
         assert got_per_key.get(k, 0) == n // 10, k
 
 
-def test_stateful_ops_carry_state_across_micro_batches(spark, tmp_path):
-    """counting_window_stream and stream_limit read their GroupState on
-    every micro-batch after the first: replaying 2 parquet files with
-    maxFilesPerTrigger=1 (2 micro-batches) must match the batch path."""
+def _two_file_stream(spark, root, ts_us):
+    """Write events ``event_id -> ts_us[event_id]`` (``value`` = the id,
+    ``k`` = its parity) as two parquet files (first and second half) and
+    return ``(stream, batch, run)``: the stream reads one
+    file per micro-batch, so operator state crosses a batch boundary, and
+    ``run(df)`` sinks a streaming frame through an availableNow memory
+    query, asserting both files were fed separately."""
     import uuid
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    d = tmp_path / "p.parquet"
+    d = root / "p.parquet"
     d.mkdir()
-    for i in range(2):
-        ids = list(range(i * 8, i * 8 + 8))
+    half = len(ts_us) // 2
+    for i, ids in enumerate([range(half), range(half, len(ts_us))]):
         pq.write_table(pa.table({
-            "id": pa.array(ids, pa.int64()),
-            "v": pa.array([float(x) for x in ids]),
-            "ts": pa.array([1_700_000_000_000_000 + x * 100_000 for x in ids],
-                           pa.timestamp("us", tz="UTC")),
+            "event_id": pa.array(list(ids), pa.int64()),
+            "k": pa.array([x % 2 for x in ids], pa.int64()),
+            "value": pa.array([float(x) for x in ids]),
+            "ts": pa.array([ts_us[x] for x in ids], pa.timestamp("us", tz="UTC")),
         }), str(d / f"part-{i}.parquet"))
 
-    def env(df):
-        return to_events(df, value="v", event_time="ts", seq="id")
-
-    def run(op):
+    def run(df):
         name = f"multi_{uuid.uuid4().hex[:8]}"
-        q = (
-            op(env(load_stream(spark, str(tmp_path), "p", max_files_per_trigger=1)))
-            .writeStream.format("memory").queryName(name)
-            .trigger(availableNow=True).start()
-        )
+        q = (df.writeStream.format("memory").queryName(name)
+             .trigger(availableNow=True).start())
         q.awaitTermination()
         fed = [p for p in q.recentProgress if p["numInputRows"] > 0]
         assert len(fed) == 2, q.recentProgress
         return spark.sql(f"SELECT * FROM {name}")
 
-    bt = env(load_table(spark, str(tmp_path), "p"))
-    got = run(lambda st: counting_window_stream(st, 4))
+    stream = load_stream(spark, str(root), "p", max_files_per_trigger=1)
+    return stream, load_table(spark, str(root), "p"), run
+
+
+_T0 = 1_700_000_000_000_000  # 2023-11-14T22:13:20Z in epoch microseconds
+
+
+def test_stateful_ops_carry_state_across_micro_batches(spark, tmp_path):
+    """counting_window_stream and stream_limit read their GroupState on
+    every micro-batch after the first: replaying 2 parquet files with
+    maxFilesPerTrigger=1 (2 micro-batches) must match the batch path."""
+    st, bt, run = _two_file_stream(
+        spark, tmp_path, [_T0 + x * 100_000 for x in range(16)]
+    )
+    bt = _env(bt)
+    got = run(counting_window_stream(_env(st), 4))
     batch = ops.counting_window_agg(
         CountingWindow(4, 4),
         [F.sum("value").alias("sum_value"), F.count(F.lit(1)).alias("n_events")],
@@ -235,12 +246,60 @@ def test_stateful_ops_carry_state_across_micro_batches(spark, tmp_path):
     b = sorted((r.window_id, r.sum_value, r.n_events) for r in batch.collect())
     assert g == b == [(0, 6.0, 4), (1, 22.0, 4), (2, 38.0, 4), (3, 54.0, 4)]
 
-    got = run(lambda st: stream_limit(st, 12))
+    got = run(stream_limit(_env(st), 12))
     rows = sorted((r.seq, r.value) for r in got.collect())
     expected = sorted(
         (r.seq, r.value) for r in ops.limit(12)(bt).select("seq", "value").collect()
     )
     assert rows == expected == [(i, float(i)) for i in range(12)]
+
+
+def test_sliding_window_with_origin_stream_equals_batch(spark, tmp_path):
+    """A sliding window with an origin emits no window that starts before
+    the origin, on a stream as in batch: 16 events 200 ms apart, origin at
+    +0.3 s, 1 s windows every 0.5 s; the event at +0.4 s also lies in the
+    pre-origin window starting at -0.2 s."""
+    st, bt, run = _two_file_stream(
+        spark, tmp_path, [_T0 + x * 200_000 for x in range(16)]
+    )
+    agg = ops.batch_count(
+        TemporalWindow("1 second", "500 milliseconds",
+                       origin="2023-11-14T22:13:20.300000+00:00"),
+        lineage=False,
+    )
+    got = run(agg(_env(st)))
+    batch = _fired(agg(_env(bt)), spark, bt.agg(F.max("ts")).head()[0])
+    cols = ("window_start", "window_end", "value")
+    assert _collect_sorted(got, *cols) == _collect_sorted(batch, *cols)
+    starts = sorted(r.ws - _T0 for r in got.select(
+        F.unix_micros("window_start").alias("ws")).collect())
+    assert starts == [300_000, 800_000, 1_300_000, 1_800_000]
+
+
+def test_window_join_full_output_sinks_across_micro_batches(spark, tmp_path):
+    """The whole 7-column window_join envelope sinks from a stream and
+    equals the batch join over the closed windows.  Window [0 s, 1 s) pairs
+    events from both files; the last event sits alone in the open window."""
+    st, bt, run = _two_file_stream(
+        spark, tmp_path, [_T0 + x * 100_000 for x in range(15)] + [_T0 + 2_000_000]
+    )
+    policy = TemporalWindow("1 second")
+
+    def side(df, parity):
+        return to_events(
+            df.filter(F.col("k") == parity),
+            value=F.struct(F.lit(0).alias("k"), F.col("event_id")),
+            event_time="ts", seq="event_id",
+        )
+
+    got = run(window_join(side(st, 0), side(st, 1), "k", policy))
+    assert got.columns == [
+        "seq", "event_start", "event_end", "meta", "window_start", "window_end", "value",
+    ]
+    batch = window_join(side(bt, 0), side(bt, 1), "k", policy)
+    closed = batch.filter(F.col("window_end") <= F.lit(bt.agg(F.max("ts")).head()[0]))
+    assert _collect_sorted(got, *got.columns) == _collect_sorted(closed, *got.columns)
+    assert got.count() == 5 * 5 + 3 * 2
 
 
 def test_checkpoint_restart_no_loss_no_duplicates(spark, tmp_path_factory):

@@ -1,17 +1,20 @@
 """Property-based tests for window-membership arithmetic.
 
 The reference's selection-policy semantics (`pkg/events/selection_policy.go`)
-are specified procedurally (buffer + fire conditions); our batch
-implementation is closed-form int64 arithmetic.  These tests check the
-arithmetic against a direct Python model over randomized policies and event
-times — tumbling, sliding (overlap), sampling (gaps), counting windows with
+are specified procedurally (buffer + fire conditions); temporal windows are
+assigned by Spark's native ``F.window`` (one path for batch and streams) and
+counting windows by closed-form int64 arithmetic.  These tests check both
+against a direct Python model over randomized policies and event times —
+tumbling, sliding (overlap), sampling (gaps), counting windows with
 shift </=/> n, and origin alignment.
 """
 
 from __future__ import annotations
 
+from fractions import Fraction
+
 import pytest
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from go_streaming_spark.operators.windows import (
@@ -53,11 +56,28 @@ def model_counting_windows(seq: int, n: int, shift: int) -> set[int]:
         min_size=1,
         max_size=24,
     ),
+    origin=st.one_of(st.none(), st.integers(min_value=-3600 * US, max_value=3600 * US)),
 )
-def test_temporal_membership_matches_model(spark, lengths, shift_frac, offsets):
+# sliding with an origin: t=9 s also falls in the pre-origin window [2, 12)
+@example(
+    lengths=10, shift_frac=Fraction(1, 2),
+    offsets=[3 * US, 7 * US, 9 * US, 13 * US, 16 * US], origin=7 * US,
+)
+def test_temporal_membership_matches_model(spark, lengths, shift_frac, offsets, origin):
+    """With an origin, events before it are dropped and window 0 starts at
+    it: no window may start before the origin (sliding policies included)."""
+    import datetime as dt
+
     length = lengths * US
     shift = max(1, int(length * shift_frac))
-    policy = TemporalWindow(f"{length} microseconds", f"{shift} microseconds")
+    origin_iso = None
+    if origin is not None:
+        epoch = dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)
+        origin_iso = (epoch + dt.timedelta(microseconds=origin)).isoformat()
+    policy = TemporalWindow(
+        f"{length} microseconds", f"{shift} microseconds", origin_iso
+    )
+    base = origin or 0
     df = spark.createDataFrame(
         [(i, o) for i, o in enumerate(offsets)], "seq long, off long"
     ).select("seq", F.timestamp_micros(F.col("off")).alias("event_start"))
@@ -68,11 +88,15 @@ def test_temporal_membership_matches_model(spark, lengths, shift_frac, offsets):
         F.unix_micros("window_end").alias("we"),
     ).collect():
         assert r.we - r.ws == length
-        assert r.ws % shift == 0
-        got.setdefault(r.seq, set()).add(r.ws // shift)
+        assert (r.ws - base) % shift == 0
+        assert origin is None or r.ws >= origin
+        got.setdefault(r.seq, set()).add((r.ws - base) // shift)
     for i, o in enumerate(offsets):
-        assert got.get(i, set()) == model_temporal_windows(o, length, shift), (
-            f"off={o} length={length} shift={shift}"
+        want = model_temporal_windows(o - base, length, shift)
+        if origin is not None:
+            want = {w for w in want if w >= 0} if o >= origin else set()
+        assert got.get(i, set()) == want, (
+            f"off={o} length={length} shift={shift} origin={origin}"
         )
 
 
@@ -107,6 +131,13 @@ def test_temporal_origin_alignment(spark):
     got = {r.seq: r.ws // US for r in rows}
     # t=3 dropped (pre-origin); [5,15) is window 0; 15 starts the next
     assert got == {1: 5, 2: 5, 3: 15}
+
+
+def test_origin_parses_to_exact_micros():
+    # float seconds * 1e6 lands 1 us short here
+    from go_streaming_spark.operators.windows import _origin_micros
+
+    assert _origin_micros("2106-03-01T07:48:32.114427+00:00") == 4296872912114427
 
 
 @settings(max_examples=10, deadline=None)
