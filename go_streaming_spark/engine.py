@@ -117,7 +117,8 @@ class Engine:
         """SQL entry point over the engine's registered topics (the
         reference has no query language — `README.md:15-17`; Spark's is
         free).  Registers every known topic as a temp view first, so the
-        same names work in SQL and in the builder.
+        same names work in SQL and in the builder; driver tables under
+        ``sf_dir`` get views too, without joining the topic registry.
 
         Isolation semantics (Spark temp views are *session*-global, so two
         Engine instances sharing one SparkSession share the SQL view
@@ -138,11 +139,12 @@ class Engine:
             for topic in list(self._streams):
                 self._streams[topic].createOrReplaceTempView(topic)
             if self.sf_dir:
-                from go_streaming_spark.sources.catalog import TABLES
-
+                # not self.stream(name): a batch frame cached as a topic
+                # would shadow a later stream(name, streaming=True)
                 for name in TABLES:
                     if name not in self._streams:
-                        self.stream(name).createOrReplaceTempView(name)
+                        table = load_table(self.spark, self.sf_dir, name)
+                        table.createOrReplaceTempView(name)
             df = self.spark.sql(query)
             df.schema  # force analysis inside the lock — pins view bindings
             return df

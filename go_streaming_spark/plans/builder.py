@@ -24,6 +24,15 @@ from pyspark.sql import DataFrame
 from go_streaming_spark.operators.base import Operator
 
 
+def _check_order_args(ordered_by, global_order, max_out_of_order) -> None:
+    # ordering knobs that cannot act would otherwise be silently ignored
+    # and deliver UNORDERED rows
+    if not ordered_by and (global_order or max_out_of_order is not None):
+        raise ValueError("global_order/max_out_of_order require ordered_by")
+    if max_out_of_order is not None and not global_order:
+        raise ValueError("max_out_of_order requires global_order=True")
+
+
 class AmbiguousOutputError(ValueError):
     """> 1 frontier stream at Build (≈ ``ErrAmbiguousOutput``,
     `query_builder.go:204-209`)."""
@@ -97,90 +106,44 @@ class ContinuousQuery:
     def collect(self):
         return self.df.collect()
 
-    def subscribe_batch(
-        self,
-        sink_fn,
-        output_mode: str = "append",
-        ordered_by=None,
-        global_order: bool = False,
-        max_out_of_order=None,
-        chunk_rows: int = 65_536,
-    ):
-        """Streaming subscribe via foreachBatch (≈ ``Subscribe``,
-        `continuous_query.go:103-116`).
+    def _start(self, dispatch, output_mode: str, drain=None):
+        """Run ``dispatch(df, batch_id)`` once on a batch frame, or per
+        micro-batch of a stream (foreachBatch, availableNow).  ``drain``
+        releases rows a ``global_order`` buffer still holds: at once on a
+        batch frame, at :meth:`flush` / :meth:`await_done` on a stream."""
+        if not self.streaming:
+            dispatch(self.df, None)
+            if drain is not None:
+                drain()
+            return None
+        self._flush = drain
+        self._sq = (
+            self.df.writeStream.outputMode(output_mode)
+            .foreachBatch(dispatch)
+            .trigger(availableNow=True)
+            .start()
+        )
+        return self._sq
 
-        Default (``ordered_by=None``): ``sink_fn(batch_df, batch_id)``
-        receives each micro-batch as a DISTRIBUTED DataFrame — the bulk
-        sink path; write it wherever, no driver materialization.
-
-        ``ordered_by=[cols]``: the sorted-delivery semantics of
-        :meth:`subscribe` at BULK granularity — ``sink_fn(chunk)`` is
-        called with consecutive ``chunk_rows``-sized pandas DataFrames in
-        key order (Arrow transfer, one distributed sort per micro-batch)
-        instead of one driver callback per row.  ``global_order=True``
-        extends the order ACROSS micro-batches exactly like
-        :meth:`subscribe`: rows park in a driver-side buffer; with
-        ``max_out_of_order=d`` every batch drains the buffer up to the
-        PRIMARY-key watermark ``max_seen - d`` (bounded memory ∝
-        disorder; with a composite key the drain is STRICT at the
-        boundary — equal-primary rows can still arrive with any
-        secondary, so boundary rows hold one extra drain cycle),
-        otherwise the drain happens at :meth:`flush` /
-        :meth:`await_done` (exact for any key).  Ties preserve
-        arrival order (stable merge).  Driver memory holds at most the
-        undrained buffer + one micro-batch — size the watermark (or the
-        micro-batch, via ``maxFilesPerTrigger``) accordingly; the per-row
-        :meth:`subscribe` remains the zero-materialization option.
-        """
-        if ordered_by is None:
-            if global_order or max_out_of_order is not None:
-                # same contract as subscribe(): ordering knobs without a
-                # key would otherwise silently deliver UNORDERED batches
-                raise ValueError(
-                    "global_order/max_out_of_order require ordered_by"
-                )
-            if not self.streaming:
-                sink_fn(self.df, None)
-                return None
-            self._sq = (
-                self.df.writeStream.outputMode(output_mode)
-                .foreachBatch(sink_fn)
-                .trigger(availableNow=True)
-                .start()
-            )
-            return self._sq
-
-        cols = list(ordered_by)
-
-        def emit(pdf) -> None:
-            for i in range(0, len(pdf), chunk_rows):
-                sink_fn(pdf.iloc[i : i + chunk_rows].reset_index(drop=True))
-
-        if not global_order:
-            def dispatch(batch_df, batch_id=None):
-                emit(batch_df.orderBy(*cols).toPandas())
-
-            if not self.streaming:
-                dispatch(self.df)
-                return None
-            return self.subscribe_batch(dispatch, output_mode=output_mode)
-
+    def _reorder(self, cols, max_out_of_order, emit):
+        """The global-order merge buffer both subscribers share.  ``push``
+        takes one micro-batch as a pandas frame sorted on ``cols``;
+        ``emit`` receives each released run of rows in key order.
+        Returns ``(push, drain)``."""
         import pandas as pd
 
         buf: dict = {"pdf": None, "max_seen": None}
 
-        def dispatch(batch_df, batch_id=None):
-            new = batch_df.orderBy(*cols).toPandas()
+        def push(new) -> None:
             if len(new) == 0:
                 return
             # NULL ordered_by keys are unorderable: pandas coerces the
             # column to float64 with NaN, and NaN fails BOTH watermark
             # masks below — the row would vanish from the buffer without
-            # ever being delivered.  Fail loudly instead (the per-row
-            # subscribe() heap fails on None comparison the same way).
+            # ever being delivered.  Fail loudly instead.
             if new[cols].isna().any().any():
                 raise ValueError(
-                    "subscribe_batch(global_order=True): NULL values in"
+                    "global_order=True: NULL values in"
                     f" ordered_by columns {cols} — an unorderable key"
                     " cannot pass the reorder watermark; filter NULLs"
                     " upstream or order by a non-nullable key"
@@ -198,8 +161,7 @@ class ContinuousQuery:
             if max_out_of_order is not None:
                 # track the frontier explicitly (a fully-drained buffer —
                 # max_out_of_order=0 — must not let a later low-keyed
-                # batch regress the watermark; same contract as the
-                # per-row heap's max_seen)
+                # batch regress the watermark)
                 new_max = new[cols[0]].max()
                 if buf["max_seen"] is None or new_max > buf["max_seen"]:
                     buf["max_seen"] = new_max
@@ -228,12 +190,60 @@ class ContinuousQuery:
             if held is not None and len(held):
                 emit(held)
 
-        if not self.streaming:
-            dispatch(self.df)
-            drain()
-            return None
-        self._flush = drain
-        return self.subscribe_batch(dispatch, output_mode=output_mode)
+        return push, drain
+
+    def subscribe_batch(
+        self,
+        sink_fn,
+        output_mode: str = "append",
+        ordered_by=None,
+        global_order: bool = False,
+        max_out_of_order=None,
+        chunk_rows: int = 65_536,
+    ):
+        """Streaming subscribe via foreachBatch (≈ ``Subscribe``,
+        `continuous_query.go:103-116`).
+
+        Default (``ordered_by=None``): ``sink_fn(batch_df, batch_id)``
+        receives each micro-batch as a DISTRIBUTED DataFrame — the bulk
+        sink path; write it wherever, no driver materialization.
+
+        ``ordered_by=[cols]``: the sorted-delivery semantics of
+        :meth:`subscribe` at BULK granularity — ``sink_fn(chunk)`` is
+        called with consecutive ``chunk_rows``-sized pandas DataFrames in
+        key order (Arrow transfer, one distributed sort per micro-batch)
+        instead of one driver callback per row.  ``global_order=True``
+        extends the order ACROSS micro-batches: rows park in a driver-side
+        merge buffer; with ``max_out_of_order=d`` every batch drains the
+        buffer up to the PRIMARY-key watermark ``max_seen - d`` (bounded memory ∝
+        disorder; with a composite key the drain is STRICT at the
+        boundary — equal-primary rows can still arrive with any
+        secondary, so boundary rows hold one extra drain cycle),
+        otherwise the drain happens at :meth:`flush` /
+        :meth:`await_done` (exact for any key).  Ties preserve
+        arrival order (stable merge).  Driver memory holds at most the
+        undrained buffer + one micro-batch — size the watermark (or the
+        micro-batch, via ``maxFilesPerTrigger``) accordingly; the per-row
+        :meth:`subscribe` without ``global_order`` remains the
+        zero-materialization option.
+        """
+        _check_order_args(ordered_by, global_order, max_out_of_order)
+        if not ordered_by:
+            return self._start(sink_fn, output_mode)
+        cols = list(ordered_by)
+
+        def emit(pdf) -> None:
+            for i in range(0, len(pdf), chunk_rows):
+                sink_fn(pdf.iloc[i : i + chunk_rows].reset_index(drop=True))
+
+        if global_order:
+            push, drain = self._reorder(cols, max_out_of_order, emit)
+        else:
+            push, drain = emit, None
+        return self._start(
+            lambda batch_df, _: push(batch_df.orderBy(*cols).toPandas()),
+            output_mode, drain,
+        )
 
     def subscribe(
         self,
@@ -250,8 +260,9 @@ class ContinuousQuery:
         Delivery is driver-side, matching the reference's model: its
         subscriber is a single consumer goroutine fed from the stream's
         notifier (`pkg/pubsub/stream.go:309-339`) — a convergence point, not
-        a distributed path.  Rows stream through ``toLocalIterator`` so a
-        large micro-batch never materializes on the driver at once; use
+        a distributed path.  Without ``global_order``, rows stream through
+        ``toLocalIterator`` so a large micro-batch never materializes on the
+        driver at once; use
         ``subscribe_batch`` for distributed/bulk sinks.
 
         ``ordered_by``: optional column list to sort each micro-batch before
@@ -262,87 +273,49 @@ class ContinuousQuery:
         ``global_order=True`` extends the ordering ACROSS micro-batches —
         the reference's sorted delivery (`pkg/pubsub/stream.go:297-319`,
         sorted buffer `pkg/events/buffer.go:391-397`) is global, not
-        per-batch.  Rows park in a driver-side reorder heap keyed by
-        ``ordered_by``; with ``max_out_of_order=d`` (the caller's disorder
-        bound on the FIRST ordered-by column, e.g. a seq delta) every batch
-        drains the heap up to the primary-key watermark ``max_seen - d``
-        (strict at the boundary for composite keys — see
-        :meth:`subscribe_batch`) —
-        so delivery stays incremental with bounded memory (heap size ∝
-        disorder, not stream length).  With ``max_out_of_order=None`` the
-        heap drains only at :meth:`flush` / :meth:`await_done` — exact for
-        any orderable key, buffering the full stream.  A row arriving later
-        than its bound (watermark violation) is delivered at the next drain
-        point, best-effort — same contract as any watermark operator.
+        per-batch.  Each micro-batch's rows park in the merge buffer
+        :meth:`subscribe_batch` uses, keyed by ``ordered_by`` with each
+        ``Row`` carried beside its key, so callbacks still receive the
+        ``Row`` objects; ``max_out_of_order`` (the disorder bound on the
+        FIRST ordered-by column, e.g. a seq delta) and the drain points
+        behave exactly as there.  A row arriving later than its bound (watermark
+        violation) is delivered at the next drain point, best-effort —
+        same contract as any watermark operator.
         """
-        cols = list(ordered_by) if ordered_by else None
+        _check_order_args(ordered_by, global_order, max_out_of_order)
+        cols = list(ordered_by or [])
         if not global_order:
-            def dispatch(batch_df, batch_id=None):
+            def dispatch(batch_df, _):
                 it = batch_df.orderBy(*cols) if cols else batch_df
                 for row in it.toLocalIterator():
                     callback(row)
 
-            if not self.streaming:
-                dispatch(self.df)
-                return None
-            return self.subscribe_batch(dispatch, output_mode=output_mode)
+            return self._start(dispatch, output_mode)
 
-        if not cols:
-            raise ValueError("global_order=True requires ordered_by")
-        import heapq
-        import itertools
+        import pandas as pd
 
-        heap: list = []
-        tie = itertools.count()  # FIFO among equal keys; rows never compared
-        state: dict = {"max_seen": None}
+        # the Row column's label is an int: never a (string) column name
+        row_col = 0
 
-        def drain(wm0=None) -> None:
-            # wm0 is the scalar primary-key watermark.  Single key: pop
-            # at-or-below (a future arrival equal to the bound only ties,
-            # and ties are arrival-ordered).  Composite key: a future row
-            # can tie the primary at the bound with ANY secondary, so
-            # boundary-primary rows hold — pop strictly below.
-            def ready(k):
-                return k[0] <= wm0 if len(cols) == 1 else k[0] < wm0
-
-            while heap and (wm0 is None or ready(heap[0][0])):
-                _, _, row = heapq.heappop(heap)
+        def emit(pdf) -> None:
+            for row in pdf[row_col]:
                 callback(row)
 
-        def dispatch(batch_df, batch_id=None):
-            for row in batch_df.orderBy(*cols).toLocalIterator():
-                k = tuple(row[c] for c in cols)
-                heapq.heappush(heap, (k, next(tie), row))
-                if state["max_seen"] is None or k > state["max_seen"]:
-                    state["max_seen"] = k
-            if max_out_of_order is not None and state["max_seen"] is not None:
-                drain(state["max_seen"][0] - max_out_of_order)
-            if len(heap) > self.buffer_peak_rows:
-                self.buffer_peak_rows = len(heap)
+        push, drain = self._reorder(cols, max_out_of_order, emit)
 
-        if not self.streaming:
-            dispatch(self.df)
-            drain()
-            return None
-        self._flush = drain
-        return self.subscribe_batch(dispatch, output_mode=output_mode)
+        def dispatch(batch_df, _):
+            rows = list(batch_df.orderBy(*cols).toLocalIterator())
+            keys = pd.DataFrame([[r[c] for c in cols] for r in rows], columns=cols)
+            keys[row_col] = pd.Series(rows, dtype=object)
+            push(keys)
+
+        return self._start(dispatch, output_mode, drain)
 
     def flush(self) -> None:
         """Drain any rows parked by a ``global_order`` subscription (in key
         order).  Idempotent; called automatically by :meth:`await_done`."""
         if self._flush is not None:
             self._flush()
-
-    def run_memory(self, query_name: str, output_mode: str = "append"):
-        """Run to a memory sink (test harness; ≈ Run, `continuous_query.go:118-139`)."""
-        self._sq = (
-            self.df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(query_name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        return self._sq
 
     def await_done(self) -> None:
         if self._sq is not None:

@@ -3429,8 +3429,8 @@ def excess_part_suppliers(spark, sf_dir):
 
 @query(
     "ordered_delivery_replay",
-    # the heap's delivery sequence must equal a plain ORDER BY — the
-    # oracle's row_number IS the reference's sorted delivery order
+    # the merge buffer's delivery sequence must equal a plain ORDER BY —
+    # the oracle's row_number IS the reference's sorted delivery order
     """SELECT CAST(row_number() OVER (ORDER BY event_id) AS BIGINT)
          AS delivery_pos,
        event_id AS seq, user_id, event_type
@@ -3442,10 +3442,11 @@ def ordered_delivery_replay(spark, sf_dir):
     # events in global key order regardless of arrival order.  Here a
     # bounded event slice is scattered across 8 parquet files by id hash
     # (micro-batches are random slices of the seq space), replayed one
-    # file per trigger, and delivered through the global_order reorder
-    # heap.  The result RECORDS the driver-side delivery sequence
-    # (delivery_pos = arrival index at the callback), so the oracle's
-    # row_number checks the heap's ordering, not a Spark sort.  Driver
+    # file per trigger, and delivered per row through the global_order
+    # merge buffer subscribe_batch also uses.  The result RECORDS the
+    # driver-side delivery sequence (delivery_pos = arrival index at the
+    # callback), so the oracle's row_number checks the buffer's
+    # ordering, not a Spark sort.  Driver
     # traffic is the slice (~1% of events) — the subscribe() sink is the
     # reference's single-consumer convergence point by design; bulk
     # sinks use subscribe_batch.

@@ -1,7 +1,6 @@
 from go_streaming_spark.streaming.runner import (
     StreamMetricsListener,
     replay_to_memory,
-    with_zero_lateness,
 )
 from go_streaming_spark.streaming.stateful import (
     counting_window_stream,
@@ -10,7 +9,6 @@ from go_streaming_spark.streaming.stateful import (
 
 __all__ = [
     "replay_to_memory",
-    "with_zero_lateness",
     "StreamMetricsListener",
     "stream_limit",
     "counting_window_stream",

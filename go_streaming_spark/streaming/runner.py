@@ -7,10 +7,10 @@ completion — the test/verification mode that makes batch and streaming
 runs of the same operator comparable (SURVEY.md §7 "batch-first,
 streaming-compatible").
 
-Zero-lateness watermark mirrors the reference's temporal trigger: a window
-fires when the first event past its end arrives
-(`pkg/events/selection_policy.go:178-215` — watermark = max event time seen,
-no allowed lateness).
+The reference's temporal trigger has zero lateness: a window fires when the
+first event past its end arrives (`pkg/events/selection_policy.go:178-215`
+— watermark = max event time seen).  ``assign_temporal_windows`` sets that
+watermark itself; ``with_lateness`` widens it.
 """
 
 from __future__ import annotations
@@ -19,11 +19,6 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQueryListener
-
-
-def with_zero_lateness(df: DataFrame, time_col: str = "event_start") -> DataFrame:
-    """Reference trigger semantics: zero allowed lateness."""
-    return df.withWatermark(time_col, "0 seconds")
 
 
 def with_lateness(

@@ -274,6 +274,15 @@ def test_engine_sql_entry_point(spark):
     assert eng.sql("SELECT sum(x) AS s FROM tiny").head()["s"] == 1
 
 
+def test_engine_sql_leaves_topic_registry_alone(spark, sf_dir):
+    """sql() gives driver tables views, not topics: a later streaming
+    from_source still gets a stream, and the registry stays empty."""
+    eng = Engine(spark, sf_dir=sf_dir)
+    assert eng.sql("SELECT count(*) AS n FROM events").head()["n"] > 0
+    assert eng.topics() == [] and eng.to_config()["topics"] == {}
+    assert eng.builder().from_source("events", streaming=True).build().streaming
+
+
 def test_engine_sql_isolation_under_clobber(spark):
     """Two engines sharing one SparkSession register CONFLICTING views for
     the same topic name; each sql() must see its own data, and a DataFrame
@@ -462,6 +471,12 @@ def test_subscribe_batch_ordering_knobs_require_key(spark):
         cq.subscribe_batch(lambda pdf: None, global_order=True)
     with pytest.raises(ValueError, match="require ordered_by"):
         cq.subscribe_batch(lambda pdf: None, max_out_of_order=3)
+    # a disorder bound only means something to the global-order buffer
+    for subscribe in (cq.subscribe, cq.subscribe_batch):
+        with pytest.raises(ValueError, match="requires global_order"):
+            subscribe(lambda _: None, ordered_by=["seq"], max_out_of_order=2)
+        with pytest.raises(ValueError, match="require ordered_by"):
+            subscribe(lambda _: None, global_order=True)
 
 
 def test_global_order_buffer_peak_bounded_by_watermark(spark, tmp_path):
@@ -568,17 +583,51 @@ def test_global_order_composite_key_tie_across_batches(spark, tmp_path):
     assert out2 == [30, 20, 10]
 
 
-def test_subscribe_batch_global_order_null_key_raises(spark):
+@pytest.mark.parametrize("method", ["subscribe", "subscribe_batch"])
+def test_subscribe_batch_global_order_null_key_raises(spark, method):
     """A NULL ordered_by key is unorderable: NaN would fail both
     watermark masks and the row would silently vanish from the reorder
-    buffer — the bulk path must fail as loudly as the per-row heap."""
+    buffer — both subscribers must fail loudly instead."""
     eng = Engine(spark)
     df = spark.createDataFrame(
         [(1, 1), (None, 2)], "seq long, value long"
     )
     cq = eng.builder().from_df(df).build()
     with pytest.raises(ValueError, match="NULL values in ordered_by"):
-        cq.subscribe_batch(
-            lambda pdf: None, ordered_by=["seq"], global_order=True,
+        getattr(cq, method)(
+            lambda _: None, ordered_by=["seq"], global_order=True,
             max_out_of_order=1,
         )
+
+
+def test_global_order_equal_keys_keep_arrival_order_across_batches(
+    spark, tmp_path
+):
+    """Exact global order is FIFO among equal keys across micro-batches:
+    k = seq // 10 ties 13 (first file) with 11 (second file), and both
+    subscribers deliver 13 first — a sort that fell back on any other
+    column would put 11 first."""
+    eng = Engine(spark)
+    src = _ordered_topic(tmp_path, [[13, 5], [11, 22]], pin_mtime=True)
+
+    def query():
+        stream = (
+            spark.readStream.schema("seq long, value long")
+            .option("maxFilesPerTrigger", 1)
+            .json(src)
+            .withColumn("k", (F.col("seq") / 10).cast("long"))
+        )
+        return eng.builder().from_df(stream).build()
+
+    rows: list[int] = []
+    cq = query()
+    cq.subscribe(lambda r: rows.append(r.seq), ordered_by=["k"], global_order=True)
+    cq.await_done()
+    out: list[int] = []
+    cq2 = query()
+    cq2.subscribe_batch(
+        lambda pdf: out.extend(pdf["seq"].tolist()),
+        ordered_by=["k"], global_order=True,
+    )
+    cq2.await_done()
+    assert rows == out == [5, 13, 11, 22], (rows, out)
