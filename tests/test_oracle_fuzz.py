@@ -11,13 +11,48 @@ pairs through BOTH engines with the driver's own multiset compare."""
 from __future__ import annotations
 
 import math
+import os
 
 import duckdb
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pyspark
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType, TimestampType
 
 import __spark_entry__ as entry_mod
+
+
+def _write_parquet(rows, ddl, path):
+    """Write ``rows`` as the one-file parquet table that
+    ``spark.createDataFrame(rows, ddl).coalesce(1).write.parquet(path)``
+    writes: the same internal values (Spark's own ``toInternal``), INT96
+    timestamps and Spark's schema metadata — without one Spark job per
+    generated example."""
+    struct = StructType.fromDDL(ddl)
+    schema = to_arrow_schema(struct).with_metadata({
+        "org.apache.spark.version": pyspark.__version__,
+        "org.apache.spark.sql.parquet.row.metadata": struct.json(),
+    })
+    internal = [struct.toInternal(r) for r in rows]
+    cols = []
+    for i, (field, atype) in enumerate(zip(struct.fields, schema.types)):
+        vals = [r[i] for r in internal]
+        if isinstance(field.dataType, TimestampType):
+            # internal timestamps are epoch micros
+            cols.append(pa.array(vals, pa.int64()).cast(atype))
+        else:
+            cols.append(pa.array(vals, atype))
+    os.makedirs(path)
+    pq.write_table(
+        pa.Table.from_arrays(cols, schema=schema),
+        f"{path}/part-00000.parquet",
+        use_deprecated_int96_timestamps=True,
+    )
+
 
 # documents-only queries with oracle sensitivity worth fuzzing: regex
 # normalization, tokenization, gram hashing, windows, hash sampling
@@ -178,9 +213,10 @@ def test_oracle_equivalence_on_random_corpora(spark, tmp_path_factory, name):
         ]
         counter["n"] += 1
         sf_dir = str(base / f"c{counter['n']}")
-        spark.createDataFrame(
-            rows, "doc_id long, text string, lang string, source string, n_chars long"
-        ).coalesce(1).write.mode("overwrite").parquet(f"{sf_dir}/documents.parquet")
+        _write_parquet(
+            rows, "doc_id long, text string, lang string, source string, n_chars long",
+            f"{sf_dir}/documents.parquet",
+        )
 
         sdf = queries[name](spark, sf_dir)
         srows, scols = sdf.collect(), sdf.columns
@@ -259,9 +295,10 @@ def test_oracle_equivalence_on_random_embeddings(spark, tmp_path_factory, name):
         rows = [(i, [float(x) for x in v], i % 3) for i, v in enumerate(vecs)]
         counter["n"] += 1
         sf_dir = str(base / f"c{counter['n']}")
-        spark.createDataFrame(
-            rows, "vec_id long, embedding array<float>, label int"
-        ).coalesce(1).write.mode("overwrite").parquet(f"{sf_dir}/embeddings.parquet")
+        _write_parquet(
+            rows, "vec_id long, embedding array<float>, label int",
+            f"{sf_dir}/embeddings.parquet",
+        )
 
         sdf = queries[name](spark, sf_dir)
         srows, scols = sdf.collect(), sdf.columns
@@ -373,11 +410,12 @@ def test_oracle_equivalence_on_random_events(spark, tmp_path_factory, name):
         ]
         counter["n"] += 1
         sf_dir = str(base / f"c{counter['n']}")
-        spark.createDataFrame(
+        _write_parquet(
             rows,
             "event_id long, ts timestamp, user_id long, event_type string,"
             " value double, props string",
-        ).coalesce(1).write.mode("overwrite").parquet(f"{sf_dir}/events.parquet")
+            f"{sf_dir}/events.parquet",
+        )
 
         sdf = queries[name](spark, sf_dir)
         srows, scols = sdf.collect(), sdf.columns
@@ -449,13 +487,14 @@ def test_oracle_equivalence_on_random_lineitem(spark, tmp_path_factory, name):
         ]
         counter["n"] += 1
         sf_dir = str(base / f"c{counter['n']}")
-        spark.createDataFrame(
+        _write_parquet(
             data,
             "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
             " l_quantity double, l_extendedprice double, l_discount double,"
             " l_tax double, l_returnflag string, l_linestatus string,"
             " l_shipdate timestamp",
-        ).coalesce(1).write.mode("overwrite").parquet(f"{sf_dir}/lineitem.parquet")
+            f"{sf_dir}/lineitem.parquet",
+        )
 
         sdf = queries[name](spark, sf_dir)
         srows, scols = sdf.collect(), sdf.columns
@@ -560,29 +599,30 @@ def test_oracle_equivalence_on_random_joins(spark, tmp_path_factory, name):
         # Engine.sql registers every catalog table — satisfy the untouched
         # ones with links to the tiny sf0.001 files (the query reads only
         # the three generated tables, so their contents are irrelevant)
-        import os
-
         os.makedirs(sf_dir, exist_ok=True)
         for t in ("region", "nation", "supplier", "part", "events",
                   "documents", "embeddings"):
             dst = f"{sf_dir}/{t}.parquet"
             if not os.path.exists(dst):
                 os.symlink(f"/root/testdata/sf0.001/{t}.parquet", dst)
-        spark.createDataFrame(
+        _write_parquet(
             cust, "c_custkey long, c_name string, c_nationkey int,"
             " c_acctbal double, c_mktsegment string",
-        ).coalesce(1).write.mode("overwrite").parquet(f"{sf_dir}/customer.parquet")
-        spark.createDataFrame(
+            f"{sf_dir}/customer.parquet",
+        )
+        _write_parquet(
             orders, "o_orderkey long, o_custkey long, o_orderstatus string,"
             " o_totalprice double, o_orderdate timestamp, o_orderpriority string",
-        ).coalesce(1).write.mode("overwrite").parquet(f"{sf_dir}/orders.parquet")
-        spark.createDataFrame(
+            f"{sf_dir}/orders.parquet",
+        )
+        _write_parquet(
             lineitem,
             "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int,"
             " l_quantity double, l_extendedprice double, l_discount double,"
             " l_tax double, l_returnflag string, l_linestatus string,"
             " l_shipdate timestamp",
-        ).coalesce(1).write.mode("overwrite").parquet(f"{sf_dir}/lineitem.parquet")
+            f"{sf_dir}/lineitem.parquet",
+        )
 
         sdf = queries[name](spark, sf_dir)
         srows, scols = sdf.collect(), sdf.columns
@@ -634,11 +674,12 @@ def test_json_extract_on_hostile_props(spark, tmp_path_factory):
         for i, p in enumerate(props_pool)
     ]
     sf_dir = str(tmp_path_factory.mktemp("jsonfuzz"))
-    spark.createDataFrame(
+    _write_parquet(
         rows,
         "event_id long, ts timestamp, user_id long, event_type string,"
         " value double, props string",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{sf_dir}/events.parquet")
+        f"{sf_dir}/events.parquet",
+    )
 
     sdf = queries["json_struct_extract"](spark, sf_dir)
     srows, scols = sdf.collect(), sdf.columns

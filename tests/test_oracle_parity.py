@@ -60,11 +60,21 @@ def _rows_to_multiset(rows, cols):
 
 QUERY_NAMES = sorted(entry_mod.queries())
 
+# query name -> output schema of its built frame.  Building can run Spark
+# work (the corpus-ingest queries execute eagerly), so the tests below
+# build each query once and share the schema.
+_SCHEMAS: dict = {}
+
+
+def _build(spark, name):
+    sdf = entry_mod.queries()[name](spark, SF_DIR)
+    _SCHEMAS[name] = sdf.schema
+    return sdf
+
 
 @pytest.mark.parametrize("name", QUERY_NAMES)
 def test_query_matches_oracle(spark, duck, name):
-    q = entry_mod.queries()[name]
-    sdf = q(spark, SF_DIR)
+    sdf = _build(spark, name)
     srows = sdf.collect()
     scols = sdf.columns
 
@@ -96,8 +106,8 @@ def test_no_decimal_output_columns(spark, name):
     Policy: aggregate exactly in decimal, cast the OUTPUT to double."""
     from pyspark.sql.types import DecimalType
 
-    sdf = entry_mod.queries()[name](spark, SF_DIR)
-    bad = [f.name for f in sdf.schema.fields if isinstance(f.dataType, DecimalType)]
+    schema = _SCHEMAS.get(name) or _build(spark, name).schema
+    bad = [f.name for f in schema.fields if isinstance(f.dataType, DecimalType)]
     assert not bad, f"{name}: decimal-typed output columns {bad}"
 
 
