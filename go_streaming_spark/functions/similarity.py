@@ -12,12 +12,23 @@
 - :func:`ivf_topk` — inverted-file variant: coarse centroids (any
   deterministic assignment; a cluster/label column works), probe the
   ``nprobe`` nearest centroids.
+- :func:`save_ivf_index` / :func:`ivf_pruned_topk` and its manifest,
+  filtered and audit siblings — the same index persisted as one
+  partition directory per cell.  A probe opens the layout with
+  :func:`_open_ivf` (centroid rows read on the driver, the vectors
+  frame built from a footer schema), ranks the cells in Python with
+  ``cosine_topk``'s exact arithmetic (:func:`_rank_cells`), and runs one
+  Spark job: the partition-pruned candidate scan.
 
-All vector math is native Column expressions (``zip_with`` + sequential
-``aggregate`` fold — deterministic order, JVM codegen, no Python).
+Corpus-side vector math is native Column expressions (unrolled
+left-to-right sums — deterministic order, JVM codegen); the few
+Python-side twins (:func:`_rank_cells`, :func:`quantize_vec`) repeat
+the same double ops, so driver and engine agree bit for bit.
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -59,6 +70,15 @@ def norm_expr_unrolled(a: Column, dim: int) -> Column:
     return F.sqrt(acc)
 
 
+def _query_norm(q: list[float]) -> float:
+    """The query norm :func:`cosine_topk` embeds as a literal: a
+    left-to-right double sum of squares, then ``sqrt``."""
+    qs = 0.0
+    for x in q:
+        qs += x * x
+    return math.sqrt(qs)
+
+
 def cosine_topk(
     df: DataFrame,
     id_col: str,
@@ -78,14 +98,9 @@ def cosine_topk(
     # query norm is a Python-computed double literal (same IEEE ops, same
     # left-to-right order → bit-identical to the JVM fold).  Summation
     # order is unchanged, so values match the fold exactly.
-    import math
-
     dim = len(query_vec)
     q = [float(x) for x in query_vec]
-    qs = 0.0
-    for x in q:
-        qs += x * x
-    qn = math.sqrt(qs)
+    qn = _query_norm(q)
     dot = " + ".join(f"(_v[{i}] * {q[i]!r}D)" for i in range(dim))
     vnorm = " + ".join(f"(_v[{i}] * _v[{i}])" for i in range(dim))
     # try_divide: zero-norm corpus rows get NULL (sorted last by desc),
@@ -510,6 +525,121 @@ def append_ivf_vectors(
     ).parquet(f"{path}/vectors")
 
 
+def _data_files(root: str):
+    """Every file Spark would read under a local table root, in sorted
+    walk order.  Names starting with ``.`` or ``_`` are skipped as
+    Spark skips them (``_SUCCESS``, ``_temporary`` from an in-flight
+    write, ``.crc`` checksums); ``_``-names holding ``=`` are partition
+    directories and stay."""
+    import os
+
+    def visible(name: str) -> bool:
+        return not (
+            name.startswith(".") or (name.startswith("_") and "=" not in name)
+        )
+
+    for d, dirs, files in os.walk(root):
+        dirs[:] = sorted(x for x in dirs if visible(x))
+        for f in sorted(files):
+            if visible(f):
+                yield os.path.join(d, f)
+
+
+def _spark_schema(file: str | None):
+    """The ``StructType`` Spark stored in the footer of a parquet file it
+    wrote; ``None`` for no file or a file another writer made."""
+    import json
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    if file is None:
+        return None
+    meta = pq.read_metadata(file).metadata or {}
+    js = meta.get(b"org.apache.spark.sql.parquet.row.metadata")
+    return StructType.fromJson(json.loads(js)) if js else None
+
+
+def _ivf_vectors(spark, path: str, cluster_col: str) -> DataFrame:
+    """The vectors frame of a :func:`save_ivf_index` layout, built
+    without a schema-inference job: ``spark.read.schema(S)``, where
+    ``S`` is the schema Spark stored in one data file's footer plus the
+    partition column, typed as the centroid table's cluster column.
+    Non-local roots, and files another writer made, keep Spark's
+    inference."""
+    from go_streaming_spark.functions.util import _local_fs_path
+
+    local = _local_fs_path(path)
+    if local is not None:
+        cents = _spark_schema(next(_data_files(f"{local}/centroids"), None))
+        vecs = _spark_schema(next(_data_files(f"{local}/vectors"), None))
+        if cents is not None and vecs is not None:
+            vecs.add(cluster_col, cents[cluster_col].dataType)
+            return spark.read.schema(vecs).parquet(f"{path}/vectors")
+    return spark.read.parquet(f"{path}/vectors")
+
+
+def _open_ivf(spark, path: str, cluster_col: str):
+    """(centroid rows, vectors frame) of a :func:`save_ivf_index` layout,
+    opened without a Spark job on a local root.  The centroid rows are
+    ``(cluster, vec)`` tuples read on the driver with pyarrow (the
+    table is |clusters| rows by construction; non-local roots pay one
+    small Spark read); the frame is :func:`_ivf_vectors`."""
+    import pyarrow.parquet as pq
+
+    from go_streaming_spark.functions.util import _local_fs_path
+
+    local = _local_fs_path(path)
+    files = [] if local is None else list(_data_files(f"{local}/centroids"))
+    if files:
+        rows = []
+        for f in files:
+            t = pq.ParquetFile(f).read(columns=[cluster_col, "vec"])
+            rows += zip(t[cluster_col].to_pylist(), t["vec"].to_pylist())
+    else:
+        cents = spark.read.parquet(f"{path}/centroids").select(cluster_col, "vec")
+        rows = [tuple(r) for r in cents.collect()]
+    return rows, _ivf_vectors(spark, path, cluster_col)
+
+
+def _rank_key(cid, score):
+    """:func:`cosine_topk`'s order as a sort key: score descending with
+    NULLs last, then id ascending (NULL ids first, as Spark sorts)."""
+    return (score is None, 0.0 if score is None else -score, cid is not None, cid)
+
+
+def _q6_cosine(vec, q: list[float], qn: float):
+    """One row of :func:`cosine_topk`'s ``cos_sim``, in the same double
+    ops: left-to-right sums, ``sqrt(vnorm) * qn``, NULL on a zero
+    denominator or a NULL component, then ``floor(x*1e6 + 0.5)/1e6``,
+    whose ``floor`` returns a long (Java's ``(long)`` cast turns NaN
+    into 0)."""
+    if vec is None or None in vec[: len(q)]:
+        return None
+    v = [float(x) for x in vec[: len(q)]]
+    dot, vnorm = v[0] * q[0], v[0] * v[0]
+    for i in range(1, len(q)):
+        dot = dot + v[i] * q[i]
+        vnorm = vnorm + v[i] * v[i]
+    den = math.sqrt(vnorm) * qn
+    if den == 0.0:
+        return None
+    y = (dot / den) * 1e6 + 0.5
+    return 0.0 if y != y else math.floor(y) / 1e6
+
+
+def _rank_cells(rows, query_vec: list[float]) -> list:
+    """``cosine_topk(centroids, cluster, "vec", q, k=len(rows))`` on the
+    driver: every ``(cluster, vec)`` row as ``(cluster, cos_sim)``, in
+    :func:`cosine_topk`'s order with its exact arithmetic."""
+    q = [float(x) for x in query_vec]
+    qn = _query_norm(q)
+    return sorted(
+        ((cid, _q6_cosine(vec, q, qn)) for cid, vec in rows),
+        key=lambda r: _rank_key(*r),
+    )
+
+
 # Rebuild threshold for ivf_needs_rebuild: a cell holding >4× the mean
 # means a probe that lands there scans ~4× its share of the corpus —
 # pruning still works, but the tail-latency guarantee (per-query cost ∝
@@ -532,12 +662,14 @@ def ivf_cell_stats(spark, path: str, cluster_col: str = "label") -> DataFrame:
     Cost: one map-side-combined count over the cluster column only —
     the scan projects zero vector bytes (the cluster value comes from
     the partition directory name; per-file row counts come from parquet
-    footers), so the audit is metadata-cheap even at corpus scale.
+    footers), so the audit is metadata-cheap even at corpus scale.  The
+    frame comes from :func:`_ivf_vectors`, so no schema-inference job
+    runs first; ``cluster`` has the centroid table's cluster type.
     """
     from go_streaming_spark.operators.skew import key_skew_stats
 
     return key_skew_stats(
-        spark.read.parquet(f"{path}/vectors"), cluster_col,
+        _ivf_vectors(spark, path, cluster_col), cluster_col,
         top=None, with_ratio=True,
     ).withColumnRenamed("key", "cluster")
 
@@ -590,7 +722,7 @@ def rebuild_ivf_index(
     """
     from go_streaming_spark.functions import clustering
 
-    vecs = spark.read.parquet(f"{path}/vectors")
+    vecs = _ivf_vectors(spark, path, cluster_col)
     init = clustering.anchor_centroids_q(
         vecs, id_col, vec_col, k, anchor_mod, anchor_rem
     )
@@ -697,23 +829,20 @@ def ivf_pruned_topk(
 ) -> DataFrame:
     """ANN top-k against a :func:`save_ivf_index` layout — result ≡
     :func:`ivf_topk` on the same corpus/centroids; only the PHYSICAL
-    path differs: the ``nprobe`` nearest centroids are picked from the
-    tiny centroid table (driver-side, |clusters| rows), and the
-    candidate scan reads ONLY those clusters' partitions (partition
-    pruning — plan-asserted in
-    test_plans.py::test_ivf_pruned_index_scan).  Per query the cluster
-    touches ~``nprobe/|clusters|`` of the corpus, independent of total
-    corpus size."""
-    cents = spark.read.parquet(f"{path}/centroids")
-    probes = [
-        r["id"]
-        for r in cosine_topk(cents, cluster_col, "vec", query_vec, nprobe)
-        .select("id")
-        .collect()
-    ]
-    cand = spark.read.parquet(f"{path}/vectors").filter(
-        F.col(cluster_col).isin(probes)
-    )
+    path differs: :func:`_open_ivf` reads the centroid rows on the
+    driver (|clusters| rows), :func:`_rank_cells` picks the ``nprobe``
+    nearest cells in plain Python with ``cosine_topk``'s arithmetic,
+    and the candidate scan reads ONLY those clusters' partitions
+    (partition pruning — plan-asserted in
+    test_plans.py::test_ivf_pruned_index_scan).  On a local root the
+    scan is the probe's only Spark job.  Per query the cluster touches
+    ~``nprobe/|clusters|`` of the corpus, independent of total corpus
+    size."""
+    if nprobe < 0:
+        raise ValueError(f"ivf_pruned_topk: nprobe must be >= 0, got {nprobe}")
+    rows, vecs = _open_ivf(spark, path, cluster_col)
+    probes = [c for c, _ in _rank_cells(rows, query_vec)[:nprobe]]
+    cand = vecs.filter(F.col(cluster_col).isin(probes))
     return cosine_topk(cand, id_col, vec_col, query_vec, k)
 
 
@@ -746,25 +875,16 @@ def ivf_filtered_topk(
     results or all cells probed; with all cells probed the result is
     EXACT filtered brute force (the gate's regime).
 
-    Per-round cost stays a partition-pruned scan of the delta cells with
+    The cells are ranked once on the driver (:func:`_open_ivf` +
+    :func:`_rank_cells`), so on a local root each round is one Spark
+    job: a partition-pruned scan of the delta cells with
     ``PushedFilters`` carrying the predicate — corpus size never enters;
     the worst case (filter matches < k rows anywhere) degrades to one
     full sweep of the inverted lists, which is what answering that query
     requires.
     """
-    cents = spark.read.parquet(f"{path}/centroids")
-    # rank ALL cells in one job: an unbounded limit folds the previous
-    # count() + top-ncells pair of jobs into one (the centroid table is
-    # |clusters| rows by construction — tiny at any corpus size)
-    ranked = [
-        r["id"]
-        for r in cosine_topk(
-            cents, cluster_col, "vec", query_vec, 2_147_483_647
-        )
-        .select("id")
-        .collect()
-    ]
-    vecs = spark.read.parquet(f"{path}/vectors")
+    rows, vecs = _open_ivf(spark, path, cluster_col)
+    ranked = [c for c, _ in _rank_cells(rows, query_vec)]
     best: list = []
     schema = None
     lo, hi = 0, min(max(1, nprobe), len(ranked))
@@ -774,13 +894,7 @@ def ivf_filtered_topk(
         out = cosine_topk(cand, id_col, vec_col, query_vec, k)
         schema = out.schema
         best.extend(out.collect())
-        # merge: q6(cos) DESC (NULL zero-norm rows last), id ASC
-        best.sort(
-            key=lambda r: (
-                -(r["cos_sim"] if r["cos_sim"] is not None else float("-inf")),
-                r["id"],
-            )
-        )
+        best.sort(key=lambda r: _rank_key(r["id"], r["cos_sim"]))
         best = best[:k]
         if len(best) >= k or hi >= len(ranked):
             return spark.createDataFrame(best, schema)

@@ -417,7 +417,8 @@ def test_subscribe_batch_ordered_chunks_within_batch(spark, tmp_path):
 def test_subscribe_batch_global_order_across_batches(spark, tmp_path):
     """global_order=True merges micro-batches in the driver-side buffer:
     the concatenated chunk stream is in strict global key order after the
-    await_done flush — the bulk twin of subscribe's reorder heap."""
+    await_done flush — the same merge buffer (``_reorder``) that
+    subscribe(global_order=True) delivers from row by row."""
     eng = Engine(spark)
     src = _ordered_topic(tmp_path, [[5, 2, 8], [0, 7, 3], [6, 1, 4]])
     stream = (
@@ -553,7 +554,7 @@ def test_global_order_composite_key_tie_across_batches(spark, tmp_path):
     cq.await_done()
     assert out == [(0, 1), (1, 1), (1, 2), (2, 5)], out
 
-    # per-row heap path, same shape
+    # per-row delivery from the same merge buffer, same shape
     stream2 = (
         spark.readStream.schema("a long, b long")
         .option("maxFilesPerTrigger", 1)
