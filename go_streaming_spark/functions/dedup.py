@@ -796,9 +796,45 @@ def _cap_and_guard(
             "containment denominators shrink; pass"
             " max_shingle_freq=None for the exact uncapped measure"
             " (safe only on small corpora).",
-            stacklevel=3,
+            stacklevel=4,
         )
     return sh.join(hot, "shingle", "left_anti")
+
+
+def _shingle_pair_counts(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int,
+    max_shingle_freq: int | None,
+    max_candidate_pairs: int | None,
+    op: str,
+) -> DataFrame:
+    """The inverted-index pair join shared by :func:`jaccard_pairs` and
+    :func:`containment_pairs`: every doc pair sharing a capped shingle
+    as ``(id_a < id_b, n_common, n_a, n_b)``, with each doc's shingle
+    count.  ``op`` names the caller in :func:`_cap_and_guard`'s error."""
+    sh = word_shingles(df, id_col, text_col, n).cache()
+    _register_convenience_cache(sh, [sh])
+    sh = _cap_and_guard(sh, max_shingle_freq, max_candidate_pairs, op)
+    # sizes feeds TWO joins (sa/sb) — materialize once; the known
+    # multi-consumer ReuseExchange miss would otherwise recompute the
+    # whole shingle aggregation per consumer.  Doc-count-sized.
+    sizes = (
+        sh.groupBy("id")
+        .agg(F.count(F.lit(1)).alias("n_shingles"))
+        .localCheckpoint()
+    )
+    a, b = sh.alias("a"), sh.alias("b")
+    inter = (
+        a.join(b, "shingle")
+        .filter(F.col("a.id") < F.col("b.id"))
+        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+    sa = sizes.select(F.col("id").alias("id_a"), F.col("n_shingles").alias("n_a"))
+    sb = sizes.select(F.col("id").alias("id_b"), F.col("n_shingles").alias("n_b"))
+    return inter.join(sa, "id_a").join(sb, "id_b")
 
 
 def jaccard_pairs(
@@ -826,28 +862,11 @@ def jaccard_pairs(
     and raises rather than launch a join no cluster absorbs; the scale
     path for 100 TB corpora is :func:`minhash_lsh_pairs`.
     """
-    sh = word_shingles(df, id_col, text_col, n).cache()
-    _register_convenience_cache(sh, [sh])
-    sh = _cap_and_guard(sh, max_shingle_freq, max_candidate_pairs, "jaccard_pairs")
-    # sizes feeds TWO joins (sa/sb) — materialize once; the known
-    # multi-consumer ReuseExchange miss would otherwise recompute the
-    # whole shingle aggregation per consumer.  Doc-count-sized.
-    sizes = (
-        sh.groupBy("id")
-        .agg(F.count(F.lit(1)).alias("n_shingles"))
-        .localCheckpoint()
-    )
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("a.id") < F.col("b.id"))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("id").alias("id_a"), F.col("n_shingles").alias("n_a"))
-    sb = sizes.select(F.col("id").alias("id_b"), F.col("n_shingles").alias("n_b"))
     out = (
-        inter.join(sa, "id_a").join(sb, "id_b")
+        _shingle_pair_counts(
+            df, id_col, text_col, n, max_shingle_freq, max_candidate_pairs,
+            "jaccard_pairs",
+        )
         .withColumn(
             "jaccard",
             F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
@@ -888,28 +907,10 @@ def containment_pairs(
     containment value is a single exact-int division — bit-identical
     across engines without quantization, like jaccard.
     """
-    sh = word_shingles(df, id_col, text_col, n).cache()
-    _register_convenience_cache(sh, [sh])
-    sh = _cap_and_guard(
-        sh, max_shingle_freq, max_candidate_pairs, "containment_pairs"
+    joined = _shingle_pair_counts(
+        df, id_col, text_col, n, max_shingle_freq, max_candidate_pairs,
+        "containment_pairs",
     )
-    # sizes feeds TWO joins (sa/sb): materialize once (ReuseExchange
-    # misses multi-consumer aggregates).  Doc-count-sized.
-    sizes = (
-        sh.groupBy("id")
-        .agg(F.count(F.lit(1)).alias("n_shingles"))
-        .localCheckpoint()
-    )
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("a.id") < F.col("b.id"))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("id").alias("id_a"), F.col("n_shingles").alias("n_a"))
-    sb = sizes.select(F.col("id").alias("id_b"), F.col("n_shingles").alias("n_b"))
-    joined = inter.join(sa, "id_a").join(sb, "id_b")
     both = joined.select(
         F.explode(
             F.array(
@@ -1415,7 +1416,8 @@ def embedding_cosine_pairs(
     The baseline is the all-pairs self-join — O(n²) and only sane within
     blocks.  ``block_col`` (e.g. an LSH bucket, IVF cluster id, or language)
     restricts pairs to same-block, which is the scale path; see
-    similarity.lsh_bucket for a deterministic block assignment.
+    similarity.build_lsh_index (its ``_bucket`` column) for a
+    deterministic block assignment.
 
     Pair-scoring cost: norms are per-row properties, computed ONCE before
     the join (not per pair); with ``dim`` given, the per-pair dot product is

@@ -3,7 +3,7 @@
 - :func:`cosine_topk` — brute-force exact top-k: one scan, per-partition
   partial top-k, single merge (TakeOrdered) — the correctness baseline and
   surprisingly competitive when k is small and the scan is the bottleneck.
-- :func:`lsh_bucket` / :func:`ann_lsh_topk` — random-hyperplane LSH: H
+- :func:`lsh_bucket_sql` / :func:`ann_lsh_topk` — random-hyperplane LSH: H
   deterministic pseudo-hyperplanes → sign-bit bucket key.  Search touches
   only the query's bucket (plus optional 1-bit multiprobe neighbors), so
   the scan cost drops by ~2^H while recall stays high for near-duplicate
@@ -14,11 +14,15 @@
   ``nprobe`` nearest centroids.
 - :func:`save_ivf_index` / :func:`ivf_pruned_topk` and its manifest,
   filtered and audit siblings — the same index persisted as one
-  partition directory per cell.  A probe opens the layout with
-  :func:`_open_ivf` (centroid rows read on the driver, the vectors
-  frame built from a footer schema), ranks the cells in Python with
-  ``cosine_topk``'s exact arithmetic (:func:`_rank_cells`), and runs one
-  Spark job: the partition-pruned candidate scan.
+  partition directory per cell, opened by :func:`_open_ivf` (centroid
+  rows read on the driver, the vectors frame built from a footer
+  schema); a local-root probe runs one Spark job, the partition-pruned
+  candidate scan.
+
+Every IVF variant picks its cells the same way: the centroid rows are
+ranked in Python with ``cosine_topk``'s exact arithmetic
+(:func:`_rank_cells`) and the candidates are the rows whose cluster is
+in the ``nprobe`` best (:func:`_probe_cells`).
 
 Corpus-side vector math is native Column expressions (unrolled
 left-to-right sums — deterministic order, JVM codegen); the few
@@ -264,32 +268,6 @@ def lsh_bucket_sql(
     return " + ".join(parts)
 
 
-def lsh_bucket(
-    vec: Column, dim: int, n_planes: int = 12, seed: int = 42
-) -> Column:
-    """Random-hyperplane LSH bucket id (int, 2^n_planes buckets).
-
-    bit_p = [ vec · plane_p >= 0 ].  The plane matrix is seed-deterministic
-    *constant data*: its components are embedded as literals (an earlier
-    formulation derived each component with per-row md5 expressions —
-    n_planes×dim hashes per row); the per-row work is n_planes unrolled
-    codegen'd dot products.  Column-tree variant; prefer
-    :func:`lsh_bucket_sql` on hot paths (identical plan, ~no driver cost).
-    """
-    v = vec.cast("array<double>")
-    bucket = None
-    for p in range(n_planes):
-        plane = F.array(
-            *[F.lit(plane_component(seed, p, d)) for d in range(dim)]
-        )
-        score = dot_expr_unrolled(v, plane, dim)  # codegen'd, same sum order
-        bit = F.when(score >= 0, F.lit(1 << p).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        bucket = bit if bucket is None else bucket + bit
-    return bucket
-
-
 def build_lsh_index(
     df: DataFrame,
     vec_col: str,
@@ -394,7 +372,8 @@ def ann_lsh_topk(
     neighbors are — LSH shines in near-duplicate regimes; for diffuse
     similarity use more probes or the IVF variant.
 
-    Scale path: precompute/bucket-partition ``lsh_bucket`` at write time and
+    Scale path: precompute/bucket-partition the bucket at write time
+    (:func:`build_lsh_index` + :func:`save_lsh_index`) and
     this becomes a partition-pruned scan of ~(1+H)/2^H of the corpus.
     """
     dim = len(query_vec)
@@ -449,15 +428,14 @@ def ivf_topk(
     then exact top-k within their clusters only.
 
     ``centroids``: (cluster, vec) — e.g. per-label means computed offline.
-    The candidate filter is a broadcast semi-join on the cluster id; at
-    scale the corpus is written partitioned by cluster so probing prunes
-    partitions.
+    Its |clusters| rows are collected and ranked on the driver
+    (:func:`_probe_cells`); the candidate filter is ``cluster IN (the
+    nprobe cells)``.  At scale the corpus is written partitioned by
+    cluster (:func:`save_ivf_index`) so the same filter prunes partitions.
     """
-    probe = (
-        cosine_topk(centroids, cluster_col, "vec", query_vec, nprobe)
-        .select(F.col("id").alias(cluster_col))
+    cand = _probe_cells(
+        df, cluster_col, _cell_rows(centroids, cluster_col), query_vec, nprobe
     )
-    cand = df.join(F.broadcast(probe), cluster_col, "left_semi")
     return cosine_topk(cand, id_col, vec_col, query_vec, k)
 
 
@@ -545,61 +523,58 @@ def _data_files(root: str):
                 yield os.path.join(d, f)
 
 
-def _spark_schema(file: str | None):
-    """The ``StructType`` Spark stored in the footer of a parquet file it
-    wrote; ``None`` for no file or a file another writer made."""
+def _spark_schema(meta):
+    """The ``StructType`` Spark stored in a parquet footer
+    (``pyarrow`` ``FileMetaData``); ``None`` for a file another writer
+    made."""
     import json
 
-    import pyarrow.parquet as pq
     from pyspark.sql.types import StructType
 
-    if file is None:
-        return None
-    meta = pq.read_metadata(file).metadata or {}
-    js = meta.get(b"org.apache.spark.sql.parquet.row.metadata")
+    js = (meta.metadata or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
     return StructType.fromJson(json.loads(js)) if js else None
 
 
-def _ivf_vectors(spark, path: str, cluster_col: str) -> DataFrame:
-    """The vectors frame of a :func:`save_ivf_index` layout, built
-    without a schema-inference job: ``spark.read.schema(S)``, where
-    ``S`` is the schema Spark stored in one data file's footer plus the
-    partition column, typed as the centroid table's cluster column.
-    Non-local roots, and files another writer made, keep Spark's
-    inference."""
-    from go_streaming_spark.functions.util import _local_fs_path
-
-    local = _local_fs_path(path)
-    if local is not None:
-        cents = _spark_schema(next(_data_files(f"{local}/centroids"), None))
-        vecs = _spark_schema(next(_data_files(f"{local}/vectors"), None))
-        if cents is not None and vecs is not None:
-            vecs.add(cluster_col, cents[cluster_col].dataType)
-            return spark.read.schema(vecs).parquet(f"{path}/vectors")
-    return spark.read.parquet(f"{path}/vectors")
+def _cell_rows(centroids: DataFrame, cluster_col: str) -> list:
+    """The ``(cluster, vec)`` rows of a centroid frame, collected to the
+    driver: |clusters| rows by construction."""
+    return [tuple(r) for r in centroids.select(cluster_col, "vec").collect()]
 
 
 def _open_ivf(spark, path: str, cluster_col: str):
     """(centroid rows, vectors frame) of a :func:`save_ivf_index` layout,
-    opened without a Spark job on a local root.  The centroid rows are
-    ``(cluster, vec)`` tuples read on the driver with pyarrow (the
-    table is |clusters| rows by construction; non-local roots pay one
-    small Spark read); the frame is :func:`_ivf_vectors`."""
+    opened without a Spark job on a local root.
+
+    One walk of ``centroids/`` reads each file's ``(cluster, vec)``
+    rows with pyarrow, and the first Spark footer among them gives the
+    cluster column's Spark type.  The vectors frame is
+    ``spark.read.schema(S)``, where ``S`` is the schema Spark stored in
+    one vectors data file's footer plus the partition column with that
+    type, so no schema-inference job runs.  Non-local roots read the
+    centroids through Spark (:func:`_cell_rows`) and, like files another
+    writer made, keep Spark's schema inference."""
     import pyarrow.parquet as pq
 
     from go_streaming_spark.functions.util import _local_fs_path
 
     local = _local_fs_path(path)
     files = [] if local is None else list(_data_files(f"{local}/centroids"))
-    if files:
-        rows = []
-        for f in files:
-            t = pq.ParquetFile(f).read(columns=[cluster_col, "vec"])
-            rows += zip(t[cluster_col].to_pylist(), t["vec"].to_pylist())
-    else:
-        cents = spark.read.parquet(f"{path}/centroids").select(cluster_col, "vec")
-        rows = [tuple(r) for r in cents.collect()]
-    return rows, _ivf_vectors(spark, path, cluster_col)
+    if not files:
+        rows = _cell_rows(spark.read.parquet(f"{path}/centroids"), cluster_col)
+        return rows, spark.read.parquet(f"{path}/vectors")
+    rows, cents = [], None
+    for f in files:
+        with pq.ParquetFile(f) as pf:
+            t = pf.read(columns=[cluster_col, "vec"])
+            if cents is None:
+                cents = _spark_schema(pf.metadata)
+        rows += zip(t[cluster_col].to_pylist(), t["vec"].to_pylist())
+    first = next(_data_files(f"{local}/vectors"), None)
+    vecs = None if first is None else _spark_schema(pq.read_metadata(first))
+    if cents is None or vecs is None:
+        return rows, spark.read.parquet(f"{path}/vectors")
+    vecs.add(cluster_col, cents[cluster_col].dataType)
+    return rows, spark.read.schema(vecs).parquet(f"{path}/vectors")
 
 
 def _rank_key(cid, score):
@@ -629,8 +604,8 @@ def _q6_cosine(vec, q: list[float], qn: float):
 
 
 def _rank_cells(rows, query_vec: list[float]) -> list:
-    """``cosine_topk(centroids, cluster, "vec", q, k=len(rows))`` on the
-    driver: every ``(cluster, vec)`` row as ``(cluster, cos_sim)``, in
+    """:func:`cosine_topk` of the centroid rows with ``k=len(rows)``, on
+    the driver: every ``(cluster, vec)`` row as ``(cluster, cos_sim)``, in
     :func:`cosine_topk`'s order with its exact arithmetic."""
     q = [float(x) for x in query_vec]
     qn = _query_norm(q)
@@ -638,6 +613,18 @@ def _rank_cells(rows, query_vec: list[float]) -> list:
         ((cid, _q6_cosine(vec, q, qn)) for cid, vec in rows),
         key=lambda r: _rank_key(*r),
     )
+
+
+def _probe_cells(df: DataFrame, cluster_col: str, rows, query_vec: list[float],
+                 nprobe: int) -> DataFrame:
+    """``df`` restricted to the ``nprobe`` cells nearest the query: the
+    centroid ``rows`` are ranked with :func:`_rank_cells` and the filter
+    is ``cluster IN (cells)``, which a ``partitionBy(cluster)`` layout
+    turns into partition pruning."""
+    if nprobe < 0:
+        raise ValueError(f"nprobe must be >= 0, got {nprobe}")
+    cells = [c for c, _ in _rank_cells(rows, query_vec)[:nprobe]]
+    return df.filter(F.col(cluster_col).isin(cells))
 
 
 # Rebuild threshold for ivf_needs_rebuild: a cell holding >4× the mean
@@ -663,13 +650,13 @@ def ivf_cell_stats(spark, path: str, cluster_col: str = "label") -> DataFrame:
     the scan projects zero vector bytes (the cluster value comes from
     the partition directory name; per-file row counts come from parquet
     footers), so the audit is metadata-cheap even at corpus scale.  The
-    frame comes from :func:`_ivf_vectors`, so no schema-inference job
+    frame comes from :func:`_open_ivf`, so no schema-inference job
     runs first; ``cluster`` has the centroid table's cluster type.
     """
     from go_streaming_spark.operators.skew import key_skew_stats
 
     return key_skew_stats(
-        _ivf_vectors(spark, path, cluster_col), cluster_col,
+        _open_ivf(spark, path, cluster_col)[1], cluster_col,
         top=None, with_ratio=True,
     ).withColumnRenamed("key", "cluster")
 
@@ -722,7 +709,7 @@ def rebuild_ivf_index(
     """
     from go_streaming_spark.functions import clustering
 
-    vecs = _ivf_vectors(spark, path, cluster_col)
+    _, vecs = _open_ivf(spark, path, cluster_col)
     init = clustering.anchor_centroids_q(
         vecs, id_col, vec_col, k, anchor_mod, anchor_rem
     )
@@ -830,19 +817,16 @@ def ivf_pruned_topk(
     """ANN top-k against a :func:`save_ivf_index` layout — result ≡
     :func:`ivf_topk` on the same corpus/centroids; only the PHYSICAL
     path differs: :func:`_open_ivf` reads the centroid rows on the
-    driver (|clusters| rows), :func:`_rank_cells` picks the ``nprobe``
-    nearest cells in plain Python with ``cosine_topk``'s arithmetic,
-    and the candidate scan reads ONLY those clusters' partitions
+    driver (|clusters| rows), :func:`_probe_cells` picks the ``nprobe``
+    nearest cells as :func:`ivf_topk` does, and the candidate scan
+    reads ONLY those clusters' partitions
     (partition pruning — plan-asserted in
     test_plans.py::test_ivf_pruned_index_scan).  On a local root the
     scan is the probe's only Spark job.  Per query the cluster touches
     ~``nprobe/|clusters|`` of the corpus, independent of total corpus
     size."""
-    if nprobe < 0:
-        raise ValueError(f"ivf_pruned_topk: nprobe must be >= 0, got {nprobe}")
     rows, vecs = _open_ivf(spark, path, cluster_col)
-    probes = [c for c, _ in _rank_cells(rows, query_vec)[:nprobe]]
-    cand = vecs.filter(F.col(cluster_col).isin(probes))
+    cand = _probe_cells(vecs, cluster_col, rows, query_vec, nprobe)
     return cosine_topk(cand, id_col, vec_col, query_vec, k)
 
 
@@ -881,23 +865,28 @@ def ivf_filtered_topk(
     ``PushedFilters`` carrying the predicate — corpus size never enters;
     the worst case (filter matches < k rows anywhere) degrades to one
     full sweep of the inverted lists, which is what answering that query
-    requires.
+    requires.  The merged rows come back as a typed Arrow table, so
+    collecting the result runs no further job.
     """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     rows, vecs = _open_ivf(spark, path, cluster_col)
     ranked = [c for c, _ in _rank_cells(rows, query_vec)]
     best: list = []
-    schema = None
     lo, hi = 0, min(max(1, nprobe), len(ranked))
     while True:
         delta = ranked[lo:hi]
         cand = vecs.filter(F.col(cluster_col).isin(delta)).filter(predicate)
         out = cosine_topk(cand, id_col, vec_col, query_vec, k)
-        schema = out.schema
         best.extend(out.collect())
         best.sort(key=lambda r: _rank_key(r["id"], r["cos_sim"]))
         best = best[:k]
         if len(best) >= k or hi >= len(ranked):
-            return spark.createDataFrame(best, schema)
+            table = pa.Table.from_pylist(
+                [r.asDict() for r in best], schema=to_arrow_schema(out.schema)
+            )
+            return spark.createDataFrame(table, out.schema)
         lo, hi = hi, min(hi * 2, len(ranked))
 
 
@@ -912,11 +901,12 @@ def ivf_quantized_topk(
     nprobe: int = 2,
 ) -> DataFrame:
     """IVF cell pruning × int8-quantized scoring — the composed 100 TB
-    serving shape: the broadcast centroid probe prunes the scan to
-    ~nprobe/n_clusters of the corpus (partition pruning when the corpus
-    is written partitioned by cluster), and every surviving row is scored
-    with the exact-int64 quantized arithmetic that moves 4× fewer bytes
-    (:func:`quantized_cosine_topk`) — the two savings multiply.
+    serving shape: :func:`ivf_topk`'s cell pick (:func:`_probe_cells`)
+    prunes the scan to ~nprobe/n_clusters of the corpus (partition
+    pruning when the corpus is written partitioned by cluster), and
+    every surviving row is scored with the exact-int64 quantized
+    arithmetic that moves 4× fewer bytes (:func:`quantized_cosine_topk`)
+    — the two savings multiply.
 
     Probe selection stays full-precision (the centroid table is tiny and
     picking cells with quantized centroids would change WHICH cells are
@@ -924,11 +914,9 @@ def ivf_quantized_topk(
     restricted to the probed cells, deterministic
     (q6(cos) DESC, id ASC).
     """
-    probe = (
-        cosine_topk(centroids, cluster_col, "vec", query_vec, nprobe)
-        .select(F.col("id").alias(cluster_col))
+    cand = _probe_cells(
+        df, cluster_col, _cell_rows(centroids, cluster_col), query_vec, nprobe
     )
-    cand = df.join(F.broadcast(probe), cluster_col, "left_semi")
     return quantized_cosine_topk(cand, id_col, vec_col, query_vec, k)
 
 

@@ -91,9 +91,7 @@ def tokenize() -> Operator:
     return Operator("Tokenize", fn)
 
 
-def map_pandas(
-    fn: Callable, value_type: str, name: str = "MapPandas", batch_hint: int | None = None
-) -> Operator:
+def map_pandas(fn: Callable, value_type: str, name: str = "MapPandas") -> Operator:
     """Escape hatch for transforms with no Column expression: an
     Arrow-vectorized pandas UDF over ``value`` (pandas.Series -> pandas.Series).
     ~10-100x faster than row-at-a-time Python UDFs; still slower than JVM

@@ -534,8 +534,8 @@ ORDER BY cos_sim DESC, id LIMIT 10""",
 )
 def ann_ivf_topk(spark, sf_dir):
     # IVF ANN: label-mean centroids, probe the 2 nearest clusters, exact
-    # top-k within them (similarity.ivf_topk; candidate filter = broadcast
-    # semi-join on the cluster id)
+    # top-k within them (similarity.ivf_topk: the centroid rows are ranked
+    # on the driver, candidate filter = cluster IN (the 2 cells))
     emb = _emb(spark, sf_dir)
     qv = [float(x) for x in emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]]
     corpus = emb.filter(F.col("vec_id") != 0)

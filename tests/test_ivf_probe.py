@@ -1,10 +1,12 @@
 """The driver-side IVF probe: cell ranking in Python and the one-job scan.
 
-``ivf_pruned_topk`` ranks the centroid table on the driver
-(``similarity._rank_cells``) instead of running ``cosine_topk`` over it,
-and opens the vectors frame with a footer schema instead of a
-schema-inference job.  These tests pin the ranking to Spark's
-``cosine_topk`` bit for bit and count the probe's Spark jobs.
+Every IVF variant ranks the centroid rows on the driver
+(``similarity._rank_cells``) instead of running ``cosine_topk`` over
+them, and the path-based ones open the vectors frame with a footer
+schema instead of a schema-inference job.  These tests pin the ranking
+to Spark's ``cosine_topk`` bit for bit, count the probes' Spark jobs,
+and check every variant against its brute-force scorer when it probes
+every cell.
 """
 
 from __future__ import annotations
@@ -122,3 +124,84 @@ def test_ivf_pruned_topk_runs_one_spark_job(spark, tmp_path):
     assert jobs == 1
     want = similarity.ivf_topk(df, "id", "vec", "cell", cents, q, k=10, nprobe=2)
     assert got == [tuple(r) for r in want.collect()]
+
+
+@pytest.fixture(scope="module")
+def layout(spark, tmp_path_factory):
+    """The layout of test_ivf_pruned_topk_runs_one_spark_job: 120 rows in
+    5 cells, half saved and half appended, with write debris, plus a
+    serving manifest publishing it.  Returns (df, centroids, path,
+    manifest root, query)."""
+    tmp = tmp_path_factory.mktemp("ivf_layout")
+    rng = random.Random(7)
+    rows = [(i, [rng.gauss(0.0, 1.0) for _ in range(DIM)], i % 5) for i in range(120)]
+    df = spark.createDataFrame(rows, "id long, vec array<double>, cell int")
+    cents = similarity.label_centroids(df, "cell", "vec", DIM)
+    path = str(tmp / "ivf")
+    similarity.save_ivf_index(
+        df.filter(F.col("id") % 2 == 0), "id", "vec", "cell", cents, path
+    )
+    similarity.append_ivf_vectors(
+        df.filter(F.col("id") % 2 == 1), "id", "vec", "cell", path
+    )
+    vectors = os.path.join(path, "vectors")
+    open(os.path.join(vectors, "cell=0", "_SUCCESS"), "w").close()
+    partial = os.path.join(vectors, "_temporary", "0", "cell=0")
+    os.makedirs(partial)
+    with open(os.path.join(partial, "part-00000.parquet"), "wb") as f:
+        f.write(b"PAR1 partial")
+    root = str(tmp / "serving")
+    similarity.publish_ivf_epoch(spark, root, path, 0)
+    return df, cents, path, root, [rng.gauss(0.0, 1.0) for _ in range(DIM)]
+
+
+def _rows(frame):
+    return [tuple(r) for r in frame.collect()]
+
+
+def test_ivf_filtered_topk_runs_one_spark_job(spark, layout):
+    """A filtered probe whose predicate does not escalate runs one Spark
+    job, its scan: the merged rows come back as an Arrow-backed frame,
+    so collecting the result runs none.  It equals the unfiltered probe."""
+    _, _, path, _, q = layout
+    got, jobs = _job_count(spark, "ivf-filtered-jobs", lambda: _rows(
+        similarity.ivf_filtered_topk(
+            spark, path, "id", "vec", "cell", q, F.col("id") >= 0, k=10, nprobe=2
+        )
+    ))
+    assert jobs == 1
+    assert got == _rows(similarity.ivf_pruned_topk(
+        spark, path, "id", "vec", "cell", q, k=10, nprobe=2
+    ))
+
+
+@pytest.mark.parametrize("nprobe", [5, 9])
+def test_full_probe_equals_brute_force(spark, layout, nprobe):
+    """With nprobe >= |cells| every IVF variant scores the whole corpus,
+    so each equals its brute-force scorer: a reference that does not go
+    through _rank_cells."""
+    df, cents, path, root, q = layout
+    args = ("id", "vec", "cell")
+    exact = _rows(similarity.cosine_topk(df, "id", "vec", q, k=25))
+    assert len(exact) == 25
+    assert _rows(similarity.ivf_topk(df, *args, cents, q, k=25, nprobe=nprobe)) == exact
+    assert _rows(similarity.ivf_pruned_topk(
+        spark, path, *args, q, k=25, nprobe=nprobe)) == exact
+    assert _rows(similarity.ivf_manifest_topk(
+        spark, root, *args, q, k=25, nprobe=nprobe)) == exact
+    assert _rows(similarity.ivf_filtered_topk(
+        spark, path, *args, q, F.lit(True), k=25, nprobe=nprobe)) == exact
+    assert _rows(similarity.ivf_quantized_topk(
+        df, *args, cents, q, k=25, nprobe=nprobe)) == _rows(
+        similarity.quantized_cosine_topk(df, "id", "vec", q, k=25))
+
+
+def test_negative_nprobe_raises(spark, layout):
+    df, cents, path, _, q = layout
+    args = ("id", "vec", "cell")
+    with pytest.raises(ValueError, match="nprobe"):
+        similarity.ivf_topk(df, *args, cents, q, nprobe=-1)
+    with pytest.raises(ValueError, match="nprobe"):
+        similarity.ivf_quantized_topk(df, *args, cents, q, nprobe=-1)
+    with pytest.raises(ValueError, match="nprobe"):
+        similarity.ivf_pruned_topk(spark, path, *args, q, nprobe=-1)

@@ -160,6 +160,18 @@ def test_tokenize_golden(spark):
     ]
 
 
+def test_map_pandas_equals_map_expr(spark):
+    # map_pandas is map_expr's Arrow escape hatch: the same transform
+    # gives the same events, envelope included
+    from go_streaming_spark.operators.maps import map_pandas
+
+    env = _int_stream(spark, [3, -1, 0, 7, 40])
+    got = map_pandas(lambda s: s * 2 + 1, "long")(env)
+    want = ops.map_expr(F.col("value") * 2 + 1)(env)
+    assert got.columns == want.columns
+    assert got.orderBy("seq").collect() == want.orderBy("seq").collect()
+
+
 def test_flatmap_empty_output_filters(spark):
     # default_operators_test.go:244-273: FlatMap returning [] drops the event
     rows = [Row(seq=0, v=1), Row(seq=1, v=2)]
