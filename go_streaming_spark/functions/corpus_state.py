@@ -106,7 +106,6 @@ class CorpusState:
         (guide §2.6 — same overlap as :meth:`save_bucketed`)."""
         from go_streaming_spark.functions.util import run_concurrent
 
-        spark = self.digests.sparkSession
         run_concurrent([
             lambda: self.digests.write.mode("overwrite")
             .parquet(f"{path}/digests"),
@@ -114,13 +113,17 @@ class CorpusState:
             lambda: self.grams.write.mode("overwrite")
             .parquet(f"{path}/grams"),
             lambda: self.cms.write.mode("overwrite").parquet(f"{path}/cms"),
-            lambda: spark.createDataFrame(
-                [(self.n, self.k, self.rows_per_band, self.gram_k,
-                  self.cms_depth, self.cms_width)],
-                "n int, k int, rows_per_band int, gram_k int,"
-                " cms_depth int, cms_width int",
-            ).write.mode("overwrite").parquet(f"{path}/params"),
+            lambda: self._params_frame().write.mode("overwrite")
+            .parquet(f"{path}/params"),
         ])
+
+    def _params_frame(self) -> DataFrame:
+        return self.digests.sparkSession.createDataFrame(
+            [(self.n, self.k, self.rows_per_band, self.gram_k,
+              self.cms_depth, self.cms_width)],
+            "n int, k int, rows_per_band int, gram_k int,"
+            " cms_depth int, cms_width int",
+        )
 
     @staticmethod
     def load(spark: SparkSession, path: str) -> "CorpusState":
@@ -194,12 +197,7 @@ class CorpusState:
                 path=f"{path}/grams" if path else None,
             ),
             lambda: _plain("cms", self.cms),
-            lambda: _plain("params", spark.createDataFrame(
-                [(self.n, self.k, self.rows_per_band, self.gram_k,
-                  self.cms_depth, self.cms_width)],
-                "n int, k int, rows_per_band int, gram_k int,"
-                " cms_depth int, cms_width int",
-            )),
+            lambda: _plain("params", self._params_frame()),
         ])
 
     @staticmethod
@@ -249,7 +247,8 @@ class CorpusState:
 
         The returned state appends the SURVIVORS' digests, bands,
         shingles and gram counts, and bucket-merges their word sketch —
-        so successive ingests see earlier batches as corpus.
+        so successive ingests see earlier batches as corpus (bands and
+        shingles come from the near-dup stage's batch build, not a rebuild).
         """
         clean, new_state, _ = self._ingest_core(
             batch, id_col, text_col, threshold, materialize_spans=False
@@ -272,18 +271,19 @@ class CorpusState:
         ``materialize_spans`` localCheckpoints the (small, ∝ duplicated
         spans) frame when a second consumer will read it — the SCALE.md
         multi-consumer ReuseExchange pattern; the count-only path keeps
-        it lazy (single consumer, no materialization cost)."""
+        it lazy (single consumer, no materialization cost).  The near-dup
+        stage also returns the batch's MinHash index, whose survivor rows
+        the state update appends."""
         from pyspark.sql.window import Window
 
         # (1) exact: unseen digests, unique in batch (lowest id wins).
-        # localCheckpoint: the near-dup stage consumes this frame THREE
-        # times (batch signature build, verification shingle union, final
-        # anti-join), and each lazy re-execution re-pays the in-batch
-        # row_number window AND the corpus-digest distinct + anti-join —
-        # measured ~1.5 s/query of pure recompute at sf0.1 (guide §5:
-        # materialize a reused intermediate when recomputing beats the
-        # memory cost; batch-sized, same bound as the survivors
-        # checkpoint below)
+        # localCheckpoint: the near-dup stage consumes this frame twice
+        # (the batch shingle build and stage 1's final anti-join), and
+        # each lazy re-execution re-pays the in-batch row_number window
+        # AND the corpus-digest distinct + anti-join — measured ~1.5
+        # s/query of pure recompute at sf0.1 (guide §5: materialize a
+        # reused intermediate when recomputing beats the memory cost;
+        # batch-sized, same bound as the survivors checkpoint below)
         uniq = (
             batch.withColumn("__h", F.md5(F.col(text_col)))
             .withColumn(
@@ -299,11 +299,10 @@ class CorpusState:
             .localCheckpoint()
         )
         # (2) near-dup vs corpus index + in-batch resolution
-        survivors = dd.incremental_minhash_dedup_full(
-            uniq, None, id_col, text_col,
-            self.n, self.k, self.rows_per_band, threshold,
-            index=self.minhash,
-        ).localCheckpoint()
+        survivors, batch_idx = dd._minhash_dedup_full(
+            uniq, self.minhash, id_col, text_col, threshold, None
+        )
+        survivors = survivors.localCheckpoint()
         # (3) span report vs the corpus gram index
         spans = dd.duplicated_spans_against_index(
             survivors, self.grams, id_col, text_col, self.gram_k
@@ -330,12 +329,14 @@ class CorpusState:
         new_digests = self.digests.unionByName(
             survivors.select(F.md5(F.col(text_col)).alias("content_hash"))
         )
-        add_idx = dd.build_minhash_index(
-            survivors, id_col, text_col, self.n, self.k, self.rows_per_band
-        )
+        ids = F.broadcast(survivors.select(F.col(id_col).alias("id")))
+
+        def add(old, new):  # the survivors' batch-index rows ≡ indexing them
+            return old.unionByName(new.join(ids, "id", "left_semi"))
+
         new_minhash = dd.MinHashIndex(
-            self.minhash.bands.unionByName(add_idx.bands),
-            self.minhash.shingles.unionByName(add_idx.shingles),
+            add(self.minhash.bands, batch_idx.bands),
+            add(self.minhash.shingles, batch_idx.shingles),
             self.n, self.k, self.rows_per_band,
         )
         new_grams = (

@@ -333,11 +333,13 @@ class MinHashIndex(NamedTuple):
         the load-side join parallelizes like any table scan."""
         self.bands.write.mode("overwrite").parquet(f"{path}/bands")
         self.shingles.write.mode("overwrite").parquet(f"{path}/shingles")
-        spark = self.bands.sparkSession
-        spark.createDataFrame(
+        self._params_frame().write.mode("overwrite").parquet(f"{path}/params")
+
+    def _params_frame(self) -> DataFrame:
+        return self.bands.sparkSession.createDataFrame(
             [(self.n, self.k, self.rows_per_band)],
             "n int, k int, rows_per_band int",
-        ).write.mode("overwrite").parquet(f"{path}/params")
+        )
 
     @staticmethod
     def load(spark, path: str) -> "MinHashIndex":
@@ -385,10 +387,7 @@ class MinHashIndex(NamedTuple):
         nb = n_buckets or default_buckets(spark)
 
         def _params():
-            w = spark.createDataFrame(
-                [(self.n, self.k, self.rows_per_band)],
-                "n int, k int, rows_per_band int",
-            ).write.mode("overwrite")
+            w = self._params_frame().write.mode("overwrite")
             if path:
                 w = w.option("path", f"{path}/params")
             w.saveAsTable(f"{table_prefix}_params")
@@ -445,14 +444,63 @@ def build_minhash_index(
     return MinHashIndex(bands, sh, n, k, rows_per_band)
 
 
+def _batch_index(new_df: DataFrame, id_col: str, text_col: str,
+                 index: MinHashIndex) -> MinHashIndex:
+    """The batch's shingles and band keys, built once with ``index``'s
+    parameters for stage 1, stage 2 and the ``CorpusState`` update.  A
+    batch frame localCheckpoints both (released with the plan, unlike a
+    per-micro-batch cache); streaming frames stay lazy."""
+    n, k, rows_per_band = index.n, index.k, index.rows_per_band
+    keep = (lambda f: f) if new_df.isStreaming else (lambda f: f.localCheckpoint())
+    sh = keep(shingle_arrays(new_df, id_col, text_col, n))
+    sig = minhash_signatures_wide(new_df, id_col, text_col, n, k, shingles=sh)
+    return MinHashIndex(keep(band_keys(sig, k, rows_per_band)), sh, n, k, rows_per_band)
+
+
+def _drop_index_matches(new_df: DataFrame, batch: MinHashIndex, index: MinHashIndex,
+                        id_col: str, text_col: str, threshold: float) -> DataFrame:
+    """Stage 1 of :func:`dedup_against_index` over a prebuilt batch index."""
+    bcast = not new_df.isStreaming
+    a = batch.bands.select(F.col("id").alias("id_a"), "band", "band_key")
+    if bcast:
+        # broadcast the batch bands into the corpus band index: the
+        # candidate join is a map-side hash join over the index scan —
+        # no exchange on EITHER side (the batch side folds into the
+        # broadcast build)
+        a = F.broadcast(a)
+    b = index.bands.select(F.col("id").alias("id_b"), "band", "band_key")
+    candidates = (
+        a.join(b, ["band", "band_key"])
+        .select("id_a", "id_b")
+        .distinct()
+    )
+    # ASYMMETRIC verification: id_a joins the batch shingles, id_b the
+    # corpus index's, so the corpus shingle source runs once; on the
+    # broadcast path the bounded (pairs ⋈ batch-shingles) relation
+    # broadcasts into the corpus shingle scan, so verification is map-only
+    verified = jaccard_verify_pairs(
+        candidates, None, id_col, text_col, batch.n,
+        shingles=batch.shingles, shingles_b=index.shingles,
+        broadcast_pairs=bcast,
+    )
+    flagged = (
+        verified.filter(F.col("jaccard") >= threshold)
+        .select(F.col("id_a").alias(id_col))
+        .distinct()
+    )
+    if bcast:
+        # flagged ⊆ batch ids: broadcast it so the final anti-join never
+        # shuffles the batch either
+        flagged = F.broadcast(flagged)
+    return new_df.join(flagged, id_col, "left_anti")
+
+
 def dedup_against_index(
     new_df: DataFrame,
     index: MinHashIndex,
     id_col: str,
     text_col: str,
     threshold: float = 0.5,
-    _cache_batch_shingles: bool = False,
-    _return_parts: bool = False,
 ) -> DataFrame:
     """Drop NEW-batch documents with an exact-Jaccard match ≥ ``threshold``
     among their MinHash-LSH candidates in a prebuilt corpus
@@ -466,7 +514,8 @@ def dedup_against_index(
     In-batch duplicates are NOT resolved here — see
     :func:`incremental_minhash_dedup_full`.  Ids must be unique ACROSS
     batch and corpus: a shared id would collide in the verification
-    shingle union.
+    shingle union.  The batch's shingles and band keys are built with the
+    index's parameters and, for a batch frame, localCheckpointed.
 
     Physical shape (guide §3.1/§8): the BATCH is the bounded side of this
     op by contract (a crawl micro-batch vs the accumulated corpus), so by
@@ -477,71 +526,18 @@ def dedup_against_index(
     A streaming batch, which cannot build a broadcast, takes the
     shuffle-join plan instead.
     """
-    n, k, rows_per_band = index.n, index.k, index.rows_per_band
-    bcast = not new_df.isStreaming
-    sh_new = shingle_arrays(new_df, id_col, text_col, n)
-    # the batch shingles feed the signature AND the verification join;
-    # the one-shot convenience wrapper asks for a cache (identical plans
-    # share one entry, so re-runs stay bounded) — ingestion LOOPS get a
-    # per-plan localCheckpoint instead: it materializes the batch-sized
-    # frame once for both consumers without the unbounded cache-registry
-    # growth a per-micro-batch .cache() would cause (each batch is a new
-    # plan; blocks are released with the plan)
-    if _cache_batch_shingles and not new_df.isStreaming:
-        sh_new = sh_new.cache()
-        _register_convenience_cache(sh_new, [sh_new])
-    elif not new_df.isStreaming:
-        sh_new = sh_new.localCheckpoint()
-    sig_new = minhash_signatures_wide(new_df, id_col, text_col, n, k, shingles=sh_new)
-    bands_new = band_keys(sig_new, k, rows_per_band)
-    if _return_parts and not new_df.isStreaming:
-        # a caller will REUSE the batch band keys (see
-        # incremental_minhash_dedup_full's in-batch stage): materialize
-        # them once — batch-bounded narrow rows (k/r per doc) — so the
-        # 16-minhash signature pass runs once, not once per consumer
-        bands_new = bands_new.localCheckpoint()
-    a = bands_new.select(
-        F.col("id").alias("id_a"), "band", "band_key"
-    )
-    if bcast:
-        # broadcast the batch bands into the corpus band index: the
-        # candidate join is a map-side hash join over the index scan —
-        # no exchange on EITHER side (the batch side folds into the
-        # broadcast build)
-        a = F.broadcast(a)
-    b = index.bands.select(F.col("id").alias("id_b"), "band", "band_key")
-    candidates = (
-        a.join(b, ["band", "band_key"])
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    # pair-oriented exact verification, ASYMMETRIC by construction:
-    # id_a comes from the batch's bands, id_b from the corpus index's —
-    # joining each side against only its own shingle frame executes the
-    # corpus shingle source ONCE (the previous batch∪corpus union ran it
-    # once per join side: 2× the corpus shingle work per ingest batch,
-    # whether computed fresh or scanned from a snapshot table); on the
-    # broadcast path the (pairs ⋈ batch-shingles) relation — bounded by
-    # batch × capped bucket collisions — additionally broadcasts into the
-    # corpus shingle scan, so verification is map-only too
-    verified = jaccard_verify_pairs(
-        candidates, None, id_col, text_col, n,
-        shingles=sh_new, shingles_b=index.shingles,
-        broadcast_pairs=bcast,
-    )
-    flagged = (
-        verified.filter(F.col("jaccard") >= threshold)
-        .select(F.col("id_a").alias(id_col))
-        .distinct()
-    )
-    if bcast:
-        # flagged ⊆ batch ids: broadcast it so the final anti-join never
-        # shuffles the batch either
-        flagged = F.broadcast(flagged)
-    out = new_df.join(flagged, id_col, "left_anti")
-    if _return_parts:
-        return out, sh_new, bands_new
-    return out
+    batch = _batch_index(new_df, id_col, text_col, index)
+    return _drop_index_matches(new_df, batch, index, id_col, text_col, threshold)
+
+
+def _convenience_index(corpus_df: DataFrame, *args) -> MinHashIndex:
+    """The ``index=None`` corpus index (``args`` as for
+    :func:`build_minhash_index`), cached and LRU-registered."""
+    index = build_minhash_index(corpus_df, *args)
+    if not corpus_df.isStreaming:
+        index.cache()
+        _register_convenience_cache(index.bands, [index.bands, index.shingles])
+    return index
 
 
 def incremental_minhash_dedup(
@@ -555,7 +551,6 @@ def incremental_minhash_dedup(
     threshold: float = 0.5,
     max_bucket_size: int | None = None,
     index: MinHashIndex | None = None,
-    _return_parts: bool = False,
 ) -> DataFrame:
     """Incremental NEAR-dup dedup: from a NEW batch, keep only documents
     with no exact-Jaccard match ≥ ``threshold`` among their MinHash-LSH
@@ -574,32 +569,55 @@ def incremental_minhash_dedup(
     plan; per-call cache entries would accumulate in executor storage).
 
     The convenience path (``index=None``) is the ONE-SHOT shape: it caches
-    the index frames and the batch shingles, since each feeds two
-    consumers (signature + verification) and would otherwise be computed
-    twice.  Identical plans share a single cache entry (re-running the
-    same query grows nothing) and DISTINCT corpora are bounded by the
-    module's LRU registry (oldest entries unpersist beyond the cap; see
+    the corpus index frames, since each feeds a join.  Identical plans
+    share a single cache entry (re-running the same query grows nothing)
+    and DISTINCT corpora are bounded by the module's LRU registry (oldest
+    entries unpersist beyond the cap; see
     :func:`release_convenience_caches` to drop them all eagerly) — still,
     prefer ``index=`` inside ingestion loops: it also skips re-shingling
-    the corpus every batch.
+    the corpus every batch.  The batch side is never cached.
     """
     if index is None:
-        index = build_minhash_index(
+        index = _convenience_index(
             corpus_df, id_col, text_col, n, k, rows_per_band, max_bucket_size
         )
-        if not corpus_df.isStreaming:
-            index.cache()
-            _register_convenience_cache(
-                index.bands, [index.bands, index.shingles]
-            )
-        return dedup_against_index(
-            new_df, index, id_col, text_col, threshold,
-            _cache_batch_shingles=True, _return_parts=_return_parts,
-        )
-    return dedup_against_index(
-        new_df, index, id_col, text_col, threshold,
-        _return_parts=_return_parts,
+    return dedup_against_index(new_df, index, id_col, text_col, threshold)
+
+
+def _minhash_dedup_full(new_df: DataFrame, index: MinHashIndex, id_col: str,
+                        text_col: str, threshold: float,
+                        max_bucket_size: int | None) -> tuple[DataFrame, MinHashIndex]:
+    """Stages 1 and 2 of :func:`incremental_minhash_dedup_full` over one
+    :func:`_batch_index` → ``(survivors, batch index)``."""
+    from go_streaming_spark.functions.graph import dedup_components
+
+    batch = _batch_index(new_df, id_col, text_col, index)
+    survivors = _drop_index_matches(
+        new_df, batch, index, id_col, text_col, threshold
+    ).localCheckpoint()  # consumed ≥2× (pair gen + final anti-join) and by
+    # the component loop's action rounds — materialize the batch-vs-corpus
+    # stage once; batch-sized, so executor storage cost is one batch
+    # Stage 2 filters the batch index to the survivor ids (a per-row
+    # property of the same text ≡ recomputing it over the survivors), with
+    # broadcast id filters and one side of the band self-join broadcast
+    ids = F.broadcast(survivors.select(F.col(id_col).alias("id")))
+    bands_s = _cap_buckets(batch.bands.join(ids, "id", "left_semi"), max_bucket_size)
+    sh_s = batch.shingles.join(ids, "id", "left_semi")
+    a, b = bands_s.alias("a"), bands_s.alias("b")
+    candidates = (
+        a.join(F.broadcast(b), ["band", "band_key"])
+        .filter(F.col("a.id") < F.col("b.id"))
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .distinct()
     )
+    pairs = jaccard_verify_pairs(
+        candidates, None, id_col, text_col, batch.n, shingles=sh_s
+    ).filter(F.col("jaccard") >= threshold).select("id_a", "id_b", "jaccard")
+    comps = dedup_components(pairs)
+    drop = comps.filter(F.col("doc_id") != F.col("cluster_id")).select(
+        F.col("doc_id").alias(id_col)
+    )
+    return survivors.join(drop, id_col, "left_anti"), batch
 
 
 def incremental_minhash_dedup_full(
@@ -623,7 +641,8 @@ def incremental_minhash_dedup_full(
     verify).  Stage 2 resolves duplicates WITHIN the survivors: symmetric
     :func:`minhash_lsh_pairs` over the survivors, connected components of
     the verified pair graph, keep the minimum id per component (the same
-    canonical-member rule as ``dedup_components``).
+    canonical-member rule as ``dedup_components``).  Both stages read one
+    batch-side shingle and band-key build.
 
     Scale: stage 2's pair generation runs over the batch only (corpus
     never self-joins), and component resolution is the O(log d)
@@ -632,56 +651,18 @@ def incremental_minhash_dedup_full(
     everything else.  Batch-only: stage 2's convergence loop runs driver
     actions, so wrap in ``foreachBatch`` for streaming ingestion.
     """
-    from go_streaming_spark.functions.graph import dedup_components
-
     if new_df.isStreaming:
         raise ValueError(
             "incremental_minhash_dedup_full is batch-only (stage 2 runs"
             " driver actions): call it per micro-batch inside foreachBatch"
         )
-    s1, sh_new, bands_new = incremental_minhash_dedup(
-        new_df, corpus_df, id_col, text_col, n, k, rows_per_band,
-        threshold, max_bucket_size, index=index, _return_parts=True,
-    )
-    survivors = s1.localCheckpoint()  # consumed ≥2× (pair gen + final
-    # anti-join) and by the component loop's action rounds — materialize
-    # the batch-vs-corpus stage once; batch-sized, so executor storage
-    # cost is one batch
-    # Stage 2 pair generation REUSES stage 1's batch shingle + band-key
-    # frames (shingles and band keys are per-row properties of the same
-    # text, so filtering them to the survivor ids ≡ recomputing them over
-    # the survivors): re-shingling + re-minhashing the batch a second
-    # time was the single biggest redundant compute in the ingest path
-    # (guide §1.2 step 1: don't compute things twice).  All frames here
-    # are batch-bounded — broadcast the survivor-id filters and one side
-    # of the band self-join so stage 2 adds no wide exchange.
-    ids = survivors.select(F.col(id_col).alias("id"))
-    bands_s = bands_new.join(F.broadcast(ids), "id", "left_semi")
-    if max_bucket_size:
-        from pyspark.sql.window import Window
-
-        wsz = Window.partitionBy("band", "band_key")
-        bands_s = (
-            bands_s.withColumn("_sz", F.count(F.lit(1)).over(wsz))
-            .filter(F.col("_sz") <= max_bucket_size)
-            .drop("_sz")
+    if index is None:
+        index = _convenience_index(
+            corpus_df, id_col, text_col, n, k, rows_per_band, max_bucket_size
         )
-    sh_s = sh_new.join(F.broadcast(ids), "id", "left_semi")
-    a, b = bands_s.alias("a"), bands_s.alias("b")
-    candidates = (
-        a.join(F.broadcast(b), ["band", "band_key"])
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-    pairs = jaccard_verify_pairs(
-        candidates, None, id_col, text_col, n, shingles=sh_s
-    ).filter(F.col("jaccard") >= threshold).select("id_a", "id_b", "jaccard")
-    comps = dedup_components(pairs)
-    drop = comps.filter(F.col("doc_id") != F.col("cluster_id")).select(
-        F.col("doc_id").alias(id_col)
-    )
-    return survivors.join(drop, id_col, "left_anti")
+    return _minhash_dedup_full(
+        new_df, index, id_col, text_col, threshold, max_bucket_size
+    )[0]
 
 
 def exact_dedup_stream(
@@ -1158,16 +1139,21 @@ def band_keys(
     bands = sig.select("id", F.explode(band_structs).alias("bk")).select(
         "id", "bk.band", "bk.band_key"
     )
-    if max_bucket_size:
-        from pyspark.sql.window import Window
+    return _cap_buckets(bands, max_bucket_size)
 
-        wsz = Window.partitionBy("band", "band_key")
-        bands = (
-            bands.withColumn("_sz", F.count(F.lit(1)).over(wsz))
-            .filter(F.col("_sz") <= max_bucket_size)
-            .drop("_sz")
-        )
-    return bands
+
+def _cap_buckets(bands: DataFrame, max_bucket_size: int | None) -> DataFrame:
+    """Drop the (band, band_key) buckets of ``bands`` above ``max_bucket_size`` rows."""
+    if not max_bucket_size:
+        return bands
+    from pyspark.sql.window import Window
+
+    wsz = Window.partitionBy("band", "band_key")
+    return (
+        bands.withColumn("_sz", F.count(F.lit(1)).over(wsz))
+        .filter(F.col("_sz") <= max_bucket_size)
+        .drop("_sz")
+    )
 
 
 def minhash_lsh_pairs(
@@ -1201,8 +1187,8 @@ def minhash_lsh_pairs(
     if not df.isStreaming:
         sh = sh.cache()
         # registered so per-batch calls (each batch = a new plan, e.g.
-        # incremental_minhash_dedup_full in a foreachBatch loop) cannot
-        # accumulate cache entries unboundedly
+        # in a foreachBatch loop) cannot accumulate cache entries
+        # unboundedly
         _register_convenience_cache(sh, [sh])
     sig = minhash_signatures_wide(df, id_col, text_col, n, k, shingles=sh)
     # Band keys straight from the wide signature — no second aggregation.
@@ -1247,7 +1233,8 @@ def embedding_cosine_pairs_blocked(
     emitted pair's cosine is then recomputed with the sequential
     left-fold (cost ∝ candidates ≈ output size, not n²), so outputs are
     bit-identical to :func:`embedding_cosine_pairs` and the DuckDB
-    oracle's ``list_sum``.
+    oracle's ``list_sum``.  Zero-norm vectors are excluded before
+    pairing, as in the expression path (threshold-independent).
     """
     v = df.select(
         F.col(id_col).cast("long").alias("id"),
@@ -1269,8 +1256,6 @@ def embedding_cosine_pairs_blocked(
 
         pi, pj = key
         M = np.vstack(pdf["vec"].to_numpy())
-        ids = pdf["id"].to_numpy()
-        blocks = pdf["_b"].to_numpy()
         dim = M.shape[1]
 
         # Sequential-order accumulation (d = 0..dim-1), vectorized across
@@ -1278,13 +1263,16 @@ def embedding_cosine_pairs_blocked(
         # the DuckDB oracle's list_sum.  Norms are O(n·dim) — cheap enough
         # to always compute sequentially; the O(n²·dim) dot matrix runs at
         # BLAS speed and is only used to pick candidates (band below).
-        def seq_norms(X):
-            s = np.zeros(X.shape[0])
-            for d in range(dim):
-                s += X[:, d] * X[:, d]
-            n = np.sqrt(s)
-            n[n == 0] = 1.0
-            return n
+        s = np.zeros(M.shape[0])
+        for d in range(dim):
+            s += M[:, d] * M[:, d]
+        nrm = np.sqrt(s)
+        # zero-norm vectors have no direction: drop them before pairing,
+        # as the expression path does (threshold-independent)
+        keep = nrm > 0
+        M, nrm = M[keep], nrm[keep]
+        ids = pdf["id"].to_numpy()[keep]
+        blocks = pdf["_b"].to_numpy()[keep]
 
         def seq_dots_rowwise(A, B):
             # A, B row-aligned (k, dim) candidate pairs → k exact dots
@@ -1299,7 +1287,7 @@ def embedding_cosine_pairs_blocked(
         # dominates both effects with orders of magnitude to spare.
         band = thr - 2e-6
         if pi == pj:
-            n = seq_norms(M)
+            n = nrm
             S = (M @ M.T) / (n[:, None] * n[None, :])
             iu, ju = np.triu_indices(len(ids), k=1)
             cand = S[iu, ju] >= band
@@ -1309,7 +1297,7 @@ def embedding_cosine_pairs_blocked(
         else:
             li, rj = blocks == pi, blocks == pj
             A, B = M[li], M[rj]
-            na, nb = seq_norms(A), seq_norms(B)
+            na, nb = nrm[li], nrm[rj]
             S = (A @ B.T) / (na[:, None] * nb[None, :])
             ka, kb = np.nonzero(S >= band)
             ia, ib = ids[li][ka], ids[rj][kb]

@@ -615,14 +615,18 @@ def _rank_cells(rows, query_vec: list[float]) -> list:
     )
 
 
+def _check_nprobe(nprobe: int) -> None:
+    if nprobe < 0:
+        raise ValueError(f"nprobe must be >= 0, got {nprobe}")
+
+
 def _probe_cells(df: DataFrame, cluster_col: str, rows, query_vec: list[float],
                  nprobe: int) -> DataFrame:
     """``df`` restricted to the ``nprobe`` cells nearest the query: the
     centroid ``rows`` are ranked with :func:`_rank_cells` and the filter
     is ``cluster IN (cells)``, which a ``partitionBy(cluster)`` layout
     turns into partition pruning."""
-    if nprobe < 0:
-        raise ValueError(f"nprobe must be >= 0, got {nprobe}")
+    _check_nprobe(nprobe)
     cells = [c for c, _ in _rank_cells(rows, query_vec)[:nprobe]]
     return df.filter(F.col(cluster_col).isin(cells))
 
@@ -866,11 +870,14 @@ def ivf_filtered_topk(
     the worst case (filter matches < k rows anywhere) degrades to one
     full sweep of the inverted lists, which is what answering that query
     requires.  The merged rows come back as a typed Arrow table, so
-    collecting the result runs no further job.
+    collecting the result runs no further job.  A negative ``nprobe``
+    raises ``ValueError``; ``nprobe=0`` still starts the walk at one cell,
+    since the doubling needs a width to grow from.
     """
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
+    _check_nprobe(nprobe)
     rows, vecs = _open_ivf(spark, path, cluster_col)
     ranked = [c for c, _ in _rank_cells(rows, query_vec)]
     best: list = []

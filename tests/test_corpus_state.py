@@ -44,6 +44,49 @@ def test_ingest_drops_dups_and_reports_spans(spark):
     assert [r.doc_id for r in clean2.collect()] == [21]
 
 
+def _state_frames(st):
+    """Each state frame as a multiset of rows (sorted reprs)."""
+    return {
+        name: sorted(repr(sorted(r.asDict().items())) for r in df.collect())
+        for name, df in (
+            ("digests", st.digests), ("bands", st.minhash.bands),
+            ("shingles", st.minhash.shingles), ("grams", st.grams),
+            ("cms", st.cms),
+        )
+    }
+
+
+def test_ingest_state_equals_rebuild_over_corpus_and_survivors(spark):
+    """Reference for the state update, independent of how it is computed:
+    after an ingest, every state frame equals a fresh
+    ``CorpusState.build`` over corpus ∪ survivors, as multisets.
+    ``ingest_clean`` returns the same state, since the state indexes the
+    as-crawled text, not the cut one."""
+    st = CorpusState.build(_df(spark, CORPUS), "doc_id", "text", gram_k=8)
+    batch = _df(spark, [
+        (10, CORPUS[0][1]),                         # exact dup of corpus
+        (11, "one two three four five six seven eight nine eleven"),  # near-dup of doc 2
+        (12, "novel words entirely fresh content here today folks"),
+        (13, "novel words entirely fresh content here today folks"),  # in-batch exact dup
+        (15, "novel words entirely fresh content here today people"),  # in-batch near dup
+        (14, f"prefix tokens {BOILER} suffix tokens"),  # corpus span overlap
+        (16, "tiny doc"),                           # fewer words than n
+    ])
+    clean, got = st.ingest(batch, "doc_id", "text", threshold=0.5)
+    survivors = clean.select("doc_id", "text")
+    assert sorted(r.doc_id for r in survivors.collect()) == [12, 14, 16]
+    want = CorpusState.build(
+        _df(spark, CORPUS).unionByName(survivors), "doc_id", "text", gram_k=8
+    )
+    got_frames = _state_frames(got)
+    assert got_frames == _state_frames(want)
+    cut, via_clean = st.ingest_clean(batch, "doc_id", "text", threshold=0.5)
+    assert {r.doc_id: r.text for r in cut.collect()}[14] == (
+        "prefix tokens suffix tokens"
+    )
+    assert _state_frames(via_clean) == got_frames
+
+
 def test_state_save_load_roundtrip(spark, tmp_path):
     st = CorpusState.build(_df(spark, CORPUS), "doc_id", "text", gram_k=8)
     path = str(tmp_path / "corpus_state")

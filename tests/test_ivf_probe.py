@@ -205,3 +205,7 @@ def test_negative_nprobe_raises(spark, layout):
         similarity.ivf_quantized_topk(df, *args, cents, q, nprobe=-1)
     with pytest.raises(ValueError, match="nprobe"):
         similarity.ivf_pruned_topk(spark, path, *args, q, nprobe=-1)
+    with pytest.raises(ValueError, match="nprobe"):
+        similarity.ivf_filtered_topk(
+            spark, path, *args, q, F.lit(True), nprobe=-1
+        )

@@ -470,6 +470,18 @@ def test_embedding_cosine_blocked_matches_expression(spark):
     # sequential-order accumulation on both paths: bit-identical
     assert e == b
 
+    # a zero vector has no direction: neither path pairs it, even at a
+    # threshold every other pair clears
+    zero = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 0.0]), (3, [0.0, 1.0]), (4, [1.0, 1.0])],
+        "vec_id long, embedding array<double>",
+    )
+    e0 = {tuple(r) for r in dedup.embedding_cosine_pairs(
+        zero, "vec_id", "embedding", 0.0).collect()}
+    b0 = {tuple(r) for r in dedup.embedding_cosine_pairs_blocked(
+        zero, "vec_id", "embedding", 0.0, n_blocks=2).collect()}
+    assert b0 == e0 and {(1, 3), (1, 4), (3, 4)} == {p[:2] for p in e0}
+
 
 def test_transform_media_chain(spark):
     """Media transforms chain: attach -> transform -> extract, all Arrow

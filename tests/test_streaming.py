@@ -196,6 +196,7 @@ def _two_file_stream(spark, root, ts_us):
     file per micro-batch, so operator state crosses a batch boundary, and
     ``run(df)`` sinks a streaming frame through an availableNow memory
     query, asserting both files were fed separately."""
+    import os
     import uuid
 
     import pyarrow as pa
@@ -205,12 +206,16 @@ def _two_file_stream(spark, root, ts_us):
     d.mkdir()
     half = len(ts_us) // 2
     for i, ids in enumerate([range(half), range(half, len(ts_us))]):
+        part = str(d / f"part-{i}.parquet")
         pq.write_table(pa.table({
             "event_id": pa.array(list(ids), pa.int64()),
             "k": pa.array([x % 2 for x in ids], pa.int64()),
             "value": pa.array([float(x) for x in ids]),
             "ts": pa.array([ts_us[x] for x in ids], pa.timestamp("us", tz="UTC")),
-        }), str(d / f"part-{i}.parquet"))
+        }), part)
+        # the file source orders batches by modification time — pin it,
+        # or both files can share an mtime and the feed order is luck
+        os.utime(part, (1_700_000_000 + i, 1_700_000_000 + i))
 
     def run(df):
         name = f"multi_{uuid.uuid4().hex[:8]}"
