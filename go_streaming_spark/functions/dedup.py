@@ -303,10 +303,15 @@ class MinHashIndex(NamedTuple):
     shape; cf. subscribe-once semantics in
     /root/reference/pkg/pubsub/stream.go).
 
-    The caller owns the lifecycle: ``index.cache()`` before a batch loop,
-    ``index.unpersist()`` after — nothing in this module caches behind the
-    caller's back (a per-call cache in a ``foreachBatch`` loop grows
-    executor storage unboundedly).
+    The caller owns the lifecycle of an index it passes: ``index.cache()``
+    before a batch loop, ``index.unpersist()`` after (a per-call cache in a
+    ``foreachBatch`` loop grows executor storage unboundedly).  Only the
+    convenience paths that build their own state per call cache it:
+    ``incremental_minhash_dedup`` / ``incremental_minhash_dedup_full``
+    with ``index=None``, :func:`minhash_lsh_pairs`' shingle arrays and the
+    :func:`jaccard_pairs` / :func:`containment_pairs` shingle frames.
+    Their entries sit in an LRU registry of ``_CONVENIENCE_CACHE_MAX``
+    plans; :func:`release_convenience_caches` unpersists them all.
     """
 
     bands: DataFrame
@@ -458,7 +463,7 @@ def _batch_index(new_df: DataFrame, id_col: str, text_col: str,
 
 
 def _drop_index_matches(new_df: DataFrame, batch: MinHashIndex, index: MinHashIndex,
-                        id_col: str, text_col: str, threshold: float) -> DataFrame:
+                        id_col: str, threshold: float) -> DataFrame:
     """Stage 1 of :func:`dedup_against_index` over a prebuilt batch index."""
     bcast = not new_df.isStreaming
     a = batch.bands.select(F.col("id").alias("id_a"), "band", "band_key")
@@ -479,9 +484,7 @@ def _drop_index_matches(new_df: DataFrame, batch: MinHashIndex, index: MinHashIn
     # broadcast path the bounded (pairs ⋈ batch-shingles) relation
     # broadcasts into the corpus shingle scan, so verification is map-only
     verified = jaccard_verify_pairs(
-        candidates, None, id_col, text_col, batch.n,
-        shingles=batch.shingles, shingles_b=index.shingles,
-        broadcast_pairs=bcast,
+        candidates, batch.shingles, index.shingles, broadcast_pairs=bcast
     )
     flagged = (
         verified.filter(F.col("jaccard") >= threshold)
@@ -527,7 +530,7 @@ def dedup_against_index(
     shuffle-join plan instead.
     """
     batch = _batch_index(new_df, id_col, text_col, index)
-    return _drop_index_matches(new_df, batch, index, id_col, text_col, threshold)
+    return _drop_index_matches(new_df, batch, index, id_col, threshold)
 
 
 def _convenience_index(corpus_df: DataFrame, *args) -> MinHashIndex:
@@ -593,7 +596,7 @@ def _minhash_dedup_full(new_df: DataFrame, index: MinHashIndex, id_col: str,
 
     batch = _batch_index(new_df, id_col, text_col, index)
     survivors = _drop_index_matches(
-        new_df, batch, index, id_col, text_col, threshold
+        new_df, batch, index, id_col, threshold
     ).localCheckpoint()  # consumed ≥2× (pair gen + final anti-join) and by
     # the component loop's action rounds — materialize the batch-vs-corpus
     # stage once; batch-sized, so executor storage cost is one batch
@@ -610,9 +613,9 @@ def _minhash_dedup_full(new_df: DataFrame, index: MinHashIndex, id_col: str,
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .distinct()
     )
-    pairs = jaccard_verify_pairs(
-        candidates, None, id_col, text_col, batch.n, shingles=sh_s
-    ).filter(F.col("jaccard") >= threshold).select("id_a", "id_b", "jaccard")
+    pairs = jaccard_verify_pairs(candidates, sh_s).filter(
+        F.col("jaccard") >= threshold
+    ).select("id_a", "id_b", "jaccard")
     comps = dedup_components(pairs)
     drop = comps.filter(F.col("doc_id") != F.col("cluster_id")).select(
         F.col("doc_id").alias(id_col)
@@ -944,11 +947,7 @@ def shingle_arrays(
 
 def jaccard_verify_pairs(
     pairs: DataFrame,
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    shingles: DataFrame | None = None,
+    shingles: DataFrame,
     shingles_b: DataFrame | None = None,
     broadcast_pairs: bool = False,
 ) -> DataFrame:
@@ -960,7 +959,7 @@ def jaccard_verify_pairs(
     over the candidates' shingle streams.  This is the verification half of
     LSH at scale: cost ∝ |candidates|, not |docs with shared shingles|².
 
-    ``shingles``: optionally pass a precomputed :func:`shingle_arrays` frame.
+    ``shingles``: the :func:`shingle_arrays` frame both ids join.
     ``shingles_b``: optionally a DIFFERENT shingle frame for the ``id_b``
     side — when the pair set is bipartite by construction (batch ids left,
     corpus ids right, as in :func:`dedup_against_index`), joining each side
@@ -972,9 +971,8 @@ def jaccard_verify_pairs(
     the ``id_b`` shingle scan so the big side never shuffles — same rows,
     different physical plan.
     """
-    sh = shingles if shingles is not None else shingle_arrays(df, id_col, text_col, n)
-    sh_b = shingles_b if shingles_b is not None else sh
-    a = sh.select(F.col("id").alias("id_a"), F.col("shingles").alias("_sa"))
+    sh_b = shingles_b if shingles_b is not None else shingles
+    a = shingles.select(F.col("id").alias("id_a"), F.col("shingles").alias("_sa"))
     b = sh_b.select(F.col("id").alias("id_b"), F.col("shingles").alias("_sb"))
     if broadcast_pairs:
         # the pair set and the id_a shingle source are BOUNDED (batch-side
@@ -1203,9 +1201,103 @@ def minhash_lsh_pairs(
     # Exact-Jaccard verification of the candidate pairs only, pair-oriented
     # (cost ∝ |candidates| — see jaccard_verify_pairs; an inverted-index
     # re-join over candidate docs re-pays the bucket cross product).
-    exact = jaccard_verify_pairs(candidates, df, id_col, text_col, n, shingles=sh)
+    exact = jaccard_verify_pairs(candidates, sh)
     return exact.filter(F.col("jaccard") >= threshold).select(
         "id_a", "id_b", "jaccard"
+    )
+
+
+def _cosine_scorer(pick):
+    """The cosine-pair family's one BLAS kernel → ``scores(A, B, ia, ib)``.
+
+    Over row-stacked vectors ``A`` / ``B`` with ids ``ia`` / ``ib``: fold
+    norms sequentially (d = 0..dim-1), drop zero-norm rows, build the BLAS
+    cosine matrix ``S`` and let ``pick(S, ia, ib) -> (ka, kb)`` select
+    candidates.  BLAS can differ from the fold in the last ulp, so ``S``
+    only selects: each picked pair is rescored with the sequential fold
+    and q6-quantized, bit-identical to the expression path and the DuckDB
+    oracle's ``list_sum``.  Returns ``(ia[ka], ib[kb], cos_sim)``.
+
+    A factory because cloudpickle ships a closure by value but a
+    module-level function by reference, which workers that cannot import
+    this package fail to load: block UDFs call only closures.
+    """
+
+    def scores(A, B, ia, ib):
+        import numpy as np
+
+        dim = A.shape[1]
+
+        def norms(X):
+            s = np.zeros(X.shape[0])
+            for d in range(dim):
+                s += X[:, d] * X[:, d]
+            return np.sqrt(s)
+
+        na, nb = norms(A), norms(B)
+        a, b = na > 0, nb > 0
+        A, ia, na = A[a], ia[a], na[a]
+        B, ib, nb = B[b], ib[b], nb[b]
+        ka, kb = pick((A @ B.T) / (na[:, None] * nb[None, :]), ia, ib)
+        Ak, Bk = A[ka], B[kb]
+        s = np.zeros(len(ka))
+        for d in range(dim):
+            s += Ak[:, d] * Bk[:, d]
+        return ia[ka], ib[kb], np.floor(s / (na[ka] * nb[kb]) * 1e6 + 0.5) / 1e6
+
+    return scores
+
+
+def _band_pick(threshold: float):
+    """``pick`` for a threshold: every pair whose BLAS score reaches
+    ``threshold - 2e-6``.  BLAS and the sequential fold differ by ≲1e-13
+    relative, and the output rounds to 6 decimals before the ``>=`` test,
+    so a pair that could round up to the threshold sits above
+    ``threshold - 5e-7``; 2e-6 covers both with room to spare."""
+    band = float(threshold) - 2e-6
+    return lambda S, ia, ib: (S >= band).nonzero()
+
+
+def _cross_block_scores(
+    left: DataFrame,
+    right: DataFrame,
+    id_col: str,
+    vec_col: str,
+    n_blocks: int,
+    pick,
+) -> DataFrame:
+    """The asymmetric block layout: ``left`` hash-partitions into
+    ``n_blocks`` (no replication), ``right`` replicates into every block,
+    rows with a NULL vector are dropped, and each ``_b`` group scores its
+    |left_blk|×|right| matrix with ``_cosine_scorer(pick)``.  Shuffle
+    volume is n_left + n_blocks·n_right rows, so the small side goes
+    ``right``.  Emits ``(id_a, id_b, cos_sim)``: the left id, the right id
+    and the exact q6 cosine of every picked pair."""
+    vec = F.col(vec_col).cast("array<double>")
+
+    def side(df: DataFrame, s: int, block: Column) -> DataFrame:
+        return spread(df).where(F.col(vec_col).isNotNull()).select(
+            F.col(id_col).alias("id"), vec.alias("vec"),
+            F.lit(s).alias("side"), block.alias("_b"),
+        )
+
+    lv = side(left, 0, F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).cast("int"))
+    rv = side(right, 1, F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1))))
+    scores = _cosine_scorer(pick)
+
+    def score(pdf):
+        import numpy as np
+        import pandas as pd
+
+        # stack the whole group, then split: a block may hold no left rows
+        M = np.vstack(pdf["vec"].to_numpy())
+        ids = pdf["id"].to_numpy()
+        r = pdf["side"].to_numpy() == 1
+        ia, ib, cs = scores(M[~r], M[r], ids[~r], ids[r])
+        return pd.DataFrame({"id_a": ia, "id_b": ib, "cos_sim": cs})
+
+    return lv.unionByName(rv).groupBy("_b").applyInPandas(
+        score, "id_a long, id_b long, cos_sim double"
     )
 
 
@@ -1221,22 +1313,26 @@ def embedding_cosine_pairs_blocked(
 
     Rows hash into ``n_blocks``; each row is replicated into every
     unordered block pair its block participates in (B copies), and each
-    block-pair group computes its cosine submatrix with one vectorized
-    numpy matmul, emitting only pairs ≥ threshold.
+    block-pair group scores its cosine submatrix with the family's one
+    BLAS kernel (``_cosine_scorer``): the upper triangle of a block
+    against itself, the full |A|×|B| matrix across two blocks, emitting
+    only pairs ≥ threshold.  This symmetric layout scores each unordered
+    block pair once; the asymmetric one of
+    :func:`embedding_cosine_cross_pairs_blocked` would double the matmul
+    work on a self-join.
 
     Scale math: shuffle volume is B·n rows (choose B ≈ √(n/rows-per-task)),
     against the expression join's n²/2 pair *evaluations*; the matmul runs
     at BLAS speed.  Bit-exactness is preserved without paying for it in the
-    hot path: the BLAS scores (pairwise summation, differs from the
-    sequential fold only in the last ulp) are used solely to SELECT
-    candidate pairs within a safety band below the threshold; every
-    emitted pair's cosine is then recomputed with the sequential
-    left-fold (cost ∝ candidates ≈ output size, not n²), so outputs are
-    bit-identical to :func:`embedding_cosine_pairs` and the DuckDB
-    oracle's ``list_sum``.  Zero-norm vectors are excluded before
-    pairing, as in the expression path (threshold-independent).
+    hot path: the BLAS scores only SELECT candidate pairs within a safety
+    band below the threshold, and every emitted pair's cosine is
+    recomputed with the sequential left-fold (cost ∝ candidates ≈ output
+    size, not n²), so outputs are bit-identical to
+    :func:`embedding_cosine_pairs` and the DuckDB oracle's ``list_sum``.
+    NULL and zero-norm vectors never pair, as in the expression path
+    (threshold-independent).
     """
-    v = df.select(
+    v = df.where(F.col(vec_col).isNotNull()).select(
         F.col(id_col).cast("long").alias("id"),
         F.col(vec_col).cast("array<double>").alias("vec"),
     ).withColumn("_b", F.pmod(F.xxhash64(F.col("id")), F.lit(n_blocks)).cast("int"))
@@ -1249,63 +1345,32 @@ def embedding_cosine_pairs_blocked(
     )
     rep = v.select("id", "vec", "_b", F.explode(pair_keys).alias("pk"))
     thr = float(threshold)
+    pick = _band_pick(thr)
+
+    def upper(S, ia, ib):
+        ka, kb = pick(S, ia, ib)
+        u = ka < kb
+        return ka[u], kb[u]
+
+    within, across = _cosine_scorer(upper), _cosine_scorer(pick)
 
     def score(key, pdf):
         import numpy as np
         import pandas as pd
 
         pi, pj = key
+        # stack the whole group, then mask: a block pair may hold rows of
+        # only one of its blocks
         M = np.vstack(pdf["vec"].to_numpy())
-        dim = M.shape[1]
-
-        # Sequential-order accumulation (d = 0..dim-1), vectorized across
-        # rows/pairs: bit-identical to the expression path's left-fold and
-        # the DuckDB oracle's list_sum.  Norms are O(n·dim) — cheap enough
-        # to always compute sequentially; the O(n²·dim) dot matrix runs at
-        # BLAS speed and is only used to pick candidates (band below).
-        s = np.zeros(M.shape[0])
-        for d in range(dim):
-            s += M[:, d] * M[:, d]
-        nrm = np.sqrt(s)
-        # zero-norm vectors have no direction: drop them before pairing,
-        # as the expression path does (threshold-independent)
-        keep = nrm > 0
-        M, nrm = M[keep], nrm[keep]
-        ids = pdf["id"].to_numpy()[keep]
-        blocks = pdf["_b"].to_numpy()[keep]
-
-        def seq_dots_rowwise(A, B):
-            # A, B row-aligned (k, dim) candidate pairs → k exact dots
-            s = np.zeros(A.shape[0])
-            for d in range(dim):
-                s += A[:, d] * B[:, d]
-            return s
-
-        # Candidate band: BLAS vs sequential fold differ by ≲1e-13 relative;
-        # the output rounds to 6 decimals before the >= thr test, so any
-        # pair that could round up to thr sits above thr - 5e-7.  2e-6
-        # dominates both effects with orders of magnitude to spare.
-        band = thr - 2e-6
+        ids, blocks = pdf["id"].to_numpy(), pdf["_b"].to_numpy()
         if pi == pj:
-            n = nrm
-            S = (M @ M.T) / (n[:, None] * n[None, :])
-            iu, ju = np.triu_indices(len(ids), k=1)
-            cand = S[iu, ju] >= band
-            iu, ju = iu[cand], ju[cand]  # gather AFTER masking: O(candidates)
-            ia, ib = ids[iu], ids[ju]
-            cs_exact = seq_dots_rowwise(M[iu], M[ju]) / (n[iu] * n[ju])
+            ia, ib, cs = within(M, M, ids, ids)
         else:
             li, rj = blocks == pi, blocks == pj
-            A, B = M[li], M[rj]
-            na, nb = nrm[li], nrm[rj]
-            S = (A @ B.T) / (na[:, None] * nb[None, :])
-            ka, kb = np.nonzero(S >= band)
-            ia, ib = ids[li][ka], ids[rj][kb]
-            cs_exact = seq_dots_rowwise(A[ka], B[kb]) / (na[ka] * nb[kb])
+            ia, ib, cs = across(M[li], M[rj], ids[li], ids[rj])
         lo, hi = np.minimum(ia, ib), np.maximum(ia, ib)
-        cs_exact = np.floor(cs_exact * 1e6 + 0.5) / 1e6  # q6: np.round is banker's
-        m = (cs_exact >= thr) & (lo != hi)
-        return pd.DataFrame({"id_a": lo[m], "id_b": hi[m], "cos_sim": cs_exact[m]})
+        m = (cs >= thr) & (lo != hi)
+        return pd.DataFrame({"id_a": lo[m], "id_b": hi[m], "cos_sim": cs[m]})
 
     return rep.groupBy(F.col("pk.pi"), F.col("pk.pj")).applyInPandas(
         score, "id_a long, id_b long, cos_sim double"
@@ -1391,6 +1456,55 @@ def simhash_pairs(
     )
 
 
+def _cosine_prepared(
+    df: DataFrame, id_col: str, vec_col: str, block_col: str | None, dim: int | None
+) -> DataFrame:
+    """(id, vec, nrm[, blk]) — one side of the expression cosine join.
+    Norms are per-row properties, computed ONCE here rather than per pair;
+    NULL and zero-norm vectors are dropped before pairing (no direction,
+    and under ANSI mode the division would kill the whole stage — found
+    by the oracle fuzz; it is also what the NULL-cosine threshold filter
+    does on the SQL side)."""
+    from go_streaming_spark.functions import similarity as sim
+
+    vec = F.col(vec_col).cast("array<double>")
+    nrm = sim.norm_expr_unrolled(vec, dim) if dim else sim.norm_expr(vec)
+    return spread(df).select(
+        F.col(id_col).alias("id"),
+        vec.alias("vec"),
+        nrm.alias("nrm"),
+        *([F.col(block_col).alias("blk")] if block_col else []),
+    ).filter(F.col("nrm") > 0)
+
+
+def _cosine_join(
+    a: DataFrame,
+    b: DataFrame,
+    threshold: float,
+    block_col: str | None,
+    dim: int | None,
+    *on: Column,
+) -> DataFrame:
+    """The expression cosine join of two :func:`_cosine_prepared` frames
+    (columns ``a.*`` / ``b.*``): an equi-join on ``blk`` when ``block_col``
+    is given, otherwise a cross join, plus any extra ``on`` conditions.
+    With ``dim`` the per-pair dot product is an unrolled codegen'd
+    expression (~10× over the interpreted fold) with identical summation
+    order."""
+    from go_streaming_spark.functions import similarity as sim
+
+    a, b = a.alias("a"), b.alias("b")
+    cond = [F.col("a.blk") == F.col("b.blk")] if block_col else []
+    cond += on
+    joined = a.join(b, on=cond) if cond else a.crossJoin(b)
+    va, vb = F.col("a.vec"), F.col("b.vec")
+    dot = sim.dot_expr_unrolled(va, vb, dim) if dim else sim.dot_expr(va, vb)
+    cos = q6(dot / (F.col("a.nrm") * F.col("b.nrm")))
+    return joined.select(
+        F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"), cos.alias("cos_sim")
+    ).filter(F.col("cos_sim") >= threshold)
+
+
 def embedding_cosine_pairs(
     df: DataFrame,
     id_col: str,
@@ -1407,43 +1521,16 @@ def embedding_cosine_pairs(
     similarity.build_lsh_index (its ``_bucket`` column) for a
     deterministic block assignment.
 
-    Pair-scoring cost: norms are per-row properties, computed ONCE before
-    the join (not per pair); with ``dim`` given, the per-pair dot product is
-    an unrolled codegen'd expression (~10× over the interpreted fold) with
-    identical summation order — results are bit-unchanged.
+    One prepared frame (spread once, norms once, NULL and zero-norm
+    vectors dropped — they never pair) joins itself on ``id_a < id_b``;
+    :func:`embedding_cosine_cross_pairs` is the same join over two
+    prepared frames.  Pair-scoring cost: with ``dim`` given, the per-pair
+    dot product is an unrolled codegen'd expression (~10× over the
+    interpreted fold) with identical summation order — results are
+    bit-unchanged.
     """
-    from go_streaming_spark.functions import similarity as sim
-    from go_streaming_spark.functions.util import spread
-
-    vec = F.col(vec_col).cast("array<double>")
-    nrm = sim.norm_expr_unrolled(vec, dim) if dim else sim.norm_expr(vec)
-    # zero-norm vectors have no direction: cosine is undefined, and under
-    # ANSI mode the division would kill the whole stage (found by the
-    # oracle fuzz) — exclude them BEFORE pairing, which is also what the
-    # NULL-cosine threshold filter does on the SQL side
-    v = spread(df).select(
-        F.col(id_col).alias("id"),
-        vec.alias("vec"),
-        nrm.alias("nrm"),
-        *( [F.col(block_col).alias("blk")] if block_col else [] ),
-    ).filter(F.col("nrm") > 0)
-    a, b = v.alias("a"), v.alias("b")
-    on = [F.col("a.id") < F.col("b.id")]
-    if block_col:
-        joined = a.join(b, on=[F.col("a.blk") == F.col("b.blk"), *on])
-    else:
-        joined = a.join(b, on=on)
-    va, vb = F.col("a.vec"), F.col("b.vec")
-    dot = sim.dot_expr_unrolled(va, vb, dim) if dim else sim.dot_expr(va, vb)
-    cos = q6(dot / (F.col("a.nrm") * F.col("b.nrm")))
-    return (
-        joined.select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            cos.alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= threshold)
-    )
+    p = _cosine_prepared(df, id_col, vec_col, block_col, dim)
+    return _cosine_join(p, p, threshold, block_col, dim, F.col("a.id") < F.col("b.id"))
 
 
 def embedding_cosine_cross_pairs(
@@ -1467,42 +1554,16 @@ def embedding_cosine_cross_pairs(
     ``text.decontaminate``).  Also the shape of query-vs-corpus retrieval
     audits and new-batch-vs-index near-dup checks.
 
-    Same exactness contract as the self-join variant: norms are per-row
-    properties computed once per side, the dot product is the unrolled
-    sequential fold when ``dim`` is given, zero-norm vectors are excluded
-    before pairing (undefined direction; ANSI division guard).  Scale
+    Same exactness contract and the same join as the self-join variant,
+    over one prepared frame per side: norms computed once per side, the
+    dot product the unrolled sequential fold when ``dim`` is given, NULL
+    and zero-norm vectors dropped before pairing (they never pair).  Scale
     path: pass ``block_col`` (LSH bucket / IVF cell on BOTH sides) so the
     join is an equi-join on the block instead of a full cross; without it
     the smaller side should be broadcast-sized.
     """
-    from go_streaming_spark.functions import similarity as sim
-    from go_streaming_spark.functions.util import spread
-
-    def prep(df: DataFrame, side: str) -> DataFrame:
-        vec = F.col(vec_col).cast("array<double>")
-        nrm = sim.norm_expr_unrolled(vec, dim) if dim else sim.norm_expr(vec)
-        return (
-            spread(df)
-            .select(
-                F.col(id_col).alias(f"id_{side}"),
-                vec.alias(f"vec_{side}"),
-                nrm.alias(f"nrm_{side}"),
-                *([F.col(block_col).alias(f"blk_{side}")] if block_col else []),
-            )
-            .filter(F.col(f"nrm_{side}") > 0)
-        )
-
-    a, b = prep(left, "a"), prep(right, "b")
-    if block_col:
-        joined = a.join(b, on=F.col("blk_a") == F.col("blk_b"))
-    else:
-        joined = a.crossJoin(b)
-    va, vb = F.col("vec_a"), F.col("vec_b")
-    dot = sim.dot_expr_unrolled(va, vb, dim) if dim else sim.dot_expr(va, vb)
-    cos = q6(dot / (F.col("nrm_a") * F.col("nrm_b")))
-    return joined.select("id_a", "id_b", cos.alias("cos_sim")).filter(
-        F.col("cos_sim") >= threshold
-    )
+    a, b = (_cosine_prepared(f, id_col, vec_col, block_col, dim) for f in (left, right))
+    return _cosine_join(a, b, threshold, block_col, dim)
 
 
 def embedding_cosine_cross_pairs_blocked(
@@ -1520,85 +1581,25 @@ def embedding_cosine_cross_pairs_blocked(
     the leakage audit at sf0.1).
 
     Layout exploits the asymmetry of the audit (the probe side — test
-    split, query batch — is the small one): the LEFT side hash-partitions
-    into ``n_blocks`` (no replication), the RIGHT side replicates into
-    every block, and each block group computes its |A_blk|×|B| cosine
-    matrix with one numpy matmul.  Shuffle volume is n_left + n_blocks ×
-    n_right rows — versus the symmetric block-pair scheme's (n_left +
-    n_right) × √-ish replication — so choose the smaller frame as
-    ``right``.  Exactness contract copied from
+    split, query batch — is the small one): the shared asymmetric block
+    layout (``_cross_block_scores``, also under
+    ``similarity.knn_join``) hash-partitions the LEFT side into
+    ``n_blocks`` (no replication), replicates the RIGHT side into every
+    block, and each block group computes its |A_blk|×|B| cosine matrix
+    with the family's one BLAS kernel.  Shuffle volume is n_left +
+    n_blocks × n_right rows — versus the symmetric block-pair scheme's
+    (n_left + n_right) × √-ish replication — so choose the smaller frame
+    as ``right``.  Exactness contract as in
     :func:`embedding_cosine_pairs_blocked`: BLAS scores only SELECT
     candidates inside a 2e-6 safety band; every emitted pair recomputes
     with the sequential d=0..dim-1 fold and q6-quantizes, so outputs are
-    bit-identical to the expression path and the DuckDB oracle.
-    Zero-norm vectors are excluded before pairing, as in the expression
-    path (threshold-independent).
+    bit-identical to the expression path and the DuckDB oracle.  NULL
+    and zero-norm vectors never pair, as in the expression path
+    (threshold-independent).
     """
-    vec = F.col(vec_col).cast("array<double>")
-    lv = spread(left).select(
-        F.col(id_col).alias("id"),
-        vec.alias("vec"),
-        F.lit(0).alias("side"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).cast("int").alias("_b"),
-    )
-    rv = (
-        spread(right)
-        .select(
-            F.col(id_col).alias("id"),
-            vec.alias("vec"),
-            F.lit(1).alias("side"),
-            F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1))).alias("_eb"),
-        )
-        .select("id", "vec", "side", F.col("_eb").cast("int").alias("_b"))
-    )
-    thr = float(threshold)
-
-    def score(key, pdf):
-        import numpy as np
-        import pandas as pd
-
-        empty = pd.DataFrame({"id_a": [], "id_b": [], "cos_sim": []})
-        side = pdf["side"].to_numpy()
-        la, rb = side == 0, side == 1
-        if not la.any() or not rb.any():
-            return empty
-        A = np.vstack(pdf["vec"].to_numpy()[la])
-        B = np.vstack(pdf["vec"].to_numpy()[rb])
-        ia_all = pdf["id"].to_numpy()[la]
-        ib_all = pdf["id"].to_numpy()[rb]
-        dim = A.shape[1]
-
-        def seq_norms(X):
-            s = np.zeros(X.shape[0])
-            for d in range(dim):
-                s += X[:, d] * X[:, d]
-            return np.sqrt(s)
-
-        na, nb = seq_norms(A), seq_norms(B)
-        ka_keep, kb_keep = na > 0, nb > 0  # zero-norm: no direction
-        if not ka_keep.any() or not kb_keep.any():
-            return empty
-        A, ia_all, na = A[ka_keep], ia_all[ka_keep], na[ka_keep]
-        B, ib_all, nb = B[kb_keep], ib_all[kb_keep], nb[kb_keep]
-
-        band = thr - 2e-6
-        S = (A @ B.T) / (na[:, None] * nb[None, :])
-        ka, kb = np.nonzero(S >= band)
-        if len(ka) == 0:
-            return empty
-        s = np.zeros(len(ka))
-        Ak, Bk = A[ka], B[kb]
-        for d in range(dim):
-            s += Ak[:, d] * Bk[:, d]
-        cs = np.floor(s / (na[ka] * nb[kb]) * 1e6 + 0.5) / 1e6
-        m = cs >= thr
-        return pd.DataFrame(
-            {"id_a": ia_all[ka][m], "id_b": ib_all[kb][m], "cos_sim": cs[m]}
-        )
-
-    return lv.unionByName(rv).groupBy("_b").applyInPandas(
-        score, "id_a long, id_b long, cos_sim double"
-    )
+    return _cross_block_scores(
+        left, right, id_col, vec_col, n_blocks, _band_pick(threshold)
+    ).filter(F.col("cos_sim") >= threshold)
 
 
 def gram_digest_positions(

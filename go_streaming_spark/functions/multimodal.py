@@ -262,8 +262,9 @@ def decode_media_meta(
     def run(batches: Iterator) -> Iterator:
         import pandas as pd
 
-        # local def: cloudpickle ships the parser by value (executor
-        # workers can't be assumed to have this package importable)
+        # a local name only: cloudpickle still pickles the module-level
+        # parser by reference, so workers must be able to import this
+        # package
         parse = parse_media_header
 
         for pdf in batches:
@@ -901,7 +902,8 @@ def content_stats(
         import numpy as np
         import pandas as pd
 
-        # local refs: cloudpickle ships the decoders by value
+        # local names only: cloudpickle pickles these module-level
+        # decoders by reference, so workers must import this package
         sniff, bmp_px, wav_pcm = parse_media_header, bmp_pixel_bytes, wav_pcm_samples
         png_px, gif_px, jpg_px = png_pixel_bytes, gif_pixel_bytes, jpeg_pixel_bytes
         avi_px, mp4_px = avi_frame_bytes, mp4_sample_bytes

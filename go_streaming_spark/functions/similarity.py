@@ -274,21 +274,22 @@ def build_lsh_index(
     dim: int,
     n_planes: int = 12,
     seed: int = 42,
-    cache: bool = True,
 ) -> DataFrame:
-    """One-time LSH index: the corpus with its ``_bucket`` column.
+    """One-time LSH index: the corpus with its ``_bucket`` column, as a
+    lazy frame.
 
     Bucket computation is the expensive half of an LSH query (n_planes
     dot products per row) — amortize it: build once, query many times.
-    At 100 TB, WRITE the result partitioned/bucketed by ``_bucket``
-    instead of caching, and every query becomes a partition-pruned scan.
+    Caching is the caller's job (``.cache()`` it for a query loop, as
+    ``dedup.MinHashIndex`` documents); at 100 TB, WRITE the result
+    partitioned by ``_bucket`` (:func:`save_lsh_index`) instead, and every
+    query becomes a partition-pruned scan.
     """
-    out = (
+    return (
         df.withColumn("_v", F.col(vec_col).cast("array<double>"))
         .withColumn("_bucket", F.expr(lsh_bucket_sql("_v", dim, n_planes, seed)))
         .drop("_v")
     )
-    return out.cache() if cache else out
 
 
 def save_lsh_index(index: DataFrame, path: str, n_planes: int, seed: int) -> None:
@@ -377,7 +378,7 @@ def ann_lsh_topk(
     this becomes a partition-pruned scan of ~(1+H)/2^H of the corpus.
     """
     dim = len(query_vec)
-    index = build_lsh_index(df, vec_col, dim, n_planes, seed, cache=False)
+    index = build_lsh_index(df, vec_col, dim, n_planes, seed)
     return lsh_query(
         index, id_col, vec_col, query_vec, k, n_planes, seed, multiprobe
     )
@@ -1193,17 +1194,19 @@ def knn_join(
     EVERY query row — the retrieval-training / serving-batch shape the
     single-query tiers (:func:`cosine_topk`, IVF, PQ) don't cover.
 
-    Layout mirrors ``dedup.embedding_cosine_cross_pairs_blocked``: the
-    corpus hash-partitions into ``n_blocks`` (no replication), queries
-    replicate into every block, each block scores its |C_blk|×|Q| matrix
-    with one numpy matmul and keeps, per query, only rows whose BLAS
-    score reaches the block's k-th best minus a 2e-6 safety band —
-    every survivor is rescored with the dimension-ordered fold and
-    q6-quantized, so emitted scores are bit-identical to the Column
-    expression path and the DuckDB oracle.  A global per-query window
-    (cos desc, id asc) cuts the ≤ n_blocks·(k+ties) candidates to the
-    final k.  Self-pairs (query id present in the corpus) are excluded;
-    zero-norm vectors on either side never pair.
+    Runs on the cosine-pair family's shared asymmetric block layout and
+    BLAS kernel (``dedup._cross_block_scores``, as
+    ``dedup.embedding_cosine_cross_pairs_blocked``): the corpus
+    hash-partitions into ``n_blocks`` (no replication), queries replicate
+    into every block, each block scores its |C_blk|×|Q| matrix with one
+    numpy matmul and keeps, per query, only rows whose BLAS score reaches
+    the block's k-th best minus a 2e-6 safety band — every survivor is
+    rescored with the dimension-ordered fold and q6-quantized, so
+    emitted scores are bit-identical to the Column expression path and
+    the DuckDB oracle.  A global per-query window (cos desc, id asc) cuts
+    the ≤ n_blocks·(k+ties) candidates to the final k.  Self-pairs (query
+    id present in the corpus) are excluded; NULL and zero-norm vectors
+    on either side never pair.
 
     Emits (query_id, neighbor_id, cos_sim, rank), rank 1..k.
 
@@ -1216,58 +1219,15 @@ def knn_join(
         raise ValueError("k must be >= 1")
     from pyspark.sql.window import Window
 
-    from go_streaming_spark.functions.util import spread
+    from go_streaming_spark.functions.dedup import _cross_block_scores
 
-    vec = F.col(vec_col).cast("array<double>")
-    cv = spread(corpus).select(
-        F.col(id_col).alias("id"),
-        vec.alias("vec"),
-        F.lit(0).alias("side"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).cast("int").alias("_b"),
-    )
-    qv = (
-        spread(queries)
-        .select(
-            F.col(id_col).alias("id"),
-            vec.alias("vec"),
-            F.lit(1).alias("side"),
-            F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1))).alias("_eb"),
-        )
-        .select("id", "vec", "side", F.col("_eb").cast("int").alias("_b"))
-    )
     kk = int(k)
 
-    def score(key, pdf):
+    def pick(S, ic, iq):
         import numpy as np
-        import pandas as pd
 
-        empty = pd.DataFrame({"query_id": [], "neighbor_id": [], "cos_sim": []})
-        side = pdf["side"].to_numpy()
-        lc, lq = side == 0, side == 1
-        if not lc.any() or not lq.any():
-            return empty
-        C = np.vstack(pdf["vec"].to_numpy()[lc])
-        Q = np.vstack(pdf["vec"].to_numpy()[lq])
-        ic = pdf["id"].to_numpy()[lc]
-        iq = pdf["id"].to_numpy()[lq]
-        dim = C.shape[1]
-
-        def seq_norms(X):
-            s = np.zeros(X.shape[0])
-            for d in range(dim):
-                s += X[:, d] * X[:, d]
-            return np.sqrt(s)
-
-        nc, nq = seq_norms(C), seq_norms(Q)
-        c_keep, q_keep = nc > 0, nq > 0  # zero-norm: no direction
-        if not c_keep.any() or not q_keep.any():
-            return empty
-        C, ic, nc = C[c_keep], ic[c_keep], nc[c_keep]
-        Q, iq, nq = Q[q_keep], iq[q_keep], nq[q_keep]
-
-        S = (C @ Q.T) / (nc[:, None] * nq[None, :])  # corpus × queries
         S[ic[:, None] == iq[None, :]] = -np.inf  # self-pairs out
-        out_c, out_q = [], []
+        out_c, out_q = [np.zeros(0, np.intp)], [np.zeros(0, np.intp)]
         for j in range(S.shape[1]):
             col = S[:, j]
             valid = np.isfinite(col)
@@ -1282,21 +1242,10 @@ def knn_join(
             sel = np.nonzero(valid & (col >= kth - 2e-6))[0]
             out_c.append(sel)
             out_q.append(np.full(len(sel), j))
-        if not out_c:
-            return empty
-        ka = np.concatenate(out_c)
-        kb = np.concatenate(out_q)
-        s = np.zeros(len(ka))
-        Ck, Qk = C[ka], Q[kb]
-        for d in range(dim):
-            s += Ck[:, d] * Qk[:, d]
-        cs = np.floor(s / (nc[ka] * nq[kb]) * 1e6 + 0.5) / 1e6
-        return pd.DataFrame(
-            {"query_id": iq[kb], "neighbor_id": ic[ka], "cos_sim": cs}
-        )
+        return np.concatenate(out_c), np.concatenate(out_q)
 
-    cand = cv.unionByName(qv).groupBy("_b").applyInPandas(
-        score, "query_id long, neighbor_id long, cos_sim double"
+    cand = _cross_block_scores(corpus, queries, id_col, vec_col, n_blocks, pick).select(
+        F.col("id_b").alias("query_id"), F.col("id_a").alias("neighbor_id"), "cos_sim"
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), F.col("neighbor_id")

@@ -284,10 +284,12 @@ def test_cross_pairs_blocked_matches_expression_path(spark):
 
 def test_cross_pairs_blocked_zero_norm_and_empty_sides(spark):
     left = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [0.0, 0.0])], "vec_id long, embedding array<double>"
+        [(1, [1.0, 0.0]), (2, [0.0, 0.0]), (3, None)],
+        "vec_id long, embedding array<double>",
     )
     right = spark.createDataFrame(
-        [(10, [2.0, 0.0]), (11, [0.0, 0.0])], "vec_id long, embedding array<double>"
+        [(10, [2.0, 0.0]), (11, [0.0, 0.0]), (12, None)],
+        "vec_id long, embedding array<double>",
     )
     got = {
         (r["id_a"], r["id_b"]): r["cos_sim"]
@@ -295,8 +297,8 @@ def test_cross_pairs_blocked_zero_norm_and_empty_sides(spark):
             left, right, "vec_id", "embedding", -1.0, n_blocks=3
         ).collect()
     }
-    # zero-norm vectors excluded on BOTH sides even at a permissive
-    # threshold (the expression-path contract)
+    # zero-norm and NULL vectors excluded on BOTH sides even at a
+    # permissive threshold (the expression-path contract)
     assert got == {(1, 10): 1.0}
 
 

@@ -470,10 +470,11 @@ def test_embedding_cosine_blocked_matches_expression(spark):
     # sequential-order accumulation on both paths: bit-identical
     assert e == b
 
-    # a zero vector has no direction: neither path pairs it, even at a
-    # threshold every other pair clears
+    # a zero or NULL vector has no direction: neither path pairs it, even
+    # at a threshold every other pair clears
     zero = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [0.0, 0.0]), (3, [0.0, 1.0]), (4, [1.0, 1.0])],
+        [(1, [1.0, 0.0]), (2, [0.0, 0.0]), (3, [0.0, 1.0]), (4, [1.0, 1.0]),
+         (5, None)],
         "vec_id long, embedding array<double>",
     )
     e0 = {tuple(r) for r in dedup.embedding_cosine_pairs(
@@ -481,6 +482,43 @@ def test_embedding_cosine_blocked_matches_expression(spark):
     b0 = {tuple(r) for r in dedup.embedding_cosine_pairs_blocked(
         zero, "vec_id", "embedding", 0.0, n_blocks=2).collect()}
     assert b0 == e0 and {(1, 3), (1, 4), (3, 4)} == {p[:2] for p in e0}
+
+
+def test_cosine_kernel_ships_by_value(tmp_path):
+    """The block UDFs' BLAS kernel must load and run in a Python that
+    cannot import this package: cloudpickle ships a closure by value but
+    a module-level function by reference."""
+    import json
+    import subprocess
+    import sys
+
+    import numpy as np
+    from pyspark import cloudpickle
+
+    scores = dedup._cosine_scorer(dedup._band_pick(0.5))
+    args = (
+        np.array([[1.0, 0.0], [0.0, 0.0], [1.0, 0.1]]),
+        np.array([[2.0, 0.0], [0.0, 1.0]]),
+        np.array([1, 2, 3]),
+        np.array([10, 11]),
+    )
+    want = [a.tolist() for a in scores(*args)]
+    code = (
+        "import json, pickle, sys\n"
+        "f, args = pickle.loads(sys.stdin.buffer.read())\n"
+        "out = [a.tolist() for a in f(*args)]\n"
+        "print(json.dumps([out, sorted(m for m in sys.modules"
+        " if m.startswith('go_streaming_spark'))]))\n"
+    )
+    run = subprocess.run(
+        [sys.executable, "-I", "-c", code],
+        input=cloudpickle.dumps((scores, args)),
+        capture_output=True, cwd=tmp_path, timeout=60,
+    )
+    assert run.returncode == 0, run.stderr.decode()
+    got, imported = json.loads(run.stdout)
+    assert got == want and want[0] == [1, 3]
+    assert imported == []
 
 
 def test_transform_media_chain(spark):
@@ -2564,6 +2602,28 @@ def test_knn_join_matches_per_query_brute_force(spark):
         assert by_q[qid] == expect, qid
     emb.unpersist()
 
+    # NULL and zero vectors never pair, and blocks outnumber rows (most
+    # blocks hold queries only)
+    small = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, None), (3, [1.0, 0.1]), (4, [0.0, 1.0]),
+         (5, [0.0, 0.0])],
+        "vec_id long, embedding array<double>",
+    )
+    out = similarity.knn_join(
+        small, small, "vec_id", "embedding", k=2, n_blocks=16
+    ).collect()
+    by_q = {}
+    for r in sorted(out, key=lambda r: (r["query_id"], r["rank"])):
+        by_q.setdefault(r["query_id"], []).append(
+            (r["neighbor_id"], r["cos_sim"])
+        )
+    assert set(by_q) == {1, 3, 4}
+    for qid, vec in ((1, [1.0, 0.0]), (3, [1.0, 0.1]), (4, [0.0, 1.0])):
+        brute = similarity.cosine_topk(
+            small.filter(F.col("vec_id") != qid), "vec_id", "embedding", vec, 2
+        ).collect()
+        assert by_q[qid] == [(r["id"], r["cos_sim"]) for r in brute], qid
+
 
 def test_bpe_encode_matches_python_reference(spark):
     """Corpus-wide encode must equal a per-word pure-Python greedy merge
@@ -3287,7 +3347,7 @@ def test_lsh_index_save_load_round_trip(spark, tmp_path):
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     qv = rows[5][1]
-    idx = sim.build_lsh_index(df, "embedding", dim=8, n_planes=6, cache=False)
+    idx = sim.build_lsh_index(df, "embedding", dim=8, n_planes=6)
     direct = sim.lsh_query(idx, "vec_id", "embedding", qv, k=5, n_planes=6).collect()
 
     path = str(tmp_path / "lshidx")
