@@ -29,13 +29,19 @@ pruning do this for free).
 
 from __future__ import annotations
 
+import sys
 from collections.abc import Callable, Iterator
 
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from go_streaming_spark.functions.util import spread
+
+# Python workers cannot be assumed to import this package, so the
+# decoders the mapInPandas bodies call ship with them by value
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 MEDIA_META_SCHEMA = T.StructType(
     [
@@ -262,14 +268,9 @@ def decode_media_meta(
     def run(batches: Iterator) -> Iterator:
         import pandas as pd
 
-        # a local name only: cloudpickle still pickles the module-level
-        # parser by reference, so workers must be able to import this
-        # package
-        parse = parse_media_header
-
         for pdf in batches:
             metas = [
-                parse(bytes(b) if b is not None else b"")
+                parse_media_header(bytes(b) if b is not None else b"")
                 for b in pdf["_media"]
             ]
             yield pd.DataFrame(
@@ -902,19 +903,15 @@ def content_stats(
         import numpy as np
         import pandas as pd
 
-        # local names only: cloudpickle pickles these module-level
-        # decoders by reference, so workers must import this package
-        sniff, bmp_px, wav_pcm = parse_media_header, bmp_pixel_bytes, wav_pcm_samples
-        png_px, gif_px, jpg_px = png_pixel_bytes, gif_pixel_bytes, jpeg_pixel_bytes
-        avi_px, mp4_px = avi_frame_bytes, mp4_sample_bytes
         BYTE_DECODERS = {
-            "bmp": bmp_px, "png": png_px, "gif": gif_px,
-            "jpeg": jpg_px, "avi": avi_px, "mp4": mp4_px,
+            "bmp": bmp_pixel_bytes, "png": png_pixel_bytes,
+            "gif": gif_pixel_bytes, "jpeg": jpeg_pixel_bytes,
+            "avi": avi_frame_bytes, "mp4": mp4_sample_bytes,
         }
 
         def stats_row(b) -> tuple:
             p = bytes(b) if b is not None else b""
-            fmt = sniff(p)["format"]
+            fmt = parse_media_header(p)["format"]
             # the moments run over the RAW byte/sample buffer as numpy
             # int64 reductions — a Python list() + sum() loop here is a
             # per-UNIT interpreter walk, the slow tier at real media
@@ -928,7 +925,7 @@ def content_stats(
                     return (fmt, None, None, None, None, None)
                 arr = np.frombuffer(raw, dtype=np.uint8)
             elif fmt == "wav":
-                units = wav_pcm(p)
+                units = wav_pcm_samples(p)
                 if units is None:
                     return (fmt, None, None, None, None, None)
                 arr = np.asarray(units, dtype=np.int64)

@@ -14,19 +14,22 @@
   ``nprobe`` nearest centroids.
 - :func:`save_ivf_index` / :func:`ivf_pruned_topk` and its manifest,
   filtered and audit siblings — the same index persisted as one
-  partition directory per cell, opened by :func:`_open_ivf` (centroid
-  rows read on the driver, the vectors frame built from a footer
-  schema); a local-root probe runs one Spark job, the partition-pruned
-  candidate scan.
+  partition directory per cell, opened by :func:`_ivf_layout`
+  (centroid rows read on the driver) and :func:`_vectors_frame` (the
+  vectors frame built from a footer schema).
+  On a local root :func:`ivf_pruned_topk` runs no Spark job: it reads
+  the probed cells' files with pyarrow and ranks them on the driver
+  (:func:`_local_topk`).  A non-local root keeps the Spark scan, where
+  the cell filter prunes partitions (:func:`_ivf_scan_topk`).
 
 Every IVF variant picks its cells the same way: the centroid rows are
 ranked in Python with ``cosine_topk``'s exact arithmetic
 (:func:`_rank_cells`) and the candidates are the rows whose cluster is
-in the ``nprobe`` best (:func:`_probe_cells`).
+in the ``nprobe`` best (:func:`_probe_cells`, :func:`_cell_dirs`).
 
 Corpus-side vector math is native Column expressions (unrolled
 left-to-right sums — deterministic order, JVM codegen); the few
-Python-side twins (:func:`_rank_cells`, :func:`quantize_vec`) repeat
+Python-side twins (:func:`_q6_cosines`, :func:`quantize_vec`) repeat
 the same double ops, so driver and engine agree bit for bit.
 """
 
@@ -434,10 +437,10 @@ def ivf_topk(
     nprobe cells)``.  At scale the corpus is written partitioned by
     cluster (:func:`save_ivf_index`) so the same filter prunes partitions.
     """
-    cand = _probe_cells(
-        df, cluster_col, _cell_rows(centroids, cluster_col), query_vec, nprobe
+    return _ivf_scan_topk(
+        df, id_col, vec_col, cluster_col, _cell_rows(centroids, cluster_col),
+        query_vec, k, nprobe,
     )
-    return cosine_topk(cand, id_col, vec_col, query_vec, k)
 
 
 def save_ivf_index(
@@ -542,18 +545,15 @@ def _cell_rows(centroids: DataFrame, cluster_col: str) -> list:
     return [tuple(r) for r in centroids.select(cluster_col, "vec").collect()]
 
 
-def _open_ivf(spark, path: str, cluster_col: str):
-    """(centroid rows, vectors frame) of a :func:`save_ivf_index` layout,
-    opened without a Spark job on a local root.
+def _ivf_layout(spark, path: str, cluster_col: str):
+    """(centroid rows, cluster type) of a :func:`save_ivf_index`
+    layout, read without a Spark job on a local root.
 
     One walk of ``centroids/`` reads each file's ``(cluster, vec)``
     rows with pyarrow, and the first Spark footer among them gives the
-    cluster column's Spark type.  The vectors frame is
-    ``spark.read.schema(S)``, where ``S`` is the schema Spark stored in
-    one vectors data file's footer plus the partition column with that
-    type, so no schema-inference job runs.  Non-local roots read the
-    centroids through Spark (:func:`_cell_rows`) and, like files another
-    writer made, keep Spark's schema inference."""
+    cluster column's Spark type.  The type is ``None`` on a non-local
+    root, whose centroids are read through Spark (:func:`_cell_rows`),
+    and for files another writer made."""
     import pyarrow.parquet as pq
 
     from go_streaming_spark.functions.util import _local_fs_path
@@ -561,8 +561,8 @@ def _open_ivf(spark, path: str, cluster_col: str):
     local = _local_fs_path(path)
     files = [] if local is None else list(_data_files(f"{local}/centroids"))
     if not files:
-        rows = _cell_rows(spark.read.parquet(f"{path}/centroids"), cluster_col)
-        return rows, spark.read.parquet(f"{path}/vectors")
+        cents = spark.read.parquet(f"{path}/centroids")
+        return _cell_rows(cents, cluster_col), None
     rows, cents = [], None
     for f in files:
         with pq.ParquetFile(f) as pf:
@@ -570,12 +570,41 @@ def _open_ivf(spark, path: str, cluster_col: str):
             if cents is None:
                 cents = _spark_schema(pf.metadata)
         rows += zip(t[cluster_col].to_pylist(), t["vec"].to_pylist())
-    first = next(_data_files(f"{local}/vectors"), None)
-    vecs = None if first is None else _spark_schema(pq.read_metadata(first))
-    if cents is None or vecs is None:
-        return rows, spark.read.parquet(f"{path}/vectors")
-    vecs.add(cluster_col, cents[cluster_col].dataType)
-    return rows, spark.read.schema(vecs).parquet(f"{path}/vectors")
+    return rows, None if cents is None else cents[cluster_col].dataType
+
+
+def _vectors_schema(files, cluster_col: str, ctype):
+    """The schema Spark stored in the footer of the first of ``files``
+    (vectors data files) plus the partition column with type
+    ``ctype``; ``None`` without such a footer."""
+    import pyarrow.parquet as pq
+
+    first = next(iter(files), None)
+    schema = None if first is None else _spark_schema(pq.read_metadata(first))
+    if schema is not None:
+        schema.add(cluster_col, ctype)
+    return schema
+
+
+def _vectors_frame(spark, path: str, cluster_col: str, ctype) -> DataFrame:
+    """The vectors of a :func:`save_ivf_index` layout as a Spark frame:
+    ``spark.read.schema(S)`` with ``S`` from :func:`_vectors_schema`, so
+    no schema-inference job runs.  Without a cluster type
+    (:func:`_ivf_layout`) or a vectors footer, Spark infers the schema."""
+    from go_streaming_spark.functions.util import _local_fs_path
+
+    schema = None if ctype is None else _vectors_schema(
+        _data_files(f"{_local_fs_path(path)}/vectors"), cluster_col, ctype
+    )
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(f"{path}/vectors")
+
+
+def _open_ivf(spark, path: str, cluster_col: str):
+    """(centroid rows, vectors frame) of a :func:`save_ivf_index`
+    layout; see :func:`_ivf_layout` and :func:`_vectors_frame`."""
+    rows, ctype = _ivf_layout(spark, path, cluster_col)
+    return rows, _vectors_frame(spark, path, cluster_col, ctype)
 
 
 def _rank_key(cid, score):
@@ -584,36 +613,70 @@ def _rank_key(cid, score):
     return (score is None, 0.0 if score is None else -score, cid is not None, cid)
 
 
-def _q6_cosine(vec, q: list[float], qn: float):
-    """One row of :func:`cosine_topk`'s ``cos_sim``, in the same double
-    ops: left-to-right sums, ``sqrt(vnorm) * qn``, NULL on a zero
-    denominator or a NULL component, then ``floor(x*1e6 + 0.5)/1e6``,
-    whose ``floor`` returns a long (Java's ``(long)`` cast turns NaN
-    into 0)."""
-    if vec is None or None in vec[: len(q)]:
-        return None
-    v = [float(x) for x in vec[: len(q)]]
-    dot, vnorm = v[0] * q[0], v[0] * v[0]
-    for i in range(1, len(q)):
-        dot = dot + v[i] * q[i]
-        vnorm = vnorm + v[i] * v[i]
-    den = math.sqrt(vnorm) * qn
-    if den == 0.0:
-        return None
-    y = (dot / den) * 1e6 + 0.5
-    return 0.0 if y != y else math.floor(y) / 1e6
+def _q6_cosines(vecs, q: list[float]):
+    """:func:`cosine_topk`'s ``cos_sim`` for every vector of an Arrow
+    list array, as a float64 numpy array with NaN for a NULL score.
+
+    The double ops are Spark's, vectorized across rows: ``dot`` and
+    ``vnorm`` fold over the first ``len(q)`` components left to right,
+    then ``sqrt(vnorm) * qn`` and ``floor(x*1e6 + 0.5)/1e6``, whose
+    ``floor`` returns a long (Java's ``(long)`` cast turns NaN into 0
+    and saturates at ±2^63).  The score is NULL for a NULL vector, a
+    NULL component or a zero denominator, so a NaN quotient, which
+    rounds to 0.0, never collides with the NULL marker.  A vector
+    shorter than the query raises ``IndexError``, as Spark's
+    ``INVALID_ARRAY_INDEX`` does."""
+    import numpy as np
+
+    dim = len(q)
+    lens = vecs.value_lengths().fill_null(0).to_numpy(zero_copy_only=False)
+    rows = np.flatnonzero(vecs.is_valid().to_numpy(zero_copy_only=False))
+    short = rows[lens[rows] < dim]
+    if short.size:
+        n = int(lens[short[0]])
+        raise IndexError(
+            f"[INVALID_ARRAY_INDEX] The index {n} is out of bounds. "
+            f"The array has {n} elements."
+        )
+    flat = vecs.flatten()
+    at = (np.cumsum(lens) - lens)[rows][:, None] + np.arange(dim)
+    vals = flat.fill_null(0.0).to_numpy(zero_copy_only=False)
+    x = vals.astype(np.float64, copy=False)[at].T
+    dot, vnorm = x[0] * q[0], x[0] * x[0]
+    for i in range(1, dim):
+        dot = dot + x[i] * q[i]
+        vnorm = vnorm + x[i] * x[i]
+    with np.errstate(all="ignore"):
+        den = np.sqrt(vnorm) * _query_norm(q)
+        y = np.floor((dot / den) * 1e6 + 0.5)
+    y = np.where(y != y, 0.0, np.clip(y, -(2.0**63), 2.0**63)) / 1e6
+    null = flat.is_null().to_numpy(zero_copy_only=False)[at].any(axis=1)
+    y[null | (den == 0.0)] = np.nan
+    out = np.full(len(vecs), np.nan)
+    out[rows] = y
+    return out
+
+
+def _ranked(pairs) -> list:
+    """``(id, cos_sim)`` pairs in :func:`cosine_topk`'s order."""
+    return sorted(pairs, key=lambda r: _rank_key(*r))
+
+
+def _scored(ids: list, scores) -> list:
+    """``(id, cos_sim)`` pairs from :func:`_q6_cosines` scores, with
+    NaN as NULL."""
+    return list(zip(ids, [None if s != s else s for s in scores.tolist()]))
 
 
 def _rank_cells(rows, query_vec: list[float]) -> list:
     """:func:`cosine_topk` of the centroid rows with ``k=len(rows)``, on
     the driver: every ``(cluster, vec)`` row as ``(cluster, cos_sim)``, in
     :func:`cosine_topk`'s order with its exact arithmetic."""
+    import pyarrow as pa
+
+    vecs = pa.array([v for _, v in rows], pa.list_(pa.float64()))
     q = [float(x) for x in query_vec]
-    qn = _query_norm(q)
-    return sorted(
-        ((cid, _q6_cosine(vec, q, qn)) for cid, vec in rows),
-        key=lambda r: _rank_key(*r),
-    )
+    return _ranked(_scored([c for c, _ in rows], _q6_cosines(vecs, q)))
 
 
 def _check_nprobe(nprobe: int) -> None:
@@ -621,15 +684,113 @@ def _check_nprobe(nprobe: int) -> None:
         raise ValueError(f"nprobe must be >= 0, got {nprobe}")
 
 
+def _in_cells(cluster_col: str, cells) -> Column:
+    """``cluster IN (cells)``; a NULL cell also matches the NULL
+    cluster's rows, which ``IN`` alone never does."""
+    cond = F.col(cluster_col).isin([c for c in cells if c is not None])
+    return cond | F.col(cluster_col).isNull() if None in cells else cond
+
+
 def _probe_cells(df: DataFrame, cluster_col: str, rows, query_vec: list[float],
                  nprobe: int) -> DataFrame:
     """``df`` restricted to the ``nprobe`` cells nearest the query: the
     centroid ``rows`` are ranked with :func:`_rank_cells` and the filter
-    is ``cluster IN (cells)``, which a ``partitionBy(cluster)`` layout
-    turns into partition pruning."""
+    is :func:`_in_cells`, which a ``partitionBy(cluster)`` layout turns
+    into partition pruning."""
     _check_nprobe(nprobe)
     cells = [c for c, _ in _rank_cells(rows, query_vec)[:nprobe]]
-    return df.filter(F.col(cluster_col).isin(cells))
+    return df.filter(_in_cells(cluster_col, cells))
+
+
+def _ivf_scan_topk(vecs: DataFrame, id_col: str, vec_col: str,
+                   cluster_col: str, rows, query_vec: list[float], k: int,
+                   nprobe: int) -> DataFrame:
+    """The Spark probe: :func:`cosine_topk` over the rows of ``vecs`` in
+    the ``nprobe`` cells nearest the query (:func:`_probe_cells`)."""
+    cand = _probe_cells(vecs, cluster_col, rows, query_vec, nprobe)
+    return cosine_topk(cand, id_col, vec_col, query_vec, k)
+
+
+# how Spark reads a partition directory's value back into the cluster
+# column's type (keyed by ``DataType.typeName()``); a local probe of a
+# layout clustered on another type falls back to the Spark scan
+_PARTITION_PARSERS = {
+    "string": str, "byte": int, "short": int, "integer": int, "long": int,
+    "double": float,
+}
+
+
+def _unescape_path_name(name: str) -> str:
+    """Undo Spark's partition path escaping (``/`` → ``%2F``, ...)."""
+    import re
+
+    return re.sub(r"%([0-9A-Fa-f]{2})", lambda m: chr(int(m[1], 16)), name)
+
+
+def _cell_dirs(vectors: str, cluster_col: str, parse, cells) -> list[str]:
+    """The partition directories under ``vectors`` that hold the given
+    cells.  Each ``cluster=value`` name is read as Spark reads it:
+    escapes decoded, ``__HIVE_DEFAULT_PARTITION__`` as NULL, the rest
+    parsed into the cluster type.  A cell with no directory has no
+    rows."""
+    import os
+
+    want = set(cells)
+    out = []
+    for name in sorted(os.listdir(vectors)):
+        key, eq, raw = name.partition("=")
+        if not eq or _unescape_path_name(key) != cluster_col:
+            continue
+        value = (
+            None if raw == "__HIVE_DEFAULT_PARTITION__"
+            else parse(_unescape_path_name(raw))
+        )
+        if value in want:
+            out.append(os.path.join(vectors, name))
+    return out
+
+
+def _local_topk(files, id_col: str, vec_col: str, q: list[float],
+                k: int) -> list:
+    """:func:`cosine_topk` over parquet data files, on the driver: the
+    files are read one record batch at a time with pyarrow, and only a
+    running top-k of ``(id, cos_sim)`` pairs is kept between batches."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    best: list = []
+    for f in files:
+        with pq.ParquetFile(f) as pf:
+            for batch in pf.iter_batches(columns=[id_col, vec_col]):
+                s = _q6_cosines(batch.column(vec_col), q)
+                keep = np.flatnonzero(s == s)
+                if 0 < k <= keep.size:
+                    # rows below the batch's k-th best score cannot
+                    # enter; rows tied with it can, on the id
+                    kth = np.partition(s[keep], keep.size - k)[keep.size - k]
+                    keep = keep[s[keep] >= kth]
+                else:
+                    keep = np.arange(len(s))
+                ids = batch.column(id_col).take(keep).to_pylist()
+                best = _ranked(best + _scored(ids, s[keep]))[:k]
+    return best
+
+
+def _topk_frame(spark, best: list, id_type) -> DataFrame:
+    """``(id, cos_sim)`` pairs as a frame with :func:`cosine_topk`'s
+    columns, built from an Arrow table, so collecting it runs no Spark
+    job."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    schema = StructType([
+        StructField("id", id_type), StructField("cos_sim", DoubleType()),
+    ])
+    table = pa.Table.from_pylist(
+        [{"id": i, "cos_sim": s} for i, s in best], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)
 
 
 # Rebuild threshold for ivf_needs_rebuild: a cell holding >4× the mean
@@ -821,18 +982,42 @@ def ivf_pruned_topk(
 ) -> DataFrame:
     """ANN top-k against a :func:`save_ivf_index` layout — result ≡
     :func:`ivf_topk` on the same corpus/centroids; only the PHYSICAL
-    path differs: :func:`_open_ivf` reads the centroid rows on the
-    driver (|clusters| rows), :func:`_probe_cells` picks the ``nprobe``
-    nearest cells as :func:`ivf_topk` does, and the candidate scan
-    reads ONLY those clusters' partitions
-    (partition pruning — plan-asserted in
-    test_plans.py::test_ivf_pruned_index_scan).  On a local root the
-    scan is the probe's only Spark job.  Per query the cluster touches
-    ~``nprobe/|clusters|`` of the corpus, independent of total corpus
-    size."""
-    rows, vecs = _open_ivf(spark, path, cluster_col)
-    cand = _probe_cells(vecs, cluster_col, rows, query_vec, nprobe)
-    return cosine_topk(cand, id_col, vec_col, query_vec, k)
+    path differs.  :func:`_ivf_layout` reads the centroid rows on the
+    driver (|clusters| rows) and :func:`_rank_cells` picks the
+    ``nprobe`` nearest cells as :func:`ivf_topk` does; only those
+    cells' files are read.  Per query the work is ~``nprobe/|clusters|``
+    of the corpus, independent of total corpus size.
+
+    On a local root the probe runs no Spark job: the probed cells'
+    partition directories (:func:`_cell_dirs`) are read with pyarrow
+    one record batch at a time and ranked on the driver with
+    :func:`cosine_topk`'s exact arithmetic and order
+    (:func:`_local_topk`); the top-k comes back as an Arrow-backed
+    frame, so collecting it runs none either.  A non-local root, or a
+    layout whose footers or cluster type the driver cannot read, keeps
+    the Spark scan (:func:`_ivf_scan_topk`), where the cell filter is
+    partition pruning (``PartitionFilters``)."""
+    from go_streaming_spark.functions.util import _local_fs_path
+
+    _check_nprobe(nprobe)
+    rows, ctype = _ivf_layout(spark, path, cluster_col)
+    parse = None if ctype is None else _PARTITION_PARSERS.get(ctype.typeName())
+    schema = None
+    if parse is not None:
+        vectors = f"{_local_fs_path(path)}/vectors"
+        cells = [c for c, _ in _rank_cells(rows, query_vec)[:nprobe]]
+        dirs = _cell_dirs(vectors, cluster_col, parse, cells)
+        files = [f for d in dirs for f in _data_files(d)]
+        # the id type comes from a probed file's footer, so the other
+        # cells' files are never opened
+        schema = _vectors_schema(files or _data_files(vectors), cluster_col, ctype)
+    if schema is None:
+        return _ivf_scan_topk(
+            _vectors_frame(spark, path, cluster_col, ctype), id_col, vec_col,
+            cluster_col, rows, query_vec, k, nprobe,
+        )
+    best = _local_topk(files, id_col, vec_col, [float(x) for x in query_vec], k)
+    return _topk_frame(spark, best, schema[id_col].dataType)
 
 
 def ivf_filtered_topk(
@@ -875,9 +1060,6 @@ def ivf_filtered_topk(
     raises ``ValueError``; ``nprobe=0`` still starts the walk at one cell,
     since the doubling needs a width to grow from.
     """
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
     _check_nprobe(nprobe)
     rows, vecs = _open_ivf(spark, path, cluster_col)
     ranked = [c for c, _ in _rank_cells(rows, query_vec)]
@@ -885,16 +1067,11 @@ def ivf_filtered_topk(
     lo, hi = 0, min(max(1, nprobe), len(ranked))
     while True:
         delta = ranked[lo:hi]
-        cand = vecs.filter(F.col(cluster_col).isin(delta)).filter(predicate)
+        cand = vecs.filter(_in_cells(cluster_col, delta)).filter(predicate)
         out = cosine_topk(cand, id_col, vec_col, query_vec, k)
-        best.extend(out.collect())
-        best.sort(key=lambda r: _rank_key(r["id"], r["cos_sim"]))
-        best = best[:k]
+        best = _ranked(best + [tuple(r) for r in out.collect()])[:k]
         if len(best) >= k or hi >= len(ranked):
-            table = pa.Table.from_pylist(
-                [r.asDict() for r in best], schema=to_arrow_schema(out.schema)
-            )
-            return spark.createDataFrame(table, out.schema)
+            return _topk_frame(spark, best, out.schema["id"].dataType)
         lo, hi = hi, min(hi * 2, len(ranked))
 
 

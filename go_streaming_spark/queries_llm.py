@@ -550,10 +550,12 @@ def ann_ivf_pruned_topk(spark, sf_dir):
     # the PERSISTED-index twin of ann_ivf_topk (same oracle — identical
     # semantics, different physical path): vectors written
     # partitionBy(cluster) once per snapshot (similarity.save_ivf_index),
-    # each query probes the tiny centroid table driver-side and scans
-    # ONLY the nprobe matching partitions (PartitionFilters prune the
-    # rest before any file is opened) — per-query cost ∝ nprobe inverted
-    # lists, independent of corpus size
+    # each query probes the tiny centroid table driver-side and reads
+    # ONLY the nprobe matching partitions — on this local root with
+    # pyarrow, scored on the driver with no Spark job; a non-local root
+    # runs a Spark scan whose PartitionFilters prune the rest before any
+    # file is opened — per-query cost ∝ nprobe inverted lists,
+    # independent of corpus size
     import shutil
     import tempfile
 

@@ -1,12 +1,14 @@
-"""The driver-side IVF probe: cell ranking in Python and the one-job scan.
+"""The driver-side IVF probe: cell ranking and candidate scoring in Python.
 
 Every IVF variant ranks the centroid rows on the driver
 (``similarity._rank_cells``) instead of running ``cosine_topk`` over
-them, and the path-based ones open the vectors frame with a footer
-schema instead of a schema-inference job.  These tests pin the ranking
-to Spark's ``cosine_topk`` bit for bit, count the probes' Spark jobs,
-and check every variant against its brute-force scorer when it probes
-every cell.
+them, and the path-based ones open the layout from its parquet footers
+instead of a schema-inference job.  On a local root ``ivf_pruned_topk``
+also scores the probed cells on the driver, so it runs no Spark job; a
+non-local root keeps the partition-pruned Spark scan.  These tests pin
+the driver-side scores to Spark's ``cosine_topk`` bit for bit, count the
+probes' Spark jobs, and check every variant against its brute-force
+scorer when it probes every cell.
 """
 
 from __future__ import annotations
@@ -91,9 +93,13 @@ def _job_count(spark, group, action):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_ivf_pruned_topk_runs_one_spark_job(spark, tmp_path):
-    """A probe of a local save_ivf_index + append_ivf_vectors layout runs
-    exactly one Spark job (the candidate scan) and equals ivf_topk, with
+def _rows(frame):
+    return [tuple(r) for r in frame.collect()]
+
+
+def test_ivf_pruned_topk_runs_no_spark_job(spark, tmp_path):
+    """A probe of a local save_ivf_index + append_ivf_vectors layout and
+    the collect of its result run no Spark job, and it equals ivf_topk, with
     write debris in the tree that Spark skips: _SUCCESS markers, .crc
     files and an in-flight append's _temporary directory holding a
     partial part file."""
@@ -121,14 +127,98 @@ def test_ivf_pruned_topk_runs_one_spark_job(spark, tmp_path):
             spark, path, "id", "vec", "cell", q, k=10, nprobe=2
         ).collect()
     ])
-    assert jobs == 1
+    assert jobs == 0
     want = similarity.ivf_topk(df, "id", "vec", "cell", cents, q, k=10, nprobe=2)
     assert got == [tuple(r) for r in want.collect()]
 
 
+def _layout_cases():
+    """Each _cases() table as IVF rows ``(id, vec, cluster)`` over three
+    int cells, its cell ids becoming row ids, plus inputs only the local
+    probe reads from files: a NULL vector and a NULL component, a vector
+    longer than the query, string cells that Spark escapes in directory
+    names and a NULL cell, and a probed cell with no vectors.  Returns
+    (name, rows, query, schema, cells)."""
+    out = [
+        (name, [(cid, vec, i % 3) for i, (cid, vec) in enumerate(rows)], q,
+         schema.replace("cell ", "id ", 1) + ", cluster int", [0, 1, 2])
+        for name, rows, q, schema in _cases()
+    ]
+    rng = random.Random(9)
+    vecs = _table(rng, 6, ints=False)
+    q = [rng.gauss(0.0, 1.0) for _ in range(DIM)]
+    schema = "id long, vec array<double>, cluster int"
+    out.append(("null_vector_and_component",
+                [(0, vecs[0], 0), (1, None, 1), (2, vecs[2][:2] + [None] + vecs[2][3:], 1),
+                 (3, vecs[3], 2)], q, schema, [0, 1, 2]))
+    out.append(("longer_vector",
+                [(i, v + [9.0, -9.0] if i % 2 else v, i % 3) for i, v in enumerate(vecs)],
+                q, schema, [0, 1, 2]))
+    cells = ["a/b", "x=y", "50%", "%2F", None]
+    out.append(("escaped_string_cells",
+                [(i, v, cells[i % 5]) for i, v in enumerate(vecs)], q,
+                "id long, vec array<double>, cluster string", cells))
+    out.append(("cell_without_vectors",
+                [(i, v, i % 2) for i, v in enumerate(vecs)], q, schema, [0, 1, 7]))
+    return out
+
+
+def _save_layout(spark, path, rows, schema, cells):
+    df = spark.createDataFrame(rows, schema)
+    rng = random.Random(3)
+    cents = spark.createDataFrame(
+        [(c, [rng.gauss(0.0, 1.0) for _ in range(DIM)]) for c in cells],
+        f"cluster {schema.rsplit(' ', 1)[1]}, vec array<double>",
+    )
+    similarity.save_ivf_index(df, "id", "vec", "cluster", cents, path)
+    return df, cents
+
+
+@pytest.mark.parametrize(
+    "name,rows,q,schema,cells", _layout_cases(), ids=[c[0] for c in _layout_cases()]
+)
+def test_local_probe_matches_cosine_topk(spark, tmp_path, name, rows, q, schema, cells):
+    """ivf_pruned_topk at nprobe=|cells| on a local layout runs no Spark
+    job and equals Spark's cosine_topk over the same rows: the same ids
+    in the same order, bit-identical cos_sim, the same id type.  So does
+    ivf_topk's Spark scan, whose NULL cell matches the NULL-cluster rows."""
+    df, cents = _save_layout(spark, str(tmp_path / "ivf"), rows, schema, cells)
+
+    def probe():
+        out = similarity.ivf_pruned_topk(
+            spark, str(tmp_path / "ivf"), "id", "vec", "cluster", q,
+            k=len(rows), nprobe=len(cells),
+        )
+        return out.schema, _rows(out)
+
+    (got_schema, got), jobs = _job_count(spark, f"local-probe-{name}", probe)
+    want = similarity.cosine_topk(df, "id", "vec", q, k=len(rows))
+    assert jobs == 0
+    assert got_schema == want.schema
+    assert got == _rows(want)
+    assert _rows(similarity.ivf_topk(
+        df, "id", "vec", "cluster", cents, q, k=len(rows), nprobe=len(cells)
+    )) == got
+
+
+def test_local_probe_short_vector_raises(spark, tmp_path):
+    """A vector shorter than the query fails the probe, as Spark's
+    cosine_topk fails with INVALID_ARRAY_INDEX."""
+    rows = [(0, [1.0] * DIM, 0), (1, [1.0] * (DIM - 1), 1)]
+    df, _ = _save_layout(spark, str(tmp_path / "ivf"), rows,
+                         "id long, vec array<double>, cluster int", [0, 1])
+    q = [1.0] * DIM
+    with pytest.raises(Exception, match="INVALID_ARRAY_INDEX"):
+        similarity.cosine_topk(df, "id", "vec", q).collect()
+    with pytest.raises(IndexError, match="INVALID_ARRAY_INDEX"):
+        similarity.ivf_pruned_topk(
+            spark, str(tmp_path / "ivf"), "id", "vec", "cluster", q, nprobe=2
+        )
+
+
 @pytest.fixture(scope="module")
 def layout(spark, tmp_path_factory):
-    """The layout of test_ivf_pruned_topk_runs_one_spark_job: 120 rows in
+    """The layout of test_ivf_pruned_topk_runs_no_spark_job: 120 rows in
     5 cells, half saved and half appended, with write debris, plus a
     serving manifest publishing it.  Returns (df, centroids, path,
     manifest root, query)."""
@@ -153,10 +243,6 @@ def layout(spark, tmp_path_factory):
     root = str(tmp / "serving")
     similarity.publish_ivf_epoch(spark, root, path, 0)
     return df, cents, path, root, [rng.gauss(0.0, 1.0) for _ in range(DIM)]
-
-
-def _rows(frame):
-    return [tuple(r) for r in frame.collect()]
 
 
 def test_ivf_filtered_topk_runs_one_spark_job(spark, layout):

@@ -521,6 +521,38 @@ def test_cosine_kernel_ships_by_value(tmp_path):
     assert imported == []
 
 
+def test_media_decoders_ship_by_value(tmp_path):
+    """The media header parser that decode_media_meta and content_stats
+    call on workers must load and run in a Python that cannot import
+    this package: the module registers itself with cloudpickle to ship
+    its functions by value."""
+    import json
+    import struct
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    bmp = (b"BM" + struct.pack("<IHHI", 0, 0, 0, 54)
+           + struct.pack("<IiiHH", 40, 800, -600, 1, 24) + b"\x00" * 24)
+    want = multimodal.parse_media_header(bmp)
+    code = (
+        "import json, pickle, sys\n"
+        "f, payload = pickle.loads(sys.stdin.buffer.read())\n"
+        "print(json.dumps([f(payload), sorted(m for m in sys.modules"
+        " if m.startswith('go_streaming_spark'))]))\n"
+    )
+    run = subprocess.run(
+        [sys.executable, "-I", "-c", code],
+        input=cloudpickle.dumps((multimodal.parse_media_header, bmp)),
+        capture_output=True, cwd=tmp_path, timeout=60,
+    )
+    assert run.returncode == 0, run.stderr.decode()
+    got, imported = json.loads(run.stdout)
+    assert got == want and (got["format"], got["width"]) == ("bmp", 800)
+    assert imported == []
+
+
 def test_transform_media_chain(spark):
     """Media transforms chain: attach -> transform -> extract, all Arrow
     paths, deterministic stub outputs."""

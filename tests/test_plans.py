@@ -466,11 +466,45 @@ def test_bucketed_index_ingest_join_no_index_exchange(spark):
         shutil.rmtree("spark-warehouse", ignore_errors=True)
 
 
+def _assert_probe_prunes(spark, path, qv):
+    """The two halves of "a probe reads only its nprobe cells" on a
+    save_ivf_index layout: the Spark scan a non-local root runs plans
+    the cell filter as PartitionFilters on the cluster column, and the
+    local probe, which has no scan plan, still answers once every
+    non-probed cell's part files are garbage, so it never opens them.
+    Returns the local probe's rows."""
+    import glob
+
+    from go_streaming_spark.functions import similarity
+
+    rows, _ = similarity._ivf_layout(spark, path, "label")
+    scan = similarity._ivf_scan_topk(
+        spark.read.parquet(f"{path}/vectors"), "vec_id", "embedding", "label",
+        rows, qv, 10, 2,
+    )
+    plan = _plan(scan)
+    part = plan.split("PartitionFilters: [", 1)
+    assert len(part) == 2, plan
+    assert part[1].lstrip().startswith("label#") and " IN (" in part[1][:200], plan
+    probed = {c for c, _ in similarity._rank_cells(rows, qv)[:2]}
+    spoiled = [
+        f for c, _ in rows if c not in probed
+        for f in glob.glob(f"{path}/vectors/label={c}/part-*")
+    ]
+    assert spoiled
+    for f in spoiled:
+        with open(f, "wb") as fh:
+            fh.write(b"not parquet")
+    out = similarity.ivf_pruned_topk(
+        spark, path, "vec_id", "embedding", "label", qv, k=10, nprobe=2
+    )
+    return [tuple(r) for r in out.collect()]
+
+
 def test_ivf_pruned_index_scan(spark, tmp_path):
-    """ivf_pruned_topk over a save_ivf_index layout must (a) plan the
-    candidate scan with PartitionFilters on the cluster column — the
-    non-probed inverted lists are pruned before any file is opened —
-    and (b) return exactly the in-memory ivf_topk result."""
+    """ivf_pruned_topk over a save_ivf_index layout reads only the
+    probed inverted lists (_assert_probe_prunes) and returns exactly
+    the in-memory ivf_topk result."""
     from go_streaming_spark.functions import similarity
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
@@ -480,24 +514,18 @@ def test_ivf_pruned_index_scan(spark, tmp_path):
     cent = similarity.label_centroids(corpus, "label", "embedding", dim=64)
     path = str(tmp_path / "ivf")
     similarity.save_ivf_index(corpus, "vec_id", "embedding", "label", cent, path)
-    out = similarity.ivf_pruned_topk(
-        spark, path, "vec_id", "embedding", "label", qv, k=10, nprobe=2
-    )
-    plan = _plan(out)
-    part = plan.split("PartitionFilters: [", 1)
-    assert len(part) == 2, plan
-    assert part[1].lstrip().startswith("label#") and " IN (" in part[1][:200], plan
+    got = _assert_probe_prunes(spark, path, qv)
     mem = similarity.ivf_topk(
         corpus, "vec_id", "embedding", "label", cent, qv, k=10, nprobe=2
     )
-    assert [tuple(r) for r in out.collect()] == [tuple(r) for r in mem.collect()]
+    assert got == [tuple(r) for r in mem.collect()]
 
 
 def test_ivf_append_matches_rebuild(spark, tmp_path):
     """append_ivf_vectors lands new vectors inside their cluster
     partitions: a pruned query over (seed + appended) equals ivf_topk
     over the unioned corpus with the same centroids — and the probe
-    scan still partition-prunes."""
+    still reads only its cells (_assert_probe_prunes)."""
     from go_streaming_spark.functions import similarity
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
@@ -510,14 +538,11 @@ def test_ivf_append_matches_rebuild(spark, tmp_path):
     path = str(tmp_path / "ivf")
     similarity.save_ivf_index(seed, "vec_id", "embedding", "label", cent, path)
     similarity.append_ivf_vectors(batch, "vec_id", "embedding", "label", path)
-    out = similarity.ivf_pruned_topk(
-        spark, path, "vec_id", "embedding", "label", qv, k=10, nprobe=2
-    )
-    assert "PartitionFilters: [" in _plan(out)
+    got = _assert_probe_prunes(spark, path, qv)
     mem = similarity.ivf_topk(
         corpus, "vec_id", "embedding", "label", cent, qv, k=10, nprobe=2
     )
-    assert [tuple(r) for r in out.collect()] == [tuple(r) for r in mem.collect()]
+    assert got == [tuple(r) for r in mem.collect()]
 
 
 def test_ivf_write_one_file_per_cluster(spark, tmp_path):
