@@ -19,9 +19,20 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Callable
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 from go_streaming_spark.operators.base import Operator
+
+
+def _sorted_whole(batch_df: DataFrame, cols: list) -> DataFrame:
+    """``batch_df`` sorted on ``cols`` in one partition, for a caller that
+    brings the whole batch to the driver anyway: Spark's own sort order
+    (ascending, NULLs first, NaN largest) in one job.  ``orderBy`` would
+    plan a range exchange whose partitioner first runs a sample job over
+    the whole plan, so a stateful stage below it would run, and load and
+    commit its state stores, twice per batch."""
+    return batch_df.repartition(1).sortWithinPartitions(*cols)
 
 
 def _check_order_args(ordered_by, global_order, max_out_of_order) -> None:
@@ -211,8 +222,11 @@ class ContinuousQuery:
         ``ordered_by=[cols]``: the sorted-delivery semantics of
         :meth:`subscribe` at BULK granularity — ``sink_fn(chunk)`` is
         called with consecutive ``chunk_rows``-sized pandas DataFrames in
-        key order (Arrow transfer, one distributed sort per micro-batch)
-        instead of one driver callback per row.  ``global_order=True``
+        key order instead of one driver callback per row.  Each
+        micro-batch is sorted in one partition by one Spark job and moves
+        by Arrow transfer: a distributed sort's range sample would run the
+        batch's stateful stages a second time, and the whole batch comes
+        to the driver anyway.  ``global_order=True``
         extends the order ACROSS micro-batches: rows park in a driver-side
         merge buffer; with ``max_out_of_order=d`` every batch drains the
         buffer up to the PRIMARY-key watermark ``max_seen - d`` (bounded memory ∝
@@ -241,7 +255,7 @@ class ContinuousQuery:
         else:
             push, drain = emit, None
         return self._start(
-            lambda batch_df, _: push(batch_df.orderBy(*cols).toPandas()),
+            lambda batch_df, _: push(_sorted_whole(batch_df, cols).toPandas()),
             output_mode, drain,
         )
 
@@ -286,9 +300,19 @@ class ContinuousQuery:
         cols = list(ordered_by or [])
         if not global_order:
             def dispatch(batch_df, _):
-                it = batch_df.orderBy(*cols) if cols else batch_df
-                for row in it.toLocalIterator():
-                    callback(row)
+                # the range sort's sample job and its map stage read one
+                # evaluation of the batch, so a stateful stage runs once;
+                # a frame the caller cached stays cached
+                owned = bool(cols) and batch_df.storageLevel == StorageLevel.NONE
+                if owned:
+                    batch_df.persist()
+                try:
+                    it = batch_df.orderBy(*cols) if cols else batch_df
+                    for row in it.toLocalIterator():
+                        callback(row)
+                finally:
+                    if owned:
+                        batch_df.unpersist()
 
             return self._start(dispatch, output_mode)
 
@@ -304,7 +328,7 @@ class ContinuousQuery:
         push, drain = self._reorder(cols, max_out_of_order, emit)
 
         def dispatch(batch_df, _):
-            rows = list(batch_df.orderBy(*cols).toLocalIterator())
+            rows = list(_sorted_whole(batch_df, cols).toLocalIterator())
             keys = pd.DataFrame([[r[c] for c in cols] for r in rows], columns=cols)
             keys[row_col] = pd.Series(rows, dtype=object)
             push(keys)

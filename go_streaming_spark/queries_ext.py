@@ -3562,7 +3562,7 @@ def ordered_bulk_delivery_replay(spark, sf_dir):
     # `pkg/pubsub/stream.go:297-319`): a bounded event slice scattered
     # across 8 id-hashed parquet files, replayed one file per trigger
     # through subscribe_batch(ordered_by, global_order=True) — each
-    # micro-batch is one distributed sort + Arrow transfer, the
+    # micro-batch is one single-partition sort + Arrow transfer, the
     # driver-side merge buffer restores GLOBAL key order, and the
     # callback sees pandas chunks instead of per-row calls (the bulk
     # sorted sink).  The result records chunk arrival order flattened

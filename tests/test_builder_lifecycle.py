@@ -632,3 +632,93 @@ def test_global_order_equal_keys_keep_arrival_order_across_batches(
     )
     cq2.await_done()
     assert rows == out == [5, 13, 11, 22], (rows, out)
+
+
+@pytest.mark.parametrize(
+    "method,global_order",
+    [("subscribe_batch", False), ("subscribe_batch", True),
+     ("subscribe", False), ("subscribe", True)],
+)
+def test_ordered_delivery_runs_stateful_stage_once(spark, tmp_path, method, global_order):
+    """Every ordered path evaluates a micro-batch's stateful stage once: a
+    keyed windowed aggregate over four files, one per micro-batch, reports
+    one state-store instance per shuffle partition in every batch (a range
+    sort's sample job would run the stage a second time).  The delivered
+    rows equal a pandas reference in (window_start, k) order, and the paths
+    that bring the whole batch to the driver run one Spark job per batch."""
+    import json as _json
+    import os as _os
+
+    import pandas as pd
+
+    from go_streaming_spark.operators import TemporalWindow, windowed_agg
+
+    src = tmp_path / "events"
+    src.mkdir()
+    events = []
+    for f in range(4):  # file f covers event seconds [10f, 10f + 10)
+        path = src / f"part-{f}.json"
+        with open(path, "w") as fh:
+            for i in range(12):
+                ev = {"ts": 10 * f + (7 * i) % 10, "k": (3 * i + f) % 5, "value": 100 * f + i}
+                events.append(ev)
+                fh.write(_json.dumps(ev) + "\n")
+        _os.utime(path, (1_700_000_000 + 10 * f,) * 2)
+    stream = (
+        spark.readStream.schema("ts long, k long, value long")
+        .option("maxFilesPerTrigger", 1)
+        .json(str(src))
+        .withColumn("event_start", F.timestamp_seconds("ts"))
+    )
+    agg = windowed_agg(
+        TemporalWindow("10 seconds"), [F.sum("value").alias("total")],
+        keys=("k",), lineage=False, emit_empty=False,
+    )
+    cq = Engine(spark).builder().from_df(stream).connect(agg).build()
+    cols = ["window_start", "k", "total"]
+    got: list = []
+    if method == "subscribe_batch":
+        cq.subscribe_batch(
+            lambda pdf: got.extend(pdf[cols].itertuples(index=False, name=None)),
+            ordered_by=["window_start", "k"], global_order=global_order,
+        )
+    else:
+        cq.subscribe(
+            lambda r: got.append(tuple(r[c] for c in cols)),
+            ordered_by=["window_start", "k"], global_order=global_order,
+        )
+    cq.await_done()
+
+    # zero-lateness append mode: the windows that end at or before the
+    # last event time are emitted, each once
+    ev = pd.DataFrame(events)
+    ev["w"] = ev["ts"] // 10 * 10
+    ref = ev[ev["w"] + 10 <= ev["ts"].max()].groupby(["w", "k"])["value"].sum()
+    want = [(w, k, int(total)) for (w, k), total in ref.items()]
+    assert len(want) == 15  # three closed windows, five keys each
+    assert [(int(pd.Timestamp(w).timestamp()), k, t) for w, k, t in got] == want
+
+    progress = cq._sq.recentProgress
+    ops = [p.stateOperators[0] for p in progress]
+    assert len(ops) >= 4
+    assert all(
+        op.numStateStoreInstances == op.numShufflePartitions for op in ops
+    ), [(op.numStateStoreInstances, op.numShufflePartitions) for op in ops]
+    if method == "subscribe_batch" or global_order:
+        jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(cq._sq.runId))
+        assert len(jobs) == len(progress)
+
+
+def test_per_event_subscribe_keeps_caller_cache(spark, engine):
+    """The per-row sorted path persists a frame only for its own
+    dispatch: a batch query over a frame the caller cached delivers in
+    order and leaves that frame cached."""
+    from pyspark import StorageLevel
+
+    df = engine.stream("ints").cache()
+    cq = engine.builder().from_df(df).build()
+    seen: list[int] = []
+    cq.subscribe(lambda row: seen.append(row.seq), ordered_by=["seq"])
+    assert seen == list(range(1, 11))
+    assert df.storageLevel != StorageLevel.NONE
+    df.unpersist()

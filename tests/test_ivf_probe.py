@@ -62,6 +62,17 @@ def _cases():
                 "cell long, vec array<double>"))
     out.append(("string_cells", [(f"c{i:02d}", v) for i, v in enumerate(tied)][::-1], q,
                 "cell string, vec array<double>"))
+    # a left-to-right fold absorbs each vector's 1.0 into the 1e16 before
+    # -1e16 cancels it, which leaves the score just under the q6 rounding
+    # boundary 5e-7; an exact or a BLAS-ordered sum keeps the 1.0 and
+    # rounds the score up to 1e-6
+    cancel = [
+        [1e16, 1.0, -1e16, 5773502691.897698, 5773502691.897698, 5773502691.897698],
+        [5773502691.846547, 1e16, 1.0, -1e16, 5773502691.846547, 5773502691.846547],
+        [5773502691.693097, 5773502691.693097, 1e16, 1.0, -1e16, 5773502691.693097],
+    ]
+    out.append(("catastrophic_cancellation", list(enumerate(cancel)), [1.0] * DIM,
+                "cell int, vec array<double>"))
     return out
 
 
@@ -80,6 +91,8 @@ def test_rank_cells_matches_cosine_topk(spark, name, rows, q, schema):
     if name == "all_zero_query":
         assert [s for _, s in got] == [None] * len(rows)
         assert [c for c, _ in got] == sorted(c for c, _ in rows)
+    if name == "catastrophic_cancellation":
+        assert [s for _, s in got] == [0.0] * len(rows)
 
 
 def _job_count(spark, group, action):

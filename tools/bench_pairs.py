@@ -1,19 +1,20 @@
 """Run interleaved parent/change pairs of one streambench workload.
 
     python3 tools/bench_pairs.py --parent ../parent-checkout --change . \\
-        --workload corpus_epochs --seeds 5,6,7 --pairs 10
+        --workload corpus_epochs --seeds 5,6,7 --pairs 10 [--trace 1]
 
 Each pair runs ``python3 streambench/run.py --workload W --seed S
---seconds 10 --trace 0`` once in each checkout, one after the other,
+--seconds 10 --trace T`` once in each checkout, one after the other,
 with the parent first in even pairs and the change first in odd ones;
 the seeds cycle over the pairs.  Both sides of a pair use the same seed.
-Every run prints one line with its end-to-end metrics and the
-``ext_cpu_cores`` it recorded: the CPU that processes outside the run
-used while it measured, which is how a busy host shows.  At the end,
-for every end-to-end metric of ``BENCHMARK.json``, the script prints
-each side's median and quartiles, how many pairs the change won (strictly
-better, in the metric's direction), and the gap between the medians
-against the parent's interquartile range.  ``--out`` also writes every
+Every run prints one line with its metrics and the ``ext_cpu_cores`` it
+recorded: the CPU that processes outside the run used while it
+measured, which is how a busy host shows.  At the end, for every metric
+of ``BENCHMARK.json`` the runs report (the end-to-end ones with
+``--trace 0``, the default; the per-layer ones with ``--trace 1``),
+the script prints each side's median and quartiles, how many pairs the
+change won (strictly better, in the metric's direction), and the gap
+between the medians against the parent's interquartile range.  ``--out`` also writes every
 run as a JSON line.
 
 Run nothing else on the host meanwhile: a concurrent Spark session
@@ -30,12 +31,13 @@ import subprocess
 import sys
 
 
-def run_once(checkout: str, workload: str, seed: int, seconds: int) -> dict:
-    """One untraced run in ``checkout``: its end-to-end metric values,
-    or an ``error`` with the tail of its stderr."""
+def run_once(checkout: str, workload: str, seed: int, seconds: int, trace: int) -> dict:
+    """One run in ``checkout``: the metric values it reports (end-to-end
+    untraced, per-layer traced), or an ``error`` with the tail of its
+    stderr."""
     proc = subprocess.run(
         ["python3", "streambench/run.py", "--workload", workload,
-         "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
+         "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)],
         cwd=checkout, capture_output=True, text=True, timeout=900,
     )
     lines = proc.stdout.strip().splitlines()
@@ -43,7 +45,9 @@ def run_once(checkout: str, workload: str, seed: int, seconds: int) -> dict:
         result = json.loads(lines[-1])
     except (IndexError, ValueError):
         return {"error": proc.stderr[-2000:]}
-    record = os.path.join(checkout, ".streambench", f"{workload}-seed{seed}-untraced.json")
+    # a traced run writes its record with its spans, and no untraced one
+    name = f"trace-{workload}-{seed}.json" if trace else f"{workload}-seed{seed}-untraced.json"
+    record = os.path.join(checkout, ".streambench", name)
     with open(record) as fh:
         load = json.load(fh)["load"]
     return {
@@ -66,8 +70,9 @@ def summarize(runs: list[dict], metrics: list[dict]) -> None:
         if "metrics" in r:
             pairs.setdefault(r["pair"], {})[r["side"]] = r["metrics"]
     both = [p for p in pairs.values() if len(p) == 2]
+    width = max(len("metric"), *(len(m["name"]) for m in metrics))
     print(f"\n{len(both)} complete pairs")
-    print(f"{'metric':<18} {'parent median [q1, q3]':<30} {'change median [q1, q3]':<30}"
+    print(f"{'metric':<{width}} {'parent median [q1, q3]':<30} {'change median [q1, q3]':<30}"
           f" {'change wins':<12} gap/parent IQR")
     for m in metrics:
         name, lower = m["name"], m["better"] == "lower"
@@ -81,7 +86,7 @@ def summarize(runs: list[dict], metrics: list[dict]) -> None:
         (p1, p2, p3), (c1, c2, c3) = quartiles(vals["parent"]), quartiles(vals["change"])
         iqr = p3 - p1
         ratio = f"{abs(c2 - p2) / iqr:.1f}" if iqr > 0 else "-"
-        print(f"{name:<18} {f'{p2:.4g} [{p1:.4g}, {p3:.4g}]':<30}"
+        print(f"{name:<{width}} {f'{p2:.4g} [{p1:.4g}, {p3:.4g}]':<30}"
               f" {f'{c2:.4g} [{c1:.4g}, {c3:.4g}]':<30}"
               f" {f'{wins}/{len(both)}':<12} {ratio}")
 
@@ -94,11 +99,13 @@ def main() -> int:
     ap.add_argument("--seeds", required=True, help="comma-separated, cycled over the pairs")
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seconds", type=int, default=10)
+    ap.add_argument("--trace", type=int, choices=[0, 1], default=0,
+                    help="1: traced runs, summarized over the per-layer metrics")
     ap.add_argument("--out", help="append every run as a JSON line to this file")
     args = ap.parse_args()
 
     with open(os.path.join(args.change, "BENCHMARK.json")) as fh:
-        metrics = json.load(fh)["end_to_end"]
+        metrics = json.load(fh)["per_layer" if args.trace else "end_to_end"]
     seeds = [int(s) for s in args.seeds.split(",")]
     sides = {"parent": args.parent, "change": args.change}
     runs = []
@@ -107,7 +114,7 @@ def main() -> int:
         order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
         for side in order:
             r = {"pair": i, "side": side, "seed": seed,
-                 **run_once(sides[side], args.workload, seed, args.seconds)}
+                 **run_once(sides[side], args.workload, seed, args.seconds, args.trace)}
             runs.append(r)
             if "error" in r:
                 print(f"pair {i} seed {seed} {side:<6} FAILED\n{r['error']}", flush=True)
