@@ -84,16 +84,22 @@ class CorpusState:
         so an UNBOUNDED ingest loop grows plan depth linearly — the same
         iterative-lineage trap as connected_components.  Call this every
         few batches in a long ``foreachBatch`` loop (or :meth:`save` and
-        :meth:`load` per snapshot, which truncates through parquet)."""
+        :meth:`load` per snapshot, which truncates through parquet).
+        The five frames share no dependency, so their checkpoint jobs run
+        concurrently (:func:`util.run_concurrent`, as in :meth:`save`)."""
+        from go_streaming_spark.functions.util import run_concurrent
+
+        digests, bands, shingles, grams, cms = run_concurrent(
+            self.digests.sparkSession,
+            [f.localCheckpoint for f in (
+                self.digests, self.minhash.bands, self.minhash.shingles,
+                self.grams, self.cms,
+            )],
+        )
         return CorpusState(
-            self.digests.localCheckpoint(),
-            dd.MinHashIndex(
-                self.minhash.bands.localCheckpoint(),
-                self.minhash.shingles.localCheckpoint(),
-                self.n, self.k, self.rows_per_band,
-            ),
-            self.grams.localCheckpoint(),
-            self.cms.localCheckpoint(),
+            digests,
+            dd.MinHashIndex(bands, shingles, self.n, self.k, self.rows_per_band),
+            grams, cms,
             self.n, self.k, self.rows_per_band, self.gram_k,
             self.cms_depth, self.cms_width,
         )
@@ -106,7 +112,7 @@ class CorpusState:
         (guide §2.6 — same overlap as :meth:`save_bucketed`)."""
         from go_streaming_spark.functions.util import run_concurrent
 
-        run_concurrent([
+        run_concurrent(self.digests.sparkSession, [
             lambda: self.digests.write.mode("overwrite")
             .parquet(f"{path}/digests"),
             lambda: self.minhash.save(f"{path}/minhash"),
@@ -180,7 +186,7 @@ class CorpusState:
         # write jobs (guide §2.6: the snapshot write is per-crawl-epoch,
         # and running them sequentially paid seven scheduling tails;
         # measured ~16.4 → ~12 s on the bucketed ingest gate at sf0.1)
-        run_concurrent([
+        run_concurrent(spark, [
             lambda: write_bucketed(
                 self.digests, f"{table_prefix}_digests",
                 ["content_hash"], nb,
@@ -273,7 +279,9 @@ class CorpusState:
         multi-consumer ReuseExchange pattern; the count-only path keeps
         it lazy (single consumer, no materialization cost).  The near-dup
         stage also returns the batch's MinHash index, whose survivor rows
-        the state update appends."""
+        the state update appends.  Its survivors are a narrow filter over
+        the already-materialized stage-1 frame, so the state update and
+        span report read them without a checkpoint of their own."""
         from pyspark.sql.window import Window
 
         # (1) exact: unseen digests, unique in batch (lowest id wins).
@@ -283,7 +291,8 @@ class CorpusState:
         # AND the corpus-digest distinct + anti-join — measured ~1.5
         # s/query of pure recompute at sf0.1 (guide §5: materialize a
         # reused intermediate when recomputing beats the memory cost;
-        # batch-sized, same bound as the survivors checkpoint below)
+        # batch-sized, same bound as the stage-1 checkpoint in
+        # dedup._minhash_dedup_full)
         uniq = (
             batch.withColumn("__h", F.md5(F.col(text_col)))
             .withColumn(
@@ -302,7 +311,6 @@ class CorpusState:
         survivors, batch_idx = dd._minhash_dedup_full(
             uniq, self.minhash, id_col, text_col, threshold, None
         )
-        survivors = survivors.localCheckpoint()
         # (3) span report vs the corpus gram index
         spans = dd.duplicated_spans_against_index(
             survivors, self.grams, id_col, text_col, self.gram_k

@@ -399,7 +399,7 @@ class MinHashIndex(NamedTuple):
 
         # the three tables share no dependency — overlap their write jobs
         # (guide §2.6); sequential, each paid its own scheduling tail
-        run_concurrent([
+        run_concurrent(spark, [
             lambda: write_bucketed(
                 self.bands, f"{table_prefix}_bands",
                 ["band", "band_key"], nb,
@@ -587,19 +587,40 @@ def incremental_minhash_dedup(
     return dedup_against_index(new_df, index, id_col, text_col, threshold)
 
 
+def _component_drops(pairs) -> set:
+    """The ids to drop for an edge list of ``(id_a, id_b)`` pairs: every
+    member of a connected component except its minimum id — the keep rule
+    of :func:`graph.dedup_components`, resolved on the driver with a
+    union-find whose root is always the smaller id."""
+    parent: dict = {}
+
+    def find(x):
+        root = parent.setdefault(x, x)
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x for x in parent if find(x) != x}
+
+
 def _minhash_dedup_full(new_df: DataFrame, index: MinHashIndex, id_col: str,
                         text_col: str, threshold: float,
                         max_bucket_size: int | None) -> tuple[DataFrame, MinHashIndex]:
     """Stages 1 and 2 of :func:`incremental_minhash_dedup_full` over one
     :func:`_batch_index` → ``(survivors, batch index)``."""
-    from go_streaming_spark.functions.graph import dedup_components
-
     batch = _batch_index(new_df, id_col, text_col, index)
     survivors = _drop_index_matches(
         new_df, batch, index, id_col, threshold
-    ).localCheckpoint()  # consumed ≥2× (pair gen + final anti-join) and by
-    # the component loop's action rounds — materialize the batch-vs-corpus
-    # stage once; batch-sized, so executor storage cost is one batch
+    ).localCheckpoint()  # consumed twice (stage 2's pair generation and
+    # its final filter), and every ingest consumer reads the filter —
+    # materialize the batch-vs-corpus stage once; batch-sized, so
+    # executor storage cost is one batch
     # Stage 2 filters the batch index to the survivor ids (a per-row
     # property of the same text ≡ recomputing it over the survivors), with
     # broadcast id filters and one side of the band self-join broadcast
@@ -615,12 +636,16 @@ def _minhash_dedup_full(new_df: DataFrame, index: MinHashIndex, id_col: str,
     )
     pairs = jaccard_verify_pairs(candidates, sh_s).filter(
         F.col("jaccard") >= threshold
-    ).select("id_a", "id_b", "jaccard")
-    comps = dedup_components(pairs)
-    drop = comps.filter(F.col("doc_id") != F.col("cluster_id")).select(
-        F.col("doc_id").alias(id_col)
-    )
-    return survivors.join(drop, id_col, "left_anti"), batch
+    ).select("id_a", "id_b")
+    # the verified in-batch pairs are batch-bounded (the bands and ids
+    # above are already broadcast): one collect, then the components are
+    # resolved on the driver, in a number of jobs independent of their shape
+    drop = _component_drops(pairs.collect())
+    if drop:
+        # a NULL id never pairs and passes, as it would a left_anti join
+        c = F.col(id_col)
+        survivors = survivors.filter(c.isNull() | ~c.isin(list(drop)))
+    return survivors, batch
 
 
 def incremental_minhash_dedup_full(
@@ -648,11 +673,12 @@ def incremental_minhash_dedup_full(
     batch-side shingle and band-key build.
 
     Scale: stage 2's pair generation runs over the batch only (corpus
-    never self-joins), and component resolution is the O(log d)
-    label-propagation of :mod:`go_streaming_spark.functions.graph` — at
-    100 TB the corpus contributes index rows, the batch contributes
-    everything else.  Batch-only: stage 2's convergence loop runs driver
-    actions, so wrap in ``foreachBatch`` for streaming ingestion.
+    never self-joins).  Its verified pair list is batch-bounded, so it is
+    collected in one job and its components are resolved on the driver
+    with a union-find; the non-canonical ids leave through a filter —
+    at 100 TB the corpus contributes index rows, the batch contributes
+    everything else.  Batch-only: stage 2 collects its pairs with a
+    driver action, so wrap in ``foreachBatch`` for streaming ingestion.
     """
     if new_df.isStreaming:
         raise ValueError(

@@ -472,7 +472,7 @@ def save_ivf_index(
 
     # vectors and centroids share no dependency — overlap the two write
     # jobs (guide §2.6)
-    run_concurrent([
+    run_concurrent(df.sparkSession, [
         lambda: df.select(
             F.col(id_col), F.col(vec_col), F.col(cluster_col)
         ).repartition(F.col(cluster_col)).write.mode("overwrite").partitionBy(

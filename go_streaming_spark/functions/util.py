@@ -118,20 +118,35 @@ def read_manifest_max(spark, dir_path: str, order_col: str):
         return None
 
 
-def run_concurrent(tasks, max_workers: int = 4):
+def run_concurrent(spark, tasks, max_workers: int = 4):
     """Run independent Spark actions/writes concurrently from a small
     driver thread pool (optimization guide §2.6: actions are only
     sequential because driver code calls them sequentially; overlapping
     independent jobs lets one job's tasks backfill executors freed by
     another's tail).  Used by the snapshot writers, whose per-table
-    writes share no dependency.  Results keep input order; the first
-    exception propagates."""
+    writes share no dependency, and by ``CorpusState.checkpoint``.
+    Results keep input order; the first exception propagates.
+
+    Each task runs with the caller's Spark local properties and ``spark``'s
+    tags (job group, job tags, scheduler pool): a pool thread is a fresh
+    JVM thread and would otherwise submit its jobs outside the caller's
+    group.  Each task gets its own copy of the properties, because a
+    query execution writes its id into them."""
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
+
+    def inheriting(t):
+        wrap = inheritable_thread_target(spark)
+        # without pinned threads (PYSPARK_PIN_THREAD=false) there is no
+        # per-thread JVM state, and the helper hands the session back
+        return t if wrap is spark else wrap(t)
 
     if len(tasks) <= 1:
         return [t() for t in tasks]
     with ThreadPoolExecutor(max_workers=min(max_workers, len(tasks))) as ex:
-        return [f.result() for f in [ex.submit(t) for t in tasks]]
+        futures = [ex.submit(inheriting(t)) for t in tasks]
+        return [f.result() for f in futures]
 
 
 def _size_conf_bytes(spark, key: str, default: int) -> int:

@@ -389,8 +389,8 @@ def _ordered_topic(tmp_path, batches, pin_mtime=False):
 def test_subscribe_batch_ordered_chunks_within_batch(spark, tmp_path):
     """subscribe_batch(ordered_by=...) delivers each micro-batch as
     key-sorted pandas CHUNKS of at most chunk_rows — the bulk sorted sink
-    (one distributed sort + Arrow transfer per batch, no per-row driver
-    callback)."""
+    (one single-partition sort + Arrow transfer per batch, no per-row
+    driver callback)."""
     eng = Engine(spark)
     src = _ordered_topic(tmp_path, [[2, 0, 1], [102, 100, 101]])
     stream = (

@@ -346,3 +346,31 @@ def test_corpus_epoch_manifest_flip(spark, tmp_path):
             for t in ("digests", "minhash_bands", "minhash_shingles",
                       "minhash_params", "grams", "cms", "params"):
                 spark.sql(f"DROP TABLE IF EXISTS {p}_{t}")
+
+
+def test_concurrent_jobs_keep_callers_group_and_tags(spark, tmp_path):
+    """save() and checkpoint() run their frames' jobs from a thread pool;
+    every pool thread carries the caller's job group and job tags, so the
+    jobs stay attributable to the caller."""
+    from go_streaming_spark.functions.util import run_concurrent
+
+    sc = spark.sparkContext
+    group = "corpus-concurrent"
+    st = CorpusState.build(_df(spark, CORPUS), "doc_id", "text")
+    sc.setJobGroup(group, group)
+    sc.addJobTag(f"{group}-tag")
+    try:
+        st.save(str(tmp_path / "snap"))
+        saved = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert saved >= 5, "one job per snapshot writer, in the caller's group"
+        st.checkpoint()
+        checkpointed = len(sc.statusTracker().getJobIdsForGroup(group)) - saved
+        assert checkpointed >= 5, "one job per checkpointed frame"
+        seen = run_concurrent(spark, [
+            lambda: (sc.getLocalProperty("spark.jobGroup.id"), set(sc.getJobTags()))
+        ] * 3)
+        assert seen == [(group, {f"{group}-tag"})] * 3, seen
+    finally:
+        sc.removeJobTag(f"{group}-tag")
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)

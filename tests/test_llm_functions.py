@@ -827,6 +827,104 @@ def test_incremental_minhash_full_resolves_in_batch(spark):
     assert {r.doc_id for r in out.collect()} == {3, 5}
 
 
+@pytest.mark.parametrize("edges, id_type", [
+    # an 8-node chain, its edges out of order
+    ([(5, 6), (1, 2), (7, 8), (3, 4), (2, 3), (6, 7), (4, 5)], "long"),
+    # a star whose centre is not the minimum
+    ([(5, i) for i in (9, 1, 3, 2, 4, 6, 7, 8)], "long"),
+    # two components, each edge written max-first
+    ([(12, 10), (12, 11), (3, 2), (4, 2)], "long"),
+    # string ids: "a10" < "a9" and "z" < "é" in byte and code-point order
+    ([("a9", "a10"), ("é", "z"), ("b", "a9")], "string"),
+], ids=["chain8", "star", "two_components", "string_ids"])
+def test_component_drops_match_dedup_components(spark, edges, id_type):
+    """Stage 2's driver-side union-find drops exactly the non-canonical
+    members graph.dedup_components finds: every id but its component's
+    minimum.  dedup_components sums numeric labels, so the reference runs
+    on each id's rank in Spark's own ordering of the ids."""
+    from pyspark.sql.window import Window
+
+    from go_streaming_spark.functions.graph import dedup_components
+
+    pairs = spark.createDataFrame(edges, f"id_a {id_type}, id_b {id_type}")
+    rank = (
+        pairs.select(F.col("id_a").alias("id"))
+        .union(pairs.select("id_b")).distinct()
+        .withColumn("r", F.dense_rank().over(Window.orderBy("id")))
+    )
+    ranked = (
+        pairs.join(rank.withColumnsRenamed({"id": "id_a", "r": "ra"}), "id_a")
+        .join(rank.withColumnsRenamed({"id": "id_b", "r": "rb"}), "id_b")
+        .select(F.col("ra").alias("id_a"), F.col("rb").alias("id_b"))
+    )
+    ref = {
+        r.id for r in dedup_components(ranked)
+        .filter("doc_id != cluster_id")
+        .join(rank, F.col("doc_id") == F.col("r")).collect()
+    }
+    assert dedup._component_drops(edges) == ref
+
+
+def _sliding_doc(i: int) -> str:
+    """20 tokens starting at 3·i: neighbours share 15 of 21 distinct
+    3-shingles (J≈0.71), docs two apart 12 of 24 (J=0.5)."""
+    return " ".join(f"w{j}" for j in range(3 * i, 3 * i + 20))
+
+
+def _fresh_doc(i: int) -> str:
+    return " ".join(f"u{i}x{j}" for j in range(20))
+
+
+def _stage2_index(spark):
+    corpus = spark.createDataFrame(
+        [(100, _fresh_doc(100))], "doc_id long, text string"
+    )
+    return dedup.build_minhash_index(corpus, "doc_id", "text", 3, 16, 1)
+
+
+def test_minhash_full_keeps_null_id_survivor(spark):
+    """A NULL-id row never pairs, so stage 2 passes it through, as a
+    left_anti join on the id would; the in-batch pair still collapses to
+    its minimum id."""
+    batch = spark.createDataFrame(
+        [(None, _sliding_doc(0)), (1, _sliding_doc(0)),
+         (2, _sliding_doc(1)), (3, _fresh_doc(3))],
+        "doc_id long, text string",
+    )
+    out = dedup.incremental_minhash_dedup_full(
+        batch, None, "doc_id", "text", n=3, k=16, rows_per_band=1,
+        threshold=0.6, index=_stage2_index(spark),
+    )
+    assert sorted((r.doc_id for r in out.collect()), key=str) == [1, 3, None]
+
+
+def test_minhash_full_stage2_jobs_flat_in_chain_length(spark):
+    """Stage 2 runs as many Spark jobs for an 8-node chain of in-batch
+    near-dups as for a batch of the same size with one pair: components
+    are resolved on the driver, not by label rounds that grow with the
+    chain."""
+    idx = _stage2_index(spark)
+    chain = [(i, _sliding_doc(i)) for i in range(8)]
+    one_pair = chain[:2] + [(i, _fresh_doc(i)) for i in range(2, 8)]
+    sc = spark.sparkContext
+    jobs, kept = {}, {}
+    for name, rows in (("chain", chain), ("pair", one_pair)):
+        batch = spark.createDataFrame(rows, "doc_id long, text string")
+        group = f"stage2-jobs-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            kept[name] = {r.doc_id for r in dedup.incremental_minhash_dedup_full(
+                batch, None, "doc_id", "text", n=3, k=16, rows_per_band=1,
+                threshold=0.6, index=idx,
+            ).collect()}
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert kept == {"chain": {0}, "pair": {0, 2, 3, 4, 5, 6, 7}}, kept
+    assert jobs["chain"] == jobs["pair"], jobs
+
+
 def test_incremental_minhash_full_rejects_streaming_input(spark, tmp_path):
     """Stage 2 runs driver actions, so a streaming frame is refused with a
     pointer to foreachBatch instead of failing inside Spark."""

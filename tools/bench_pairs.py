@@ -14,8 +14,12 @@ of ``BENCHMARK.json`` the runs report (the end-to-end ones with
 ``--trace 0``, the default; the per-layer ones with ``--trace 1``),
 the script prints each side's median and quartiles, how many pairs the
 change won (strictly better, in the metric's direction), and the gap
-between the medians against the parent's interquartile range.  ``--out`` also writes every
-run as a JSON line.
+between the medians against the parent's interquartile range.  It also
+prints, per side, how many runs read ``ext_cpu_cores`` at or above
+``BUSY_CORES`` and the highest reading: at that level runs measured
+25-80% slower (``streambench/NOTES.md``).  Such runs are flagged
+``busy`` where they are printed and stay in every statistic.  ``--out``
+also writes every run as a JSON line.
 
 Run nothing else on the host meanwhile: a concurrent Spark session
 inflates both sides' timings and shows only in ``ext_cpu_cores``.
@@ -29,6 +33,10 @@ import os
 import statistics
 import subprocess
 import sys
+
+
+# ext_cpu_cores at which a run is flagged as measured on a busy host
+BUSY_CORES = 0.3
 
 
 def run_once(checkout: str, workload: str, seed: int, seconds: int, trace: int) -> dict:
@@ -64,7 +72,17 @@ def quartiles(values: list[float]) -> tuple[float, float, float]:
     return q1, q2, q3
 
 
+def busy(run: dict) -> bool:
+    return (run.get("ext_cpu_cores") or 0) >= BUSY_CORES
+
+
 def summarize(runs: list[dict], metrics: list[dict]) -> None:
+    for side in ("parent", "change"):
+        done = [r for r in runs if r["side"] == side and "metrics" in r]
+        read = [r["ext_cpu_cores"] for r in done if r["ext_cpu_cores"] is not None]
+        top = f"{max(read):.2f}" if read else "-"
+        print(f"{side}: {sum(map(busy, done))}/{len(done)} runs with"
+              f" ext_cpu_cores >= {BUSY_CORES} (max {top})")
     pairs = {}
     for r in runs:
         if "metrics" in r:
@@ -121,7 +139,8 @@ def main() -> int:
             else:
                 vals = " ".join(f"{k}={v:.4g}" for k, v in r["metrics"].items())
                 print(f"pair {i} seed {seed} {side:<6} correct={r['correct']} {vals}"
-                      f" ext_cpu_cores={r['ext_cpu_cores']}", flush=True)
+                      f" ext_cpu_cores={r['ext_cpu_cores']}{' busy' if busy(r) else ''}",
+                      flush=True)
             if args.out:
                 with open(args.out, "a") as fh:
                     fh.write(json.dumps(r) + "\n")
