@@ -13,9 +13,7 @@ Run: python examples/drift_monitor.py
 """
 
 import os
-import shutil
 import sys
-import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -24,6 +22,7 @@ from pyspark.sql import functions as F
 from go_streaming_spark.functions import similarity
 from go_streaming_spark.functions.stats import cusum_alarms
 from go_streaming_spark.session import get_session
+from go_streaming_spark.streaming import replay_batches
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 DIM = 64
@@ -69,46 +68,31 @@ def main() -> None:
     # 4. the same moment grid accumulated the streaming way: each
     #    crawl file folds into the carried state by ADDITION — the
     #    per-crawl-epoch drift check at 100 TB
-    tmp = tempfile.mkdtemp(prefix="drift_monitor_")
-    try:
-        cohorts = emb.select("vec_id", "label", "embedding")
-        cohorts.repartition(4).write.parquet(f"{tmp}/emb")
-        stream = (
-            spark.readStream.schema(cohorts.schema)
-            .option("maxFilesPerTrigger", 1).parquet(f"{tmp}/emb")
-        )
-        holder = {"cells": None, "batches": 0}
+    holder = {"cells": None}
 
-        def ingest(batch_df, _bid):
-            part = similarity.embedding_dim_stats_by(
-                batch_df, "label", "embedding", dim=DIM
-            )
-            merged = part if holder["cells"] is None else (
-                holder["cells"].unionByName(part).groupBy("grp", "d")
-                .agg(F.sum("n").alias("n"),
-                     F.sum("sum_q").alias("sum_q"),
-                     F.sum("sumsq_q").alias("sumsq_q"))
-            )
-            holder["cells"] = merged.localCheckpoint()
-            holder["batches"] += 1
-
-        q = (
-            stream.writeStream.foreachBatch(ingest)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{tmp}/ckpt").start()
+    def ingest(batch_df, _bid):
+        part = similarity.embedding_dim_stats_by(
+            batch_df, "label", "embedding", dim=DIM
         )
-        q.awaitTermination()
-
-        # the streamed state answers the SAME question, cell for cell
-        merged_ok = (
-            similarity.smd_from_dim_stats(holder["cells"], 3, 7)
-            .exceptAll(smd).count() == 0
+        merged = part if holder["cells"] is None else (
+            holder["cells"].unionByName(part).groupBy("grp", "d")
+            .agg(F.sum("n").alias("n"),
+                 F.sum("sum_q").alias("sum_q"),
+                 F.sum("sumsq_q").alias("sumsq_q"))
         )
-        print(f"streamed {holder['batches']} triggers -> "
-              f"{holder['cells'].count()} cells; "
-              f"SMD report identical to batch: {merged_ok}")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        holder["cells"] = merged.localCheckpoint()
+
+    cohorts = emb.select("vec_id", "label", "embedding")
+    triggers = replay_batches(cohorts, ingest)
+
+    # the streamed state answers the SAME question, cell for cell
+    merged_ok = (
+        similarity.smd_from_dim_stats(holder["cells"], 3, 7)
+        .exceptAll(smd).count() == 0
+    )
+    print(f"streamed {triggers} triggers -> "
+          f"{holder['cells'].count()} cells; "
+          f"SMD report identical to batch: {merged_ok}")
 
     spark.stop()
 

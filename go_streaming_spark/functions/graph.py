@@ -52,8 +52,8 @@ def connected_components(
         .select(F.col("u").alias("node"), F.col("u").alias("label"))
         .localCheckpoint()
     )
-    prev_sum = labels.agg(F.sum("label")).head()[0]
     for _ in range(max_iter):
+        prev = labels
         # neighbor-min: l(v) ← min(l(v), min over neighbors' labels)
         neighbor = sym.join(labels, sym["v"] == labels["node"]).select(
             sym["u"].alias("node"), F.col("label")
@@ -76,10 +76,10 @@ def connected_components(
             )
             .localCheckpoint()
         )
-        s = labels.agg(F.sum("label")).head()[0]
-        if s == prev_sum:
+        # converged when no node's label changed: an exact set test on
+        # the two materialized frames, for any orderable id type
+        if labels.exceptAll(prev).isEmpty():
             return labels.select("node", F.col("label").alias("component"))
-        prev_sum = s
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} rounds"
         " (raise max_iter)"

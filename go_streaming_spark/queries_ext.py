@@ -1807,19 +1807,11 @@ def stream_hist_value_percentiles(spark, sf_dir):
     the quantile estimates gate against the SAME oracle as
     hist_value_percentiles (registered below).  State is localCheckpointed
     per batch — ≤ n_bins rows, no lineage growth."""
-    import tempfile
-
     from go_streaming_spark.functions import sketch
+    from go_streaming_spark.streaming.runner import replay_batches
 
     ev = Engine(spark, sf_dir=sf_dir).stream("events").select("value")
-    tmp = tempfile.mkdtemp(prefix="stream_hist_")
-    ev.repartition(4).write.mode("overwrite").parquet(f"{tmp}/ev")
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{tmp}/ev")
-    )
-    holder = {"hist": None, "batches": 0}
+    holder = {"hist": None}
 
     def ingest(batch_df, _bid):
         part = _sk_mod.hist_build(batch_df, "value", lo=0.0, hi=500.0,
@@ -1830,13 +1822,8 @@ def stream_hist_value_percentiles(spark, sf_dir):
             .agg(F.sum("count").alias("count"))
         )
         holder["hist"] = merged.localCheckpoint()
-        holder["batches"] += 1
 
-    q = stream.writeStream.foreachBatch(ingest).trigger(
-        availableNow=True
-    ).start()
-    q.awaitTermination()
-    assert holder["batches"] >= 2, "expected a real multi-batch replay"
+    replay_batches(ev, ingest)
     return sketch.hist_quantiles(
         holder["hist"], [0.5, 0.9, 0.99], lo=0.0, hi=500.0, n_bins=4096
     )
@@ -2252,19 +2239,11 @@ def stream_dq_violation_counts(spark, sf_dir):
     against the SAME oracle as dq_violation_counts.  State is one row
     per rule, localCheckpointed per batch — fixed-size, no lineage
     growth."""
-    import tempfile
-
     from go_streaming_spark.functions.dq import check_expectations, fk_violations
+    from go_streaming_spark.streaming.runner import replay_batches
 
     eng = Engine(spark, sf_dir=sf_dir)
     orders, cust = eng.stream("orders"), eng.stream("customer")
-    tmp = tempfile.mkdtemp(prefix="stream_dq_")
-    orders.repartition(4).write.mode("overwrite").parquet(f"{tmp}/orders")
-    stream = (
-        spark.readStream.schema(orders.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{tmp}/orders")
-    )
     holder = {"state": None}
 
     def ingest(batch_df, _bid):
@@ -2290,13 +2269,7 @@ def stream_dq_violation_counts(spark, sf_dir):
         )
         holder["state"] = merged.localCheckpoint()
 
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .start()
-    )
-    q.awaitTermination()
+    replay_batches(orders, ingest)
     return holder["state"].select("rule", "n_rows", "n_violations")
 
 
@@ -2490,56 +2463,30 @@ def stream_value_psi_by_type(spark, sf_dir):
     state after (or between) any trigger.  Must equal the batch
     statistic, so it gates against the same oracle as
     value_psi_by_type."""
-    import shutil
-    import tempfile
-
     from go_streaming_spark.functions.stats import psi_from_epoch_counts
+    from go_streaming_spark.streaming.runner import replay_batches
 
     ev = Engine(spark, sf_dir=sf_dir).stream("events")
-    src = ev.select("event_type", "ts", "value")
-    tmp = tempfile.mkdtemp(prefix="stream_psi_")
-    try:
-        src.repartition(4).write.mode("overwrite").parquet(f"{tmp}/ev")
-        stream = (
-            spark.readStream.schema(src.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{tmp}/ev")
-        )
-        holder = {"state": None, "batches": 0}
+    holder = {"state": None}
 
-        def ingest(batch_df, _bid):
-            part = (
-                _psi_value_obs(batch_df)
-                .groupBy("grp", "k")
-                .agg(
-                    F.sum(F.when(F.col("e") == 0, 1).otherwise(0))
-                    .alias("c_a"),
-                    F.sum(F.when(F.col("e") == 1, 1).otherwise(0))
-                    .alias("c_b"),
-                )
+    def ingest(batch_df, _bid):
+        part = (
+            _psi_value_obs(batch_df)
+            .groupBy("grp", "k")
+            .agg(
+                F.sum(F.when(F.col("e") == 0, 1).otherwise(0)).alias("c_a"),
+                F.sum(F.when(F.col("e") == 1, 1).otherwise(0)).alias("c_b"),
             )
-            merged = part if holder["state"] is None else (
-                holder["state"].unionByName(part)
-                .groupBy("grp", "k")
-                .agg(F.sum("c_a").alias("c_a"), F.sum("c_b").alias("c_b"))
-            )
-            holder["state"] = merged.localCheckpoint()
-            holder["batches"] += 1
-
-        q = (
-            stream.writeStream.foreachBatch(ingest)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .start()
         )
-        q.awaitTermination()
-        assert holder["batches"] >= 2, "replay must produce real micro-batches"
-        out = psi_from_epoch_counts(holder["state"], "event_type")
-        rows = out.collect()
-        schema = out.schema
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
+        merged = part if holder["state"] is None else (
+            holder["state"].unionByName(part)
+            .groupBy("grp", "k")
+            .agg(F.sum("c_a").alias("c_a"), F.sum("c_b").alias("c_b"))
+        )
+        holder["state"] = merged.localCheckpoint()
+
+    replay_batches(ev.select("event_type", "ts", "value"), ingest)
+    return psi_from_epoch_counts(holder["state"], "event_type")
 
 
 ORACLES["stream_value_psi_by_type"] = ORACLES["value_psi_by_type"]
@@ -3900,6 +3847,40 @@ def corpus_ingest_manifest_survivors(spark, sf_dir):
     )
 
 
+def _replay_ordered(frames, sink_fn) -> None:
+    """Replay ``frames`` in list order, one frame per trigger, through
+    ``ContinuousQuery.subscribe_batch(sink_fn)``: each frame becomes one
+    parquet file in a temp dir, its mtime pinned in list order, the
+    order the file source reads them in.  The dir is deleted on every
+    exit."""
+    import glob
+    import os
+    import shutil
+    import tempfile
+
+    from go_streaming_spark.plans.builder import ContinuousQuery
+
+    feed = tempfile.mkdtemp(prefix="replay_ordered_")
+    try:
+        for i, frame in enumerate(frames):
+            scratch = f"{feed}/_w{i}"
+            frame.coalesce(1).write.mode("overwrite").parquet(scratch)
+            dst = f"{feed}/batch-{i}.parquet"
+            os.replace(glob.glob(f"{scratch}/part-*.parquet")[0], dst)
+            shutil.rmtree(scratch, ignore_errors=True)
+            t = 1_700_000_000 + i * 10
+            os.utime(dst, (t, t))
+        cq = ContinuousQuery(
+            frames[0].sparkSession.readStream.schema(frames[0].schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(feed)
+        )
+        cq.subscribe_batch(sink_fn)
+        cq.await_done()
+    finally:
+        shutil.rmtree(feed, ignore_errors=True)
+
+
 @query(
     "stream_corpus_ingest_survivors",
     ORACLES["corpus_ingest_two_batch_survivors"],
@@ -3914,60 +3895,36 @@ def stream_corpus_ingest_survivors(spark, sf_dir):
     # its span counts see the survivors' grams.  This is the
     # readStream → ingest → state-append shape a recurring crawl runs
     # at 100 TB, hash-checked end-to-end.
-    import glob as _glob
-    import os as _os
-    import shutil
-    import tempfile
-
     from go_streaming_spark.functions.corpus_state import CorpusState
     from go_streaming_spark.queries_llm import _docs
 
     docs = _docs(spark, sf_dir)
     corpus = docs.filter(F.col("doc_id") % 10 == 0)
-    tmp = tempfile.mkdtemp(prefix="stream_ingest_")
     out_rows: list[tuple] = []
-    try:
-        for i, mods in enumerate([(1, 2, 3, 4), (5, 6, 7, 8, 9)]):
-            b = docs.filter((F.col("doc_id") % 10).isin(*mods))
-            scratch = f"{tmp}/_w{i}"
-            b.coalesce(1).write.mode("overwrite").parquet(scratch)
-            part = _glob.glob(f"{scratch}/part-*.parquet")[0]
-            dst = f"{tmp}/batch-{i}.parquet"
-            _os.replace(part, dst)
-            shutil.rmtree(scratch, ignore_errors=True)
-            t = 1_700_000_000 + i * 10  # pin trigger order
-            _os.utime(dst, (t, t))
+    batches = [
+        docs.filter((F.col("doc_id") % 10).isin(*mods))
+        for mods in [(1, 2, 3, 4), (5, 6, 7, 8, 9)]
+    ]
+    holder = {
+        "state": CorpusState.build(
+            corpus, "doc_id", "text", n=3, k=16, rows_per_band=4, gram_k=8
+        ),
+        "n": 0,
+    }
 
-        holder = {
-            "state": CorpusState.build(
-                corpus, "doc_id", "text", n=3, k=16, rows_per_band=4, gram_k=8
-            ),
-            "n": 0,
-        }
-
-        def do_batch(bdf, batch_id=None):
-            if bdf.isEmpty():
-                return
-            holder["n"] += 1
-            n = holder["n"]
-            clean, new_state = holder["state"].ingest(
-                bdf, "doc_id", "text", threshold=0.2
-            )
-            for r in clean.select("doc_id", "dup_span_tokens").collect():
-                out_rows.append((n, r["doc_id"], r["dup_span_tokens"]))
-            holder["state"] = new_state.checkpoint()
-
-        sq = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(tmp)
-            .writeStream.foreachBatch(do_batch)
-            .trigger(availableNow=True)
-            .start()
+    def do_batch(bdf, batch_id=None):
+        if bdf.isEmpty():
+            return
+        holder["n"] += 1
+        n = holder["n"]
+        clean, new_state = holder["state"].ingest(
+            bdf, "doc_id", "text", threshold=0.2
         )
-        sq.awaitTermination()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        for r in clean.select("doc_id", "dup_span_tokens").collect():
+            out_rows.append((n, r["doc_id"], r["dup_span_tokens"]))
+        holder["state"] = new_state.checkpoint()
+
+    _replay_ordered(batches, do_batch)
     return spark.createDataFrame(
         out_rows, "batch_no int, doc_id long, dup_span_tokens long"
     )
@@ -4068,8 +4025,6 @@ def stream_ann_ivf_append(spark, sf_dir):
     # append path may lose, duplicate, or mis-place nothing.  Partial-
     # probe pruning is ann_ivf_pruned_topk's gate; this one pins the
     # streaming ingest.
-    import glob as _glob
-    import os as _os
     import shutil
     import tempfile
 
@@ -4084,23 +4039,11 @@ def stream_ann_ivf_append(spark, sf_dir):
     nclusters = cent.count()
     tmp = tempfile.mkdtemp(prefix="stream_ivf_")
     idx = f"{tmp}/index"
-    feed = f"{tmp}/feed"
-    _os.makedirs(feed)
     try:
         similarity.save_ivf_index(
             corpus.filter(F.col("vec_id") % 3 == 0),
             "vec_id", "embedding", "label", cent, idx,
         )
-        for i, rem in enumerate((1, 2)):
-            b = corpus.filter(F.col("vec_id") % 3 == rem)
-            scratch = f"{tmp}/_w{i}"
-            b.coalesce(1).write.mode("overwrite").parquet(scratch)
-            part = _glob.glob(f"{scratch}/part-*.parquet")[0]
-            dst = f"{feed}/batch-{i}.parquet"
-            _os.replace(part, dst)
-            shutil.rmtree(scratch, ignore_errors=True)
-            t = 1_700_000_000 + i * 10
-            _os.utime(dst, (t, t))
 
         def do_batch(bdf, batch_id=None):
             if not bdf.isEmpty():
@@ -4108,15 +4051,10 @@ def stream_ann_ivf_append(spark, sf_dir):
                     bdf, "vec_id", "embedding", "label", idx
                 )
 
-        sq = (
-            spark.readStream.schema(corpus.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
-            .writeStream.foreachBatch(do_batch)
-            .trigger(availableNow=True)
-            .start()
+        _replay_ordered(
+            [corpus.filter(F.col("vec_id") % 3 == rem) for rem in (1, 2)],
+            do_batch,
         )
-        sq.awaitTermination()
         out = similarity.ivf_pruned_topk(
             spark, idx, "vec_id", "embedding", "label", qv,
             k=10, nprobe=nclusters,
@@ -4545,48 +4483,26 @@ def stream_embedding_second_moments(spark, sf_dir):
     small shuffle per trigger.  Must equal the batch statistic CELL FOR
     CELL, so it gates against the same oracle as
     embedding_second_moments."""
-    import shutil
-    import tempfile
-
     from go_streaming_spark.functions import similarity
     from go_streaming_spark.queries_llm import _emb
+    from go_streaming_spark.streaming.runner import replay_batches
 
     emb = _emb(spark, sf_dir).select("vec_id", "embedding")
-    tmp = tempfile.mkdtemp(prefix="stream_pca_")
-    try:
-        emb.repartition(4).write.mode("overwrite").parquet(f"{tmp}/emb")
-        stream = (
-            spark.readStream.schema(emb.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{tmp}/emb")
-        )
-        holder = {"cells": None, "batches": 0}
+    holder = {"cells": None}
 
-        def ingest(batch_df, _bid):
-            part = similarity.embedding_second_moments(
-                batch_df, "embedding", dim=64
-            )
-            merged = part if holder["cells"] is None else (
-                holder["cells"].unionByName(part)
-                .groupBy("i", "j")
-                .agg(F.sum("v").alias("v"))
-            )
-            holder["cells"] = merged.localCheckpoint()
-            holder["batches"] += 1
-
-        q = (
-            stream.writeStream.foreachBatch(ingest)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .start()
+    def ingest(batch_df, _bid):
+        part = similarity.embedding_second_moments(
+            batch_df, "embedding", dim=64
         )
-        q.awaitTermination()
-        assert holder["batches"] >= 2, "replay must produce real micro-batches"
-        rows = holder["cells"].collect()
-        schema = holder["cells"].schema
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
+        merged = part if holder["cells"] is None else (
+            holder["cells"].unionByName(part)
+            .groupBy("i", "j")
+            .agg(F.sum("v").alias("v"))
+        )
+        holder["cells"] = merged.localCheckpoint()
+
+    replay_batches(emb, ingest)
+    return holder["cells"]
 
 
 ORACLES["stream_embedding_second_moments"] = ORACLES["embedding_second_moments"]
@@ -4720,61 +4636,38 @@ def stream_mixture_waterfill_plan(spark, sf_dir):
     use, given everything crawled so far?") answered without touching
     raw data.  The final-trigger plan must equal the batch plan, so it
     gates against the same oracle."""
-    import shutil
-    import tempfile
-
     from go_streaming_spark.functions import sampling
     from go_streaming_spark.queries_llm import _docs
+    from go_streaming_spark.streaming.runner import replay_batches
 
     docs = _docs(spark, sf_dir).select("doc_id", "source", "n_chars")
     srcs = [r[0] for r in docs.select("source").distinct().collect()]
     weights = {
         s: 12 if int(s[3:]) % 5 == 0 else 1 + int(s[3:]) % 3 for s in srcs
     }
-    tmp = tempfile.mkdtemp(prefix="stream_wf_")
-    try:
-        docs.repartition(4).write.mode("overwrite").parquet(f"{tmp}/docs")
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{tmp}/docs")
-        )
-        holder = {"state": None, "batches": 0}
+    holder = {"state": None}
 
-        def ingest(batch_df, _bid):
-            part = batch_df.groupBy("source").agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.sum(F.col("n_chars").cast("long")).alias("n_tokens"),
+    def ingest(batch_df, _bid):
+        part = batch_df.groupBy("source").agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum(F.col("n_chars").cast("long")).alias("n_tokens"),
+        )
+        merged = part if holder["state"] is None else (
+            holder["state"].unionByName(part)
+            .groupBy("source")
+            .agg(
+                F.sum("n_docs").alias("n_docs"),
+                F.sum("n_tokens").alias("n_tokens"),
             )
-            merged = part if holder["state"] is None else (
-                holder["state"].unionByName(part)
-                .groupBy("source")
-                .agg(
-                    F.sum("n_docs").alias("n_docs"),
-                    F.sum("n_tokens").alias("n_tokens"),
-                )
-            )
-            holder["state"] = merged.localCheckpoint()
-            holder["batches"] += 1
+        )
+        holder["state"] = merged.localCheckpoint()
 
-        q = (
-            stream.writeStream.foreachBatch(ingest)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .start()
-        )
-        q.awaitTermination()
-        assert holder["batches"] >= 2, "replay must produce real micro-batches"
-        # re-plan straight off the accumulated per-stratum state
-        out = sampling.mixture_waterfill_plan(
-            holder["state"], "source", "n_tokens", _WF_BUDGET, weights,
-            pre_aggregated=True,
-        )
-        rows = out.collect()
-        schema = out.schema
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
+    replay_batches(docs, ingest)
+    # re-plan straight off the accumulated per-stratum state
+    return sampling.mixture_waterfill_plan(
+        holder["state"], "source", "n_tokens", _WF_BUDGET, weights,
+        pre_aggregated=True,
+    )
 
 
 ORACLES["stream_mixture_waterfill_plan"] = ORACLES["mixture_waterfill_plan"]
@@ -4834,101 +4727,81 @@ def stream_cusum_value_alarms(spark, sf_dir):
     unlike the commutative CMS/HLL merges, which is precisely what a
     time-ordered replay guarantees.  The final state must equal the
     batch statistic, so it gates against the same oracle."""
-    import shutil
-    import tempfile
-
     from pyspark.sql.window import Window
 
     ev = Engine(spark, sf_dir=sf_dir).stream("events").select(
         "event_type", "ts", "event_id", "value"
     )
-    tmp = tempfile.mkdtemp(prefix="stream_cusum_")
-    try:
-        # slice by global time order so trigger order == event order
-        sliced = ev.withColumn(
-            "__slice", F.ntile(4).over(Window.orderBy("ts", "event_id"))
-        )
-        for s in range(1, 5):
-            (sliced.filter(F.col("__slice") == s).drop("__slice")
-             .coalesce(1).write.mode("overwrite")
-             .parquet(f"{tmp}/ev/slice={s:02d}"))
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{tmp}/ev/slice=*")
-        )
-        # key -> (off, gmin, n, n_alarms, max_cusum); ≤|event types| rows
-        state: dict = {}
-        holder = {"batches": 0}
+    # slice by global time order so trigger order == event order
+    sliced = ev.withColumn(
+        "__slice", F.ntile(4).over(Window.orderBy("ts", "event_id"))
+    )
+    slices = [sliced.filter(F.col("__slice") == s).drop("__slice")
+              for s in range(1, 5)]
+    # key -> (off, gmin, n, n_alarms, max_cusum); ≤|event types| rows
+    state: dict = {}
+    holder = {"batches": 0}
 
-        def ingest(batch_df, _bid):
-            w = Window.partitionBy("event_type").orderBy("ts", "event_id")
-            pre = batch_df.withColumn(
-                "__d",
-                F.floor(F.col("value").cast("double") * F.lit(1e6)
-                        + F.lit(0.5)).cast("long") - F.lit(_CUSUM_K),
-            ).select(
-                "event_type", "ts", "event_id", "__d",
-                F.sum("__d").over(w).alias("__wp"),
-            )
-            pre = pre.select(
-                "event_type", "__d", "__wp",
-                F.min("__wp").over(
-                    w.rowsBetween(Window.unboundedPreceding,
-                                  Window.currentRow)
-                ).alias("__wmin"),
-            )
-            st_rows = [(k, v[0], v[1]) for k, v in state.items()]
-            stdf = spark.createDataFrame(
-                st_rows or [("__none__", 0, 0)],
-                "event_type string, __off long, __gmin long",
-            )
-            j = (
-                pre.join(F.broadcast(stdf), "event_type", "left")
-                .fillna({"__off": 0, "__gmin": 0})
-            )
-            cus = (
-                (F.col("__off") + F.col("__wp"))
-                - F.least(F.col("__gmin"),
-                          F.col("__off") + F.col("__wmin"))
-            )
-            agg = (
-                j.withColumn("__cusum", cus)
-                .groupBy("event_type")
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum((F.col("__cusum") > F.lit(_CUSUM_H))
-                          .cast("long")).alias("na"),
-                    F.max("__cusum").alias("mx"),
-                    F.sum("__d").alias("tot"),
-                    F.min("__wp").alias("bmin"),
-                )
-                .collect()  # ≤|keys| rows — the bounded state update
-            )
-            for r in agg:
-                off, gmin, n, na, mx = state.get(
-                    r["event_type"], (0, 0, 0, 0, 0)
-                )
-                state[r["event_type"]] = (
-                    off + r["tot"],
-                    min(gmin, off + r["bmin"]),
-                    n + r["n"],
-                    na + r["na"],
-                    max(mx, r["mx"]),
-                )
-            holder["batches"] += 1
-
-        qr = (
-            stream.writeStream.foreachBatch(ingest)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .start()
+    def ingest(batch_df, _bid):
+        w = Window.partitionBy("event_type").orderBy("ts", "event_id")
+        pre = batch_df.withColumn(
+            "__d",
+            F.floor(F.col("value").cast("double") * F.lit(1e6)
+                    + F.lit(0.5)).cast("long") - F.lit(_CUSUM_K),
+        ).select(
+            "event_type", "ts", "event_id", "__d",
+            F.sum("__d").over(w).alias("__wp"),
         )
-        qr.awaitTermination()
-        assert holder["batches"] >= 2, "replay must produce real micro-batches"
-        out_rows = [(k, v[2], v[3], v[4]) for k, v in sorted(state.items())]
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        pre = pre.select(
+            "event_type", "__d", "__wp",
+            F.min("__wp").over(
+                w.rowsBetween(Window.unboundedPreceding,
+                              Window.currentRow)
+            ).alias("__wmin"),
+        )
+        st_rows = [(k, v[0], v[1]) for k, v in state.items()]
+        stdf = spark.createDataFrame(
+            st_rows or [("__none__", 0, 0)],
+            "event_type string, __off long, __gmin long",
+        )
+        j = (
+            pre.join(F.broadcast(stdf), "event_type", "left")
+            .fillna({"__off": 0, "__gmin": 0})
+        )
+        cus = (
+            (F.col("__off") + F.col("__wp"))
+            - F.least(F.col("__gmin"),
+                      F.col("__off") + F.col("__wmin"))
+        )
+        agg = (
+            j.withColumn("__cusum", cus)
+            .groupBy("event_type")
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum((F.col("__cusum") > F.lit(_CUSUM_H))
+                      .cast("long")).alias("na"),
+                F.max("__cusum").alias("mx"),
+                F.sum("__d").alias("tot"),
+                F.min("__wp").alias("bmin"),
+            )
+            .collect()  # ≤|keys| rows — the bounded state update
+        )
+        for r in agg:
+            off, gmin, n, na, mx = state.get(
+                r["event_type"], (0, 0, 0, 0, 0)
+            )
+            state[r["event_type"]] = (
+                off + r["tot"],
+                min(gmin, off + r["bmin"]),
+                n + r["n"],
+                na + r["na"],
+                max(mx, r["mx"]),
+            )
+        holder["batches"] += 1
+
+    _replay_ordered(slices, ingest)
+    assert holder["batches"] >= 2, "replay must produce real micro-batches"
+    out_rows = [(k, v[2], v[3], v[4]) for k, v in sorted(state.items())]
     return spark.createDataFrame(
         out_rows,
         "event_type string, n_events long, n_alarms long, max_cusum long",
@@ -4973,52 +4846,30 @@ def stream_embedding_dim_stats_by_label(spark, sf_dir):
     derive driver-side from the fixed-size state.  Must equal the
     batch statistic CELL FOR CELL, so it gates against the same oracle
     as embedding_dim_stats_by_label."""
-    import shutil
-    import tempfile
-
     from go_streaming_spark.functions import similarity
     from go_streaming_spark.queries_llm import _emb
+    from go_streaming_spark.streaming.runner import replay_batches
 
     emb = _emb(spark, sf_dir).select("vec_id", "label", "embedding")
-    tmp = tempfile.mkdtemp(prefix="stream_dimstats_")
-    try:
-        emb.repartition(4).write.mode("overwrite").parquet(f"{tmp}/emb")
-        stream = (
-            spark.readStream.schema(emb.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{tmp}/emb")
-        )
-        holder = {"cells": None, "batches": 0}
+    holder = {"cells": None}
 
-        def ingest(batch_df, _bid):
-            part = similarity.embedding_dim_stats_by(
-                batch_df, "label", "embedding", dim=64
-            )
-            merged = part if holder["cells"] is None else (
-                holder["cells"].unionByName(part)
-                .groupBy("grp", "d")
-                .agg(
-                    F.sum("n").alias("n"),
-                    F.sum("sum_q").alias("sum_q"),
-                    F.sum("sumsq_q").alias("sumsq_q"),
-                )
-            )
-            holder["cells"] = merged.localCheckpoint()
-            holder["batches"] += 1
-
-        q = (
-            stream.writeStream.foreachBatch(ingest)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .start()
+    def ingest(batch_df, _bid):
+        part = similarity.embedding_dim_stats_by(
+            batch_df, "label", "embedding", dim=64
         )
-        q.awaitTermination()
-        assert holder["batches"] >= 2, "replay must produce real micro-batches"
-        rows = holder["cells"].collect()
-        schema = holder["cells"].schema
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
+        merged = part if holder["cells"] is None else (
+            holder["cells"].unionByName(part)
+            .groupBy("grp", "d")
+            .agg(
+                F.sum("n").alias("n"),
+                F.sum("sum_q").alias("sum_q"),
+                F.sum("sumsq_q").alias("sumsq_q"),
+            )
+        )
+        holder["cells"] = merged.localCheckpoint()
+
+    replay_batches(emb, ingest)
+    return holder["cells"]
 
 
 ORACLES["stream_embedding_dim_stats_by_label"] = ORACLES[

@@ -1439,19 +1439,11 @@ def stream_cms_word_counts(spark, sf_dir):
     cms_word_counts (registered below).  State is localCheckpointed per
     batch — fixed-size, no lineage growth (the foreachBatch twin of
     CorpusState.checkpoint's cadence)."""
-    import tempfile
-
     from go_streaming_spark.functions import sketch
+    from go_streaming_spark.streaming.runner import replay_batches
 
     docs = _docs(spark, sf_dir).select("doc_id", "text")
-    tmp = tempfile.mkdtemp(prefix="stream_cms_")
-    docs.repartition(4).write.mode("overwrite").parquet(f"{tmp}/docs")
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{tmp}/docs")
-    )
-    holder = {"cms": None, "batches": 0}
+    holder = {"cms": None}
 
     def ingest(batch_df, _bid):
         words = batch_df.select(
@@ -1466,16 +1458,8 @@ def stream_cms_word_counts(spark, sf_dir):
             .agg(F.sum("count").alias("count"))
         )
         holder["cms"] = merged.localCheckpoint()
-        holder["batches"] += 1
 
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .start()
-    )
-    q.awaitTermination()
-    assert holder["batches"] >= 2, "replay must produce real micro-batches"
+    replay_batches(docs, ingest)
     keys = docs.select(
         F.explode(
             F.filter(F.split(F.col("text"), r"\s+"), lambda w: w != "")
@@ -1518,9 +1502,8 @@ def stream_heavy_hitter_words(spark, sf_dir):
     is bit-identical to the batch build, so the result must equal the
     plain GROUP BY ... HAVING — gated against the heavy_hitter_words
     oracle (registered below)."""
-    import tempfile
-
     from go_streaming_spark.functions import sketch
+    from go_streaming_spark.streaming.runner import replay_batches
 
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     words_of = lambda df: df.select(  # noqa: E731
@@ -1528,14 +1511,7 @@ def stream_heavy_hitter_words(spark, sf_dir):
             F.filter(F.split(F.col("text"), r"\s+"), lambda w: w != "")
         ).alias("word")
     )
-    tmp = tempfile.mkdtemp(prefix="stream_hh_")
-    docs.repartition(4).write.mode("overwrite").parquet(f"{tmp}/docs")
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{tmp}/docs")
-    )
-    holder = {"cms": None, "batches": 0}
+    holder = {"cms": None}
 
     def ingest(batch_df, _bid):
         part = sketch.count_min_build(words_of(batch_df), "word", depth=4,
@@ -1546,16 +1522,8 @@ def stream_heavy_hitter_words(spark, sf_dir):
             .agg(F.sum("count").alias("count"))
         )
         holder["cms"] = merged.localCheckpoint()
-        holder["batches"] += 1
 
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .start()
-    )
-    q.awaitTermination()
-    assert holder["batches"] >= 2, "expected a real multi-batch replay"
+    replay_batches(docs, ingest)
     return sketch.heavy_hitters_from_sketch(
         words_of(docs), holder["cms"], "word", min_count=500, depth=4,
         width=256,
@@ -2133,7 +2101,7 @@ def stream_theta_users_diff(spark, sf_dir):
     the held state by keep-k-smallest-of-union — exactly idempotent, so
     the answer equals the batch theta_users_diff bit-for-bit and gates
     against the same oracle (the stream_hll_user_overlap shape)."""
-    import tempfile
+    from go_streaming_spark.streaming.runner import replay_batches
 
     ev = (
         Engine(spark, sf_dir=sf_dir)
@@ -2141,14 +2109,7 @@ def stream_theta_users_diff(spark, sf_dir):
         .filter(F.col("event_type").isin(["click", "purchase"]))
         .select("event_type", "user_id")
     )
-    tmp = tempfile.mkdtemp(prefix="stream_theta_")
-    ev.repartition(4).write.mode("overwrite").parquet(f"{tmp}/ev")
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{tmp}/ev")
-    )
-    holder = {"sk": None, "batches": 0}
+    holder = {"sk": None}
 
     def ingest(batch_df, _bid):
         part = _sk.theta_kmv_build(
@@ -2158,16 +2119,8 @@ def stream_theta_users_diff(spark, sf_dir):
             holder["sk"].unionByName(part), k=64
         )
         holder["sk"] = merged.localCheckpoint()
-        holder["batches"] += 1
 
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .start()
-    )
-    q.awaitTermination()
-    assert holder["batches"] >= 2, "replay must produce real micro-batches"
+    replay_batches(ev, ingest)
     return _sk.theta_kmv_overlap_from_state(
         holder["sk"], "click", "purchase", k=64
     )
@@ -2390,19 +2343,11 @@ def stream_hll_user_cardinality(spark, sf_dir):
     bit-for-bit, so it gates against the SAME oracle as
     hll_user_cardinality.  State is localCheckpointed per batch —
     ≤ n_groups × 2^p rows, no lineage growth."""
-    import tempfile
-
     from go_streaming_spark.functions import sketch
+    from go_streaming_spark.streaming.runner import replay_batches
 
     ev = Engine(spark, sf_dir=sf_dir).stream("events").select("event_type", "user_id")
-    tmp = tempfile.mkdtemp(prefix="stream_hll_")
-    ev.repartition(4).write.mode("overwrite").parquet(f"{tmp}/ev")
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{tmp}/ev")
-    )
-    holder = {"sk": None, "batches": 0}
+    holder = {"sk": None}
 
     def ingest(batch_df, _bid):
         part = sketch.hll_grouped_build(batch_df, "event_type", "user_id", p=_HLL_P)
@@ -2412,16 +2357,8 @@ def stream_hll_user_cardinality(spark, sf_dir):
             .agg(F.max("max_rank").alias("max_rank"))
         )
         holder["sk"] = merged.localCheckpoint()
-        holder["batches"] += 1
 
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .start()
-    )
-    q.awaitTermination()
-    assert holder["batches"] >= 2, "replay must produce real micro-batches"
+    replay_batches(ev, ingest)
     return sketch.hll_grouped_estimate(holder["sk"], "event_type", p=_HLL_P)
 
 
@@ -2438,9 +2375,8 @@ def stream_hll_user_overlap(spark, sf_dir):
     click and purchase share, right now?").  Max-merge makes the state
     idempotent under replay, so the answer equals the batch
     hll_user_overlap bit-for-bit and gates against the same oracle."""
-    import tempfile
-
     from go_streaming_spark.functions import sketch
+    from go_streaming_spark.streaming.runner import replay_batches
 
     ev = (
         Engine(spark, sf_dir=sf_dir)
@@ -2448,14 +2384,7 @@ def stream_hll_user_overlap(spark, sf_dir):
         .filter(F.col("event_type").isin(["click", "purchase"]))
         .select("event_type", "user_id")
     )
-    tmp = tempfile.mkdtemp(prefix="stream_hll_ov_")
-    ev.repartition(4).write.mode("overwrite").parquet(f"{tmp}/ev")
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{tmp}/ev")
-    )
-    holder = {"sk": None, "batches": 0}
+    holder = {"sk": None}
 
     def ingest(batch_df, _bid):
         part = sketch.hll_grouped_build(batch_df, "event_type", "user_id", p=_HLL_P)
@@ -2465,16 +2394,8 @@ def stream_hll_user_overlap(spark, sf_dir):
             .agg(F.max("max_rank").alias("max_rank"))
         )
         holder["sk"] = merged.localCheckpoint()
-        holder["batches"] += 1
 
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .start()
-    )
-    q.awaitTermination()
-    assert holder["batches"] >= 2, "replay must produce real micro-batches"
+    replay_batches(ev, ingest)
     return sketch.hll_overlap_from_state(
         holder["sk"], "click", "purchase", p=_HLL_P
     )
@@ -2500,26 +2421,33 @@ def stream_dedup_exact_native(spark, sf_dir):
     complement of CorpusState.ingest's anti-join path).  State is one
     narrow row per distinct digest; with an event-time column the same
     plan runs bounded-state via dropDuplicatesWithinWatermark."""
+    import shutil
     import tempfile
 
     from go_streaming_spark.streaming.runner import replay_to_memory
 
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     tmp = tempfile.mkdtemp(prefix="stream_dedup_")
-    docs.repartition(4).write.mode("overwrite").parquet(f"{tmp}/docs")
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{tmp}/docs")
-    )
-    proj = stream.select(
-        F.md5(F.col("text")).alias("content_hash"),
-        F.length("text").cast("long").alias("n_chars_txt"),
-        F.size(F.filter(F.split(F.col("text"), r"\s+"), lambda w: w != ""))
-        .cast("long")
-        .alias("n_tokens"),
-    ).dropDuplicates(["content_hash"])
-    return replay_to_memory(proj, spark, output_mode="append")
+    try:
+        docs.repartition(4).write.mode("overwrite").parquet(f"{tmp}/docs")
+        stream = (
+            spark.readStream.schema(docs.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(f"{tmp}/docs")
+        )
+        proj = stream.select(
+            F.md5(F.col("text")).alias("content_hash"),
+            F.length("text").cast("long").alias("n_chars_txt"),
+            F.size(
+                F.filter(F.split(F.col("text"), r"\s+"), lambda w: w != "")
+            )
+            .cast("long")
+            .alias("n_tokens"),
+        ).dropDuplicates(["content_hash"])
+        # the memory sink holds the rows on the driver: the copy can go
+        return replay_to_memory(proj, spark, output_mode="append")
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 @query(
     "pmi_top_bigrams",
@@ -3207,11 +3135,10 @@ def stream_quality_score_auc(spark, sf_dir):
     final rank statistic asks the question of the held state.  Equals
     the batch quality_score_auc bit-for-bit, so it gates against the
     same oracle (the stream_theta/stream_hll shape)."""
-    import tempfile
-
     from go_streaming_spark.functions.stats import (
         classifier_auc_from_tie_groups,
     )
+    from go_streaming_spark.streaming.runner import replay_batches
 
     docs = _docs(spark, sf_dir)
     scored = text.hashed_linear_score(docs, "doc_id", "text")
@@ -3222,14 +3149,7 @@ def stream_quality_score_auc(spark, sf_dir):
     sy = scored.join(lab, "id").select(
         F.col("margin").cast("long").alias("__s"), F.col("y").alias("__y")
     )
-    tmp = tempfile.mkdtemp(prefix="stream_auc_")
-    sy.repartition(4).write.mode("overwrite").parquet(f"{tmp}/sy")
-    stream = (
-        spark.readStream.schema(sy.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{tmp}/sy")
-    )
-    holder = {"g": None, "batches": 0}
+    holder = {"g": None}
 
     def ingest(batch_df, _bid):
         part = (
@@ -3243,16 +3163,8 @@ def stream_quality_score_auc(spark, sf_dir):
             .agg(F.sum("__c").alias("__c"), F.sum("__p").alias("__p"))
         )
         holder["g"] = merged.localCheckpoint()
-        holder["batches"] += 1
 
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .start()
-    )
-    q.awaitTermination()
-    assert holder["batches"] >= 2, "replay must produce real micro-batches"
+    replay_batches(sy, ingest)
     return classifier_auc_from_tie_groups(holder["g"])
 
 

@@ -1,5 +1,6 @@
 from go_streaming_spark.streaming.runner import (
     StreamMetricsListener,
+    replay_batches,
     replay_to_memory,
 )
 from go_streaming_spark.streaming.stateful import (
@@ -9,6 +10,7 @@ from go_streaming_spark.streaming.stateful import (
 
 __all__ = [
     "replay_to_memory",
+    "replay_batches",
     "StreamMetricsListener",
     "stream_limit",
     "counting_window_stream",

@@ -5,7 +5,13 @@ Reference execution is continuous per-event goroutine pipelines
 micro-batch engine.  ``Trigger.AvailableNow`` replays a finite source to
 completion — the test/verification mode that makes batch and streaming
 runs of the same operator comparable (SURVEY.md §7 "batch-first,
-streaming-compatible").
+streaming-compatible").  Two start modes live here:
+
+- memory sink: :func:`replay_to_memory` runs a streaming frame into a
+  memory table and returns it as a batch frame;
+- batch replay: :func:`replay_batches` copies a batch frame into four
+  files and feeds them, one per trigger, to a ``foreachBatch`` sink
+  through :class:`~go_streaming_spark.plans.builder.ContinuousQuery`.
 
 The reference's temporal trigger has zero lateness: a window fires when the
 first event past its end arrives (`pkg/events/selection_policy.go:178-215`
@@ -15,10 +21,14 @@ watermark itself; ``with_lateness`` widens it.
 
 from __future__ import annotations
 
+import shutil
+import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQueryListener
+
+from go_streaming_spark.plans.builder import ContinuousQuery
 
 
 def with_lateness(
@@ -52,6 +62,40 @@ def replay_to_memory(
     )
     q.awaitTermination()
     return spark.sql(f"SELECT * FROM {name}")
+
+
+def replay_batches(df: DataFrame, sink_fn) -> int:
+    """Replay the batch frame ``df`` as a stream: copy it into four
+    parquet files in a temp dir, read them back one file per trigger and
+    run ``sink_fn(batch_df, batch_id)`` on each micro-batch
+    (:meth:`ContinuousQuery.subscribe_batch`).  Returns the number of
+    micro-batches; raises ``RuntimeError`` when fewer than two ran (the
+    copy landed in one file), since a one-batch replay never carries
+    state across batches.  The temp dir is deleted on every exit."""
+    tmp = tempfile.mkdtemp(prefix="replay_")
+    batches = 0
+
+    def counted(batch_df, batch_id) -> None:
+        nonlocal batches
+        sink_fn(batch_df, batch_id)
+        batches += 1
+
+    try:
+        df.repartition(4).write.parquet(f"{tmp}/data")
+        cq = ContinuousQuery(
+            df.sparkSession.readStream.schema(df.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(f"{tmp}/data")
+        )
+        cq.subscribe_batch(counted)
+        cq.await_done()
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    if batches < 2:
+        raise RuntimeError(
+            f"replay ran {batches} micro-batch(es); expected at least 2"
+        )
+    return batches
 
 
 class StreamMetricsListener(StreamingQueryListener):

@@ -840,27 +840,13 @@ def test_incremental_minhash_full_resolves_in_batch(spark):
 def test_component_drops_match_dedup_components(spark, edges, id_type):
     """Stage 2's driver-side union-find drops exactly the non-canonical
     members graph.dedup_components finds: every id but its component's
-    minimum.  dedup_components sums numeric labels, so the reference runs
-    on each id's rank in Spark's own ordering of the ids."""
-    from pyspark.sql.window import Window
-
+    minimum, in Spark's own ordering of the ids."""
     from go_streaming_spark.functions.graph import dedup_components
 
     pairs = spark.createDataFrame(edges, f"id_a {id_type}, id_b {id_type}")
-    rank = (
-        pairs.select(F.col("id_a").alias("id"))
-        .union(pairs.select("id_b")).distinct()
-        .withColumn("r", F.dense_rank().over(Window.orderBy("id")))
-    )
-    ranked = (
-        pairs.join(rank.withColumnsRenamed({"id": "id_a", "r": "ra"}), "id_a")
-        .join(rank.withColumnsRenamed({"id": "id_b", "r": "rb"}), "id_b")
-        .select(F.col("ra").alias("id_a"), F.col("rb").alias("id_b"))
-    )
     ref = {
-        r.id for r in dedup_components(ranked)
-        .filter("doc_id != cluster_id")
-        .join(rank, F.col("doc_id") == F.col("r")).collect()
+        r.doc_id for r in dedup_components(pairs)
+        .filter("doc_id != cluster_id").collect()
     }
     assert dedup._component_drops(edges) == ref
 

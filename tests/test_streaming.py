@@ -7,6 +7,7 @@ operators Spark lacks natively (stream limit, counting windows).
 from __future__ import annotations
 
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from go_streaming_spark import operators as ops
@@ -16,6 +17,7 @@ from go_streaming_spark.operators.windows import CountingWindow, TemporalWindow
 from go_streaming_spark.sources.catalog import load_stream, load_table
 from go_streaming_spark.streaming import (
     counting_window_stream,
+    replay_batches,
     replay_to_memory,
     stream_limit,
 )
@@ -994,3 +996,42 @@ def test_stream_enrich_rereads_dim_per_batch(spark, tmp_path):
     )
     q.awaitTermination()
     assert sorted(seen) == [(0, "v1"), (1, "v2")], seen
+
+
+@pytest.fixture
+def replay_tmp(tmp_path, monkeypatch):
+    """Python's temp dir moved to ``tmp_path``, where the copy that
+    ``replay_batches`` makes can be seen."""
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    return tmp_path
+
+
+def test_replay_batches_runs_each_file_as_a_micro_batch(spark, replay_tmp):
+    seen = {}
+
+    def sink(batch_df, batch_id):
+        seen[batch_id] = [r.id for r in batch_df.collect()]
+
+    n = replay_batches(spark.range(40), sink)
+    assert n == len(seen) >= 2
+    assert sorted(i for ids in seen.values() for i in ids) == list(range(40))
+    assert list(replay_tmp.iterdir()) == []
+
+
+def _raise(batch_df, batch_id):
+    raise ValueError("sink failed")
+
+
+@pytest.mark.parametrize("rows, sink, error, match", [
+    # an empty frame lands in one (empty) file, so one micro-batch
+    (0, lambda batch_df, batch_id: None, RuntimeError, "ran 1 micro-batch"),
+    (40, _raise, StreamingQueryException, "sink failed"),
+], ids=["single_file", "sink_raises"])
+def test_replay_batches_failure_removes_copy(
+    spark, replay_tmp, rows, sink, error, match
+):
+    with pytest.raises(error, match=match):
+        replay_batches(spark.range(rows), sink)
+    assert list(replay_tmp.iterdir()) == []

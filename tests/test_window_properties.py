@@ -249,16 +249,22 @@ def test_interval_join_matches_model(spark, lefts, rights, bounds):
         st.tuples(st.integers(0, 20), st.integers(0, 20)).filter(lambda e: e[0] != e[1]),
         min_size=1, max_size=25,
     ),
+    as_strings=st.booleans(),
 )
-def test_connected_components_matches_union_find(spark, edges):
+@example(edges=[(9, 10), (10, 2)], as_strings=True)
+def test_connected_components_matches_union_find(spark, edges, as_strings):
     """Min-label propagation == union-find ground truth (includes long
-    paths, cycles, and multi-component graphs)."""
+    paths, cycles, and multi-component graphs), on long ids and on
+    string ids, whose order is not their numbers' ("n10" < "n2")."""
     from go_streaming_spark.functions.graph import connected_components
 
-    df = spark.createDataFrame(edges, "src long, dst long")
+    id_type = "long"
+    if as_strings:
+        edges, id_type = [(f"n{a}", f"n{b}") for a, b in edges], "string"
+    df = spark.createDataFrame(edges, f"src {id_type}, dst {id_type}")
     got = {r.node: r.component for r in connected_components(df).collect()}
 
-    parent: dict[int, int] = {}
+    parent: dict = {}
 
     def find(x):
         parent.setdefault(x, x)
